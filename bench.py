@@ -1309,6 +1309,20 @@ def main() -> None:
     except Exception as e:
         calibration_sec = None
         print(f"calibration probe failed: {e}", file=sys.stderr)
+    # generated-code compiles and driver JIT time per timed rep: a warm
+    # session should compile nothing, so a non-zero count names a query
+    # whose classes miss Spark's codegen cache (BENCH_DETAIL only)
+    jvm = spark.sparkContext._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+
+    def _compile_counters() -> tuple[int, int]:
+        return (
+            codegen.METRIC_COMPILATION_TIME().getCount(),
+            jit.getTotalCompilationTime(),
+        )
+
+    compile_stats: dict[str, dict] = {}
     for name in HEADLINE:
         # per-query fault isolation (the round-6 lesson: one query's
         # loader assumption going stale must cost that query's row, not
@@ -1319,12 +1333,21 @@ def main() -> None:
                 "overwrite"
             ).save()  # warm
             samples = []
+            compiles, jit_s = [], []
             for _ in range(reps):
+                c0, j0 = _compile_counters()
                 t0 = time.time()
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 samples.append(time.time() - t0)
+                c1, j1 = _compile_counters()
+                compiles.append(c1 - c0)
+                jit_s.append(round((j1 - j0) / 1e3, 3))
+            compile_stats[name] = {
+                "codegen_compiles": compiles,
+                "jit_s": jit_s,
+            }
             samples.sort()
             times[name] = round(samples[len(samples) // 2], 3)
             # min + sd alongside the median (r9 verdict item 1: the
@@ -1415,6 +1438,7 @@ def main() -> None:
         # comparator; spread duplicates it per-query but this map is
         # directly diffable against the `queries` medians)
         "queries_min": {n: s["min"] for n, s in spread.items()},
+        "compile": compile_stats,
         "loadavg_1m_post_headline": round(os.getloadavg()[0], 2),
         "drift_note": DRIFT_NOTE,
     }

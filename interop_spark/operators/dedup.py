@@ -548,9 +548,9 @@ def dedup_clusters(
             )
             .localCheckpoint()
         )
-        changed = new_labels.where(F.col("_chg")).limit(1).count()
+        converged = new_labels.where(F.col("_chg")).isEmpty()
         labels = new_labels.drop("_chg")
-        if changed == 0:
+        if converged:
             break
     else:
         raise RuntimeError(
@@ -637,8 +637,7 @@ def dedup_clusters_star(
             .localCheckpoint()
         )
         converged = (
-            small.subtract(edges).limit(1).count() == 0
-            and edges.subtract(small).limit(1).count() == 0
+            small.subtract(edges).isEmpty() and edges.subtract(small).isEmpty()
         )
         edges = small
         if converged:

@@ -128,20 +128,14 @@ def kmeans_fit(
         cents = centroid_update(prev, vec_col=vec_col)
         cur = ivf_assign(df, cents, id_col=id_col, vec_col=vec_col).localCheckpoint()
         n_iters += 1
-        moved = (
+        converged = (
             cur.alias("a")
             .join(prev.alias("b"), col(f"a.{id_col}") == col(f"b.{id_col}"))
-            .where(
-                ~(
-                    col("a.cell").eqNullSafe(col("b.cell"))
-                )
-            )
-            .limit(1)
-            .count()
+            .where(~col("a.cell").eqNullSafe(col("b.cell")))
+            .isEmpty()
         )
         prev = cur
-        if moved == 0:
-            converged = True
+        if converged:
             break
     return cents, prev, n_iters, converged
 

@@ -281,6 +281,8 @@ def query_cosine_udf(
     session executors have no ``interop_spark`` on sys.path."""
     from pyspark.sql.functions import pandas_udf
 
+    if round_digits is None and ppb is None:
+        raise ValueError("query_cosine_udf: pass round_digits or ppb")
     qv = [float(x) for x in query_vec]
     digits = round_digits
     scale_ppb = ppb
@@ -551,9 +553,8 @@ def nearest_centroid_udf(
 
         if not ids:
             if with_sim:
-                return pd.DataFrame(
-                    {"cell": [None] * len(s), "ccos9": [None] * len(s)}
-                )
+                none = [None] * len(s)
+                return pd.DataFrame({"cell": none, "ccos9": none, "vn": none})
             return pd.Series([None] * len(s), dtype="object")
         C = np.asarray(vecs, dtype=np.float64)
         dim = C.shape[1]

@@ -35,6 +35,15 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.parquet.filterPushdown": "true",
     # Timestamps in the fixtures are naive; keep parity with DuckDB.
     "spark.sql.session.timeZone": "UTC",
+    # Generated-code class cache (an LRU, 100 entries by default). One
+    # theta_sketch_setops + ivfpq_search pass compiles 113 distinct
+    # classes and one pass over the 81 headline queries about 1,400
+    # (sf0.001), so at 100 entries a session re-running the same queries
+    # misses on nearly every lookup and recompiles on every pass. 4096
+    # holds the whole headline working set with headroom. Static conf:
+    # like the driver heap below, it only takes effect when the JVM
+    # starts.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # local[N] puts driver + all executor threads + every localCheckpoint
     # block in ONE JVM; Spark's 1 GiB default heap on a 32-core/128 GiB
     # box OOMs under any real working set (round-4 bench died exactly

@@ -904,6 +904,41 @@ def test_semdedup_drops_clones_keeps_tie_lowest_id(spark, sf_dir):
     assert kept2.count() == 100
 
 
+def test_nearest_centroid_udf_empty_centroids_with_sim(spark, sf_dir):
+    """With no centroids, the scoring pass still returns its declared
+    struct<cell, ccos9, vn> (all NULL), so semdedup keeps nothing
+    instead of failing on a pandas_udf schema mismatch."""
+    from interop_spark.io import load
+    from interop_spark.operators.similarity import (
+        nearest_centroid_udf,
+        semdedup,
+    )
+
+    vecs = spark.createDataFrame(
+        [(1, [0.5, 0.25]), (2, None)], "vec_id long, embedding array<float>"
+    )
+    rows = vecs.select(
+        nearest_centroid_udf([], with_sim=True)(F.col("embedding")).alias("a")
+    ).collect()
+    assert [tuple(r.a) for r in rows] == [(None, None, None)] * 2
+
+    e = load(spark, sf_dir, "embeddings").where(F.col("vec_id") < 20)
+    no_cent = e.where(F.lit(False)).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    assert semdedup(e.select("vec_id", "embedding"), no_cent).count() == 0
+
+
+def test_query_cosine_udf_requires_a_mode():
+    """Neither round_digits nor ppb is a call-site error, raised when
+    the UDF is built rather than as a TypeError on an executor."""
+    from interop_spark.operators.similarity import query_cosine_udf
+
+    with pytest.raises(ValueError, match="round_digits or ppb"):
+        query_cosine_udf([1.0, 0.0])
+
+
 def test_ivfpq_residual_self_match_is_exact_at_seed(spark, sf_dir):
     """Residual IVF-PQ: with iters=0 the codebooks ARE the first-k
     residuals, so a seed vector's own residual encodes losslessly and
