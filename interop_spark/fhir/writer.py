@@ -118,9 +118,6 @@ class FhirEncoder:
 
     def to_udf(self, partial_json: bool = False, wrap_array: bool = False,
                path: str = ""):
-        # capture plain locals only: referencing `self` would make
-        # cloudpickle serialize FhirEncoder by module reference, requiring
-        # interop_spark to be importable on every executor
         func = self.f
 
         def _encode(v):

@@ -1,0 +1,77 @@
+"""Numpy kernels shared by the Arrow-vectorized scorers (the
+``pandas_udf`` bodies in ``similarity`` and ``pq``).
+
+Each scorer is pinned bit-identical to the interpreted Spark fold it
+replaces, so every kernel here reproduces that fold's IEEE-754
+operation sequence:
+
+- accumulators run LEFT TO RIGHT over dimensions, vectorized across
+  rows (``acc = acc + X[:, j] * w[j]``) — never ``X @ w``, ``np.dot`` or
+  ``np.sum``, whose blocked or pairwise summation changes the rounding;
+- ``round_spark`` replicates Spark's ``Round``.
+
+The scorers cannot tell a NULL element from NaN: the Arrow-to-numpy
+conversion turns a NULL element into NaN, so a vector with one takes
+the NaN path (NaN dot, norm and similarity) where the fold would
+propagate NULL.
+"""
+
+from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+
+
+def round_spark(a: np.ndarray, digits: int) -> np.ndarray:
+    """Spark's ``round(x, digits)`` elementwise: BigDecimal HALF_UP on
+    the shortest-repr decimal. Fast path ``floor(x*10^d + 0.5)``; values
+    within 1e-5 of a .5 boundary (where the scaled double can disagree
+    with the decimal digits) are re-rounded exactly via
+    ``Decimal(repr(x))`` — Python's ``repr`` and Java's
+    ``Double.toString`` both emit the unique shortest round-trip
+    decimal, so that path IS Spark's rounding. Non-finite values pass
+    through."""
+    q = Decimal(1).scaleb(-digits)
+    sc = 10.0**digits
+    scaled = a * sc
+    fl = np.floor(scaled)
+    out = np.where(np.isfinite(a), (fl + (scaled - fl >= 0.5)) / sc, a)
+    risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
+    if risky.any():
+        flat, src = out.ravel(), a.ravel()
+        for i in np.flatnonzero(risky.ravel()):
+            flat[i] = float(
+                Decimal(repr(float(src[i]))).quantize(q, rounding=ROUND_HALF_UP)
+            )
+    return out
+
+
+def dot_lr(X: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """Dot product of each row of ``X`` with ``w`` (one vector, or a
+    matrix shaped like ``X`` for row-by-row pairs), accumulated left to
+    right — the ``similarity.dot`` fold's sequence."""
+    acc = np.zeros(X.shape[0])
+    for j in range(X.shape[1]):
+        acc = acc + X[:, j] * w[..., j]
+    return acc
+
+
+def sumsq_lr(X: np.ndarray) -> np.ndarray:
+    """Sum of squares of each row of ``X``, left to right — the
+    ``l2_norm``/``l2sq`` folds before their ``sqrt``."""
+    return dot_lr(X, X)
+
+
+def valid_rows(vals: list, dim: int) -> list[int]:
+    """Positions of the non-NULL vectors of length ``dim``: the rows a
+    scorer computes. Every other row keeps its NULL (or default)
+    result."""
+    return [i for i, v in enumerate(vals) if v is not None and len(v) == dim]
+
+
+def stack(vals: list, rows: list[int], dim: int) -> np.ndarray:
+    """The vectors at ``rows`` as a float64 ``(len(rows), dim)`` matrix."""
+    return np.asarray(
+        [np.asarray(vals[i], dtype=np.float64) for i in rows]
+    ).reshape(len(rows), dim)

@@ -263,8 +263,6 @@ def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
     feature_dim = FEATURE_DIM
 
     def _extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # self-contained closure (no interop_spark globals): cloudpickle
-        # ships it by value, so executors need no package install
         import hashlib as _hl
 
         import pandas as pd
@@ -321,53 +319,10 @@ def image_dims(df: DataFrame) -> DataFrame:
     fine (pruned by the projection Spark pushes into the scan)."""
 
     def _dims(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # self-contained closure: cloudpickle ships parse_image_header's
-        # module otherwise; inline the tiny parser instead so executors
-        # need no package install
-        import struct as _st
-
         import pandas as pd
 
-        png_sig = b"\x89PNG\r\n\x1a\n"
-        sof = frozenset(
-            {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-             0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF}
-        )
-
-        def _parse(data):
-            if data is None or len(data) < 10:
-                return None
-            if data[:8] == png_sig:
-                if len(data) >= 24 and data[12:16] == b"IHDR":
-                    w, h = _st.unpack(">II", data[16:24])
-                    return ("png", w, h)
-                return None
-            if data[:6] in (b"GIF87a", b"GIF89a"):
-                w, h = _st.unpack("<HH", data[6:10])
-                return ("gif", w, h)
-            if data[:2] == b"\xff\xd8":
-                i, n = 2, len(data)
-                while i + 4 <= n:
-                    if data[i] != 0xFF:
-                        return None
-                    marker = data[i + 1]
-                    if marker == 0xFF:
-                        i += 1
-                        continue
-                    if marker == 0x01 or 0xD0 <= marker <= 0xD9:
-                        i += 2
-                        continue
-                    (seglen,) = _st.unpack(">H", data[i + 2 : i + 4])
-                    if marker in sof:
-                        if i + 9 > n:
-                            return None
-                        h, w = _st.unpack(">HH", data[i + 5 : i + 9])
-                        return ("jpeg", w, h)
-                    i += 2 + seglen
-            return None
-
         for pdf in batches:
-            parsed = pdf["data"].map(_parse)
+            parsed = pdf["data"].map(parse_image_header)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -483,53 +438,10 @@ def audio_stats(df: DataFrame) -> DataFrame:
     scale/batching posture as ``image_dims``."""
 
     def _stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # self-contained closure (no interop_spark globals — referencing
-        # module-level parse_wav would make cloudpickle ship it BY
-        # REFERENCE and executors without the package on sys.path fail
-        # with ModuleNotFoundError; caught by running driver_sim from a
-        # non-repo cwd). The inline body is the byte-identical logic of
-        # ``parse_wav``; tests pin both against stdlib ``wave`` output.
-        import struct as _st
-
         import pandas as pd
 
-        def _parse(data):
-            if data is None or len(data) < 12:
-                return None
-            if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-                return None
-            i, n = 12, len(data)
-            fmt = None
-            out = None
-            while i + 8 <= n:
-                cid = data[i : i + 4]
-                (clen,) = _st.unpack("<I", data[i + 4 : i + 8])
-                body = data[i + 8 : i + 8 + clen]
-                if cid == b"fmt " and clen >= 16:
-                    tag, ch, sr = _st.unpack("<HHI", body[:8])
-                    (bits,) = _st.unpack("<H", body[14:16])
-                    fmt = (tag, ch, sr, bits)
-                elif cid == b"data" and fmt is not None:
-                    tag, ch, sr, bits = fmt
-                    if tag != 1 or ch == 0 or bits not in (8, 16):
-                        return (ch, sr, bits, None, None, None)
-                    if bits == 16:
-                        usable = len(body) - (len(body) % (2 * ch))
-                        vals = _st.unpack(f"<{usable // 2}h", body[:usable])
-                    else:
-                        usable = len(body) - (len(body) % ch)
-                        vals = [b - 128 for b in body[:usable]]
-                    n_frames = len(vals) // ch if ch else 0
-                    sum_sq = sum(v * v for v in vals)
-                    peak = max((abs(v) for v in vals), default=0)
-                    out = (ch, sr, bits, n_frames, sum_sq, peak)
-                i += 8 + clen + (clen & 1)
-            if out is not None:
-                return out
-            return fmt + (None, None, None) if fmt else None
-
         for pdf in batches:
-            parsed = pdf["data"].map(_parse)
+            parsed = pdf["data"].map(parse_wav)
             cols = {"media_id": pdf["media_id"]}
             for j, name in enumerate(
                 ["channels", "sample_rate", "bits", "n_frames", "sum_sq", "peak"]
@@ -548,9 +460,7 @@ def parse_mp4(data: bytes | None):
     encodings: size==1 (64-bit largesize follows the type, standard for
     >4 GiB media) and size==0 (box extends to the end of the enclosing
     scope). Returns ``(brand, mvhd_version, timescale, duration)`` or
-    None. Module-level twin of the closure inlined in ``video_meta``
-    (agreement pinned over a generated box corpus in
-    test_multimodal_decode.py)."""
+    None."""
     import struct as _st
 
     if data is None or len(data) < 16 or data[4:8] != b"ftyp":
@@ -623,69 +533,10 @@ def video_meta(df: DataFrame) -> DataFrame:
     Unrecognized payloads yield NULLs, never task failures."""
 
     def _meta(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # self-contained closure (see image_dims): inline the parser so
-        # executors need no package install
-        import struct as _st
-
         import pandas as pd
 
-        def _box(buf, i, end):
-            # identical to parse_mp4's helper (agreement pinned in
-            # test_multimodal_decode.py over a generated box corpus)
-            (size,) = _st.unpack(">I", buf[i : i + 4])
-            hdr = 8
-            if size == 1:
-                if i + 16 > end:
-                    return None
-                (size,) = _st.unpack(">Q", buf[i + 8 : i + 16])
-                hdr = 16
-            elif size == 0:
-                size = end - i
-            if size < hdr:
-                return None
-            return (i + hdr, min(i + size, end))
-
-        def _parse(data):
-            if data is None or len(data) < 16 or data[4:8] != b"ftyp":
-                return None
-            brand = data[8:12].decode("ascii", "replace")
-            i, n = 0, len(data)
-            while i + 8 <= n:
-                typ = data[i + 4 : i + 8]
-                b = _box(data, i, n)
-                if b is None:
-                    return None
-                p, box_end = b
-                if typ == b"moov":
-                    j, end = p, box_end
-                    while j + 8 <= end:
-                        t2 = data[j + 4 : j + 8]
-                        b2 = _box(data, j, end)
-                        if b2 is None:
-                            return None
-                        p2, j_end = b2
-                        if t2 == b"mvhd":
-                            v = data[p2]
-                            if v == 0 and p2 + 20 <= end:
-                                ts, dur = _st.unpack(
-                                    ">II", data[p2 + 12 : p2 + 20]
-                                )
-                                return (brand, 0, ts, dur)
-                            if v == 1 and p2 + 32 <= end:
-                                (ts,) = _st.unpack(
-                                    ">I", data[p2 + 20 : p2 + 24]
-                                )
-                                (dur,) = _st.unpack(
-                                    ">Q", data[p2 + 24 : p2 + 32]
-                                )
-                                return (brand, 1, ts, dur)
-                            return None
-                        j = j_end
-                i = box_end
-            return None
-
         for pdf in batches:
-            parsed = pdf["data"].map(_parse)
+            parsed = pdf["data"].map(parse_mp4)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

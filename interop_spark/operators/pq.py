@@ -36,6 +36,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from interop_spark.operators.kernels import (
+    round_spark,
+    stack,
+    sumsq_lr,
+    valid_rows,
+)
 from interop_spark.operators.similarity import as_double
 
 
@@ -179,84 +185,40 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
     Bit-exactness contract (pinned by
     ``test_pq_codes_udf_bitexact_vs_fold``):
 
-    - the squared-L2 accumulation runs LEFT-TO-RIGHT over dimensions
-      (``acc += (x_j - c_j)^2`` per j, vectorized across rows) — the
-      identical IEEE-754 double operation sequence as the ``l2sq``
-      fold, so the unrounded distances are bit-identical;
-    - round-9 replicates Spark's ``Round`` (BigDecimal HALF_UP on the
-      shortest-repr decimal): a fast ``floor(x*1e9+0.5)`` path, with
-      values within 1e-5 of a .5 boundary (where the scaled double
-      could disagree with the decimal digits) re-rounded exactly via
-      ``Decimal(repr(x))`` — Python's ``repr`` and Java's
-      ``Double.toString`` both emit the unique shortest round-trip
-      decimal, so the exact path IS Spark's rounding;
+    - the squared-L2 distance is ``kernels.sumsq_lr`` of the
+      difference — the identical IEEE-754 double operation sequence as
+      the ``l2sq`` fold, so the unrounded distances are bit-identical;
+    - round-9 is ``kernels.round_spark`` (Spark's ``Round``);
     - ``argmin`` takes the FIRST minimum — the fold's strict ``<`` keeps
       the lowest code id on rounded ties;
     - NULL/NaN distances never win (fold: NULL/NaN comparisons are
       false): NaNs are masked to +inf, an all-invalid row yields the
       fold's init code 0;
     - a NULL or wrong-dimension vector yields NULL codes (callers mask
-      the same way ``pq_encode`` always has).
-
-    The closure is SELF-CONTAINED (imports + helpers inside) so
-    cloudpickle ships it by value — executors under a plain session
-    have no ``interop_spark`` on sys.path."""
+      the same way ``pq_encode`` always has)."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    cbs = [[[float(x) for x in cw] for cw in cb_m] for cb_m in codebooks]
-    sub_dim = len(cbs[0][0])
+    cbs = [np.asarray(cb_m, dtype=np.float64) for cb_m in codebooks]
+    sub_dim = cbs[0].shape[1]
     dim = sub_dim * len(cbs)
 
     @pandas_udf("array<int>")
     def _codes(s):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q9 = Decimal("1E-9")
-
-        def round9(a):
-            scaled = a * 1e9
-            fl = np.floor(scaled)
-            out = np.where(np.isfinite(a), (fl + (scaled - fl >= 0.5)) / 1e9, a)
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q9, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
 
         vals = list(s)
         out = [None] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
-        if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
-            codes = np.empty((len(good), len(cbs)), dtype=np.int64)
-            for m, cb_m in enumerate(cbs):
-                Xm = X[:, m * sub_dim : (m + 1) * sub_dim]
-                D = np.empty((len(cb_m), Xm.shape[0]))
-                for c, cw in enumerate(cb_m):
-                    acc = np.zeros(Xm.shape[0])
-                    for j in range(sub_dim):
-                        d = Xm[:, j] - cw[j]
-                        acc = acc + d * d
-                    D[c] = acc
-                D = round9(D)
-                D[np.isnan(D)] = np.inf
-                codes[:, m] = np.argmin(D, axis=0)
-            codes = codes.astype(np.int32)
-            for row_i, i in enumerate(good):
-                out[i] = codes[row_i]
+        rows = valid_rows(vals, dim)
+        X = stack(vals, rows, dim)
+        codes = np.empty((len(rows), len(cbs)), dtype=np.int32)
+        for m, cb_m in enumerate(cbs):
+            Xm = X[:, m * sub_dim : (m + 1) * sub_dim]
+            D = round_spark(np.stack([sumsq_lr(Xm - cw) for cw in cb_m]), 9)
+            D[np.isnan(D)] = np.inf
+            codes[:, m] = np.argmin(D, axis=0)
+        for row_i, i in enumerate(rows):
+            out[i] = codes[row_i]
         return pd.Series(out)
 
     return _codes

@@ -25,6 +25,14 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from interop_spark.operators.kernels import (
+    dot_lr,
+    round_spark,
+    stack,
+    sumsq_lr,
+    valid_rows,
+)
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -266,87 +274,41 @@ def query_cosine_udf(
     (r20 optimization round, guide §4).
 
     Bit-exactness (pinned by ``test_query_cosine_udf_bitexact``): dot
-    and both norms accumulate LEFT-TO-RIGHT (the ``dot``/``l2_norm``
-    IEEE-754 sequence; the query norm is computed once, exactly like a
-    factored ``_nq`` column), denominator ``max(vnorm*qnorm, 1e-12)``,
-    and round-N replicates Spark's ``Round`` (BigDecimal HALF_UP on the
-    shortest-repr decimal: fast ``floor(x*scale+0.5)`` path, exact
-    ``Decimal(repr(x))`` re-round within 1e-5 of a .5 boundary —
-    Python ``repr`` and Java ``Double.toString`` both emit the unique
-    shortest round-trip decimal). NULL / wrong-dimension vectors yield
-    NULL (the fold's NULL propagation). Marked nondeterministic so a
-    filter on the score never duplicates the evaluation (guide §4.4).
-
-    The closure is SELF-CONTAINED (imports + helpers inside) — plain-
-    session executors have no ``interop_spark`` on sys.path."""
+    and both norms are the ``kernels`` left-to-right accumulators (the
+    ``dot``/``l2_norm`` IEEE-754 sequence; the query norm is computed
+    once, exactly like a factored ``_nq`` column), denominator
+    ``max(vnorm*qnorm, 1e-12)``, and round-N is
+    ``kernels.round_spark``. NULL / wrong-dimension vectors yield NULL
+    (the fold's NULL propagation). Marked nondeterministic so a filter
+    on the score never duplicates the evaluation (guide §4.4)."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     if round_digits is None and ppb is None:
         raise ValueError("query_cosine_udf: pass round_digits or ppb")
-    qv = [float(x) for x in query_vec]
-    digits = round_digits
-    scale_ppb = ppb
+    Q = np.asarray(query_vec, dtype=np.float64)
+    dim = Q.shape[0]
+    nq = np.sqrt(sumsq_lr(Q[None, :]))[0]
     out_type = "bigint" if ppb is not None else "double"
 
     def _score(s):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
 
-        def round_spark(a, d):
-            q = Decimal(1).scaleb(-d)
-            sc = 10.0 ** d
-            scaled = a * sc
-            fl = np.floor(scaled)
-            out = np.where(
-                np.isfinite(a), (fl + (scaled - fl >= 0.5)) / sc, a
-            )
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
-
-        Q = np.asarray(qv, dtype=np.float64)
-        dim = Q.shape[0]
-        nq = 0.0
-        for j in range(dim):
-            nq = nq + Q[j] * Q[j]
-        nq = np.sqrt(nq)
         vals = list(s)
         out = [None] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
-        if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
-            vn = np.zeros(X.shape[0])
-            for j in range(dim):
-                vn = vn + X[:, j] * X[:, j]
-            vn = np.sqrt(vn)
-            acc = np.zeros(X.shape[0])
-            for j in range(dim):
-                acc = acc + X[:, j] * Q[j]
-            c = acc / np.maximum(vn * nq, 1e-12)
-            if scale_ppb is not None:
-                scored = np.floor(c * float(scale_ppb))
-                for row_i, i in enumerate(good):
-                    x = scored[row_i]
-                    out[i] = int(x) if np.isfinite(x) else None
-            else:
-                scored = round_spark(c, digits)
-                for row_i, i in enumerate(good):
-                    x = scored[row_i]
-                    out[i] = None if np.isnan(x) else float(x)
+        rows = valid_rows(vals, dim)
+        X = stack(vals, rows, dim)
+        c = dot_lr(X, Q) / np.maximum(np.sqrt(sumsq_lr(X)) * nq, 1e-12)
+        if ppb is not None:
+            scored = np.floor(c * float(ppb))
+            for row_i, i in enumerate(rows):
+                x = scored[row_i]
+                out[i] = int(x) if np.isfinite(x) else None
+        else:
+            scored = round_spark(c, round_digits)
+            for row_i, i in enumerate(rows):
+                x = scored[row_i]
+                out[i] = None if np.isnan(x) else float(x)
         return pd.Series(out, dtype="object")
 
     return pandas_udf(_score, out_type).asNondeterministic()
@@ -355,40 +317,19 @@ def query_cosine_udf(
 def pair_cosine_udf(round_digits: int):
     """Arrow-vectorized twin of ``round(cosine_sim(a, b), d)`` for two
     vector COLUMNS (the near-dup pair-verification scorer; r20, guide
-    §4). Same left-to-right accumulation and Spark-Round replication as
+    §4). Same ``kernels`` accumulators and Spark-Round replication as
     ``query_cosine_udf`` (pinned by ``test_pair_cosine_udf_bitexact``);
     rows are grouped by their common dimension so mixed-length inputs
-    still score. Either side NULL or a length mismatch → NULL (the
-    fold's ``zip_with`` padding makes the dot NULL). Marked
-    nondeterministic (guide §4.4: a threshold filter on the score must
-    not duplicate the evaluation)."""
+    still score (an empty pair scores the fold's 0.0 / 1e-12 = 0.0).
+    Either side NULL or a length mismatch → NULL (the fold's
+    ``zip_with`` padding makes the dot NULL). Marked nondeterministic
+    (guide §4.4: a threshold filter on the score must not duplicate the
+    evaluation)."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    digits = round_digits
-
     def _score(sa, sb):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def round_spark(a, d):
-            q = Decimal(1).scaleb(-d)
-            sc = 10.0 ** d
-            scaled = a * sc
-            fl = np.floor(scaled)
-            out = np.where(
-                np.isfinite(a), (fl + (scaled - fl >= 0.5)) / sc, a
-            )
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
 
         la, lb = list(sa), list(sb)
         out = [None] * len(la)
@@ -399,31 +340,10 @@ def pair_cosine_udf(round_digits: int):
                 continue
             groups.setdefault(len(a), []).append(i)
         for d0, grp in groups.items():
-            if d0 == 0:
-                # dot=0.0, norms=0.0 → 0.0 / 1e-12 = 0.0 (the fold's
-                # empty-array value)
-                for i in grp:
-                    out[i] = 0.0
-                continue
-            A = np.asarray(
-                [np.asarray(la[i], dtype=np.float64) for i in grp]
-            )
-            B = np.asarray(
-                [np.asarray(lb[i], dtype=np.float64) for i in grp]
-            )
-            na = np.zeros(A.shape[0])
-            for j in range(d0):
-                na = na + A[:, j] * A[:, j]
-            na = np.sqrt(na)
-            nb = np.zeros(A.shape[0])
-            for j in range(d0):
-                nb = nb + B[:, j] * B[:, j]
-            nb = np.sqrt(nb)
-            acc = np.zeros(A.shape[0])
-            for j in range(d0):
-                acc = acc + A[:, j] * B[:, j]
-            c = acc / np.maximum(na * nb, 1e-12)
-            scored = round_spark(c, digits)
+            A, B = stack(la, grp, d0), stack(lb, grp, d0)
+            na, nb = np.sqrt(sumsq_lr(A)), np.sqrt(sumsq_lr(B))
+            c = dot_lr(A, B) / np.maximum(na * nb, 1e-12)
+            scored = round_spark(c, round_digits)
             for row_i, i in enumerate(grp):
                 x = scored[row_i]
                 out[i] = None if np.isnan(x) else float(x)
@@ -438,46 +358,33 @@ def lsh_bucket_udf(planes: list[list[float]]):
     driver-side hyperplane list (``_hyperplane(i, dim)`` per plane).
 
     Bit-exactness (pinned by ``test_lsh_bucket_udf_bitexact_vs_fold``):
-    each dot accumulates left-to-right; the sign test needs no rounding
+    each dot is ``kernels.dot_lr``; the sign test needs no rounding
     replication (``>= 0`` on a bit-identical double). A NULL,
     wrong-dimension or null-element vector buckets to 0 — the fold's
     NULL dot makes every ``when(dot >= 0, bit)`` take the 0 branch. (A
     real-NaN ELEMENT would differ: Spark orders NaN above 0 so the fold
-    would set every bit, while Arrow cannot distinguish an actual NaN
-    from a null element and takes the 0 branch — the fixtures and every
-    operator upstream produce neither.)"""
+    would set every bit, while the scorer takes the 0 branch — the
+    fixtures and every operator upstream produce neither.)"""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    P = [[float(x) for x in p] for p in planes]
+    P = np.asarray(planes, dtype=np.float64)
+    dim = P.shape[1]
 
     @pandas_udf("int")
     def _bucket(s):
-        import numpy as np
         import pandas as pd
 
-        A = np.asarray(P, dtype=np.float64)
-        dim = A.shape[1]
         vals = list(s)
         out = [0] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
-        if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
-            )
-            bucket = np.zeros(X.shape[0], dtype=np.int64)
-            for p in range(A.shape[0]):
-                acc = np.zeros(X.shape[0])
-                for j in range(dim):
-                    acc = acc + X[:, j] * A[p, j]
-                bucket = bucket + np.where(
-                    ~np.isnan(acc) & (acc >= 0), 1 << p, 0
-                )
-            for row_i, i in enumerate(good):
-                out[i] = int(bucket[row_i])
+        rows = valid_rows(vals, dim)
+        X = stack(vals, rows, dim)
+        bucket = np.zeros(len(rows), dtype=np.int64)
+        for p in range(P.shape[0]):
+            acc = dot_lr(X, P[p])
+            bucket = bucket + np.where(~np.isnan(acc) & (acc >= 0), 1 << p, 0)
+        for row_i, i in enumerate(rows):
+            out[i] = int(bucket[row_i])
         return pd.Series(out, dtype="int32")
 
     return _bucket
@@ -497,12 +404,11 @@ def nearest_centroid_udf(
     Bit-exactness contract (pinned by
     ``test_nearest_centroid_udf_bitexact_vs_fold``):
 
-    - dot product and both norms accumulate LEFT-TO-RIGHT over
-      dimensions (identical IEEE-754 sequence to ``dot``/``l2_norm``),
+    - dot product and both norms are the ``kernels`` left-to-right
+      accumulators (identical IEEE-754 sequence to ``dot``/``l2_norm``),
       centroid norms precomputed once exactly as the fold's
       ``centroid_array`` does;
-    - the similarity is round-9 (Spark ``Round`` HALF_UP semantics —
-      fast path + exact ``Decimal(repr(x))`` at .5 boundaries) before
+    - the similarity is ``kernels.round_spark`` round-9 before
       comparison;
     - ties go to the LARGEST centroid id (the fold's ``>=`` over the
       id-ascending array); NaN similarities map to +inf BEFORE the
@@ -518,103 +424,57 @@ def nearest_centroid_udf(
     ``round(cosine_sim(v, c_cell), 9)`` (the argmax compares the
     already-rounded values) and ``vn`` is bit-identical to the
     ``l2_norm`` fold (same accumulation + sqrt), so downstream pair
-    scoring via ``cosine_sim_given_norms`` stays exact.
-
-    Closure is SELF-CONTAINED (imports inside) — plain-session
-    executors have no ``interop_spark`` on sys.path."""
+    scoring via ``cosine_sim_given_norms`` stays exact."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    ids = [int(k) for k, _ in cents]
-    vecs = [[float(x) for x in v] for _, v in cents]
+    karr = np.asarray([int(k) for k, _ in cents], dtype=np.int64)
+    C = np.asarray([v for _, v in cents], dtype=np.float64)
+    # with no centroids every row is invalid (dim -1) → all NULL cells
+    dim = C.shape[1] if len(cents) else -1
+    cn = np.sqrt(sumsq_lr(C)) if len(cents) else None
 
     def _cell(s):
-        import numpy as np
         import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
 
-        q9 = Decimal("1E-9")
-
-        def round9(a):
-            scaled = a * 1e9
-            fl = np.floor(scaled)
-            out = np.where(
-                np.isfinite(a), (fl + (scaled - fl >= 0.5)) / 1e9, a
-            )
-            risky = np.isfinite(a) & (np.abs(scaled - fl - 0.5) < 1e-5)
-            if risky.any():
-                flat, src = out.ravel(), a.ravel()
-                for i in np.flatnonzero(risky.ravel()):
-                    flat[i] = float(
-                        Decimal(repr(float(src[i]))).quantize(
-                            q9, rounding=ROUND_HALF_UP
-                        )
-                    )
-            return out
-
-        if not ids:
-            if with_sim:
-                none = [None] * len(s)
-                return pd.DataFrame({"cell": none, "ccos9": none, "vn": none})
-            return pd.Series([None] * len(s), dtype="object")
-        C = np.asarray(vecs, dtype=np.float64)
-        dim = C.shape[1]
-        # centroid norms: left-to-right acc + x*x, then sqrt — the
-        # exact centroid_array expression sequence
-        cn = np.zeros(C.shape[0])
-        for j in range(dim):
-            cn = cn + C[:, j] * C[:, j]
-        cn = np.sqrt(cn)
-        karr = np.asarray(ids, dtype=np.int64)
         vals = list(s)
         out = [None] * len(vals)
-        good = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == dim
-        ]
-        if good:
-            X = np.asarray(
-                [np.asarray(vals[i], dtype=np.float64) for i in good]
+        rows = valid_rows(vals, dim)
+        if rows:
+            X = stack(vals, rows, dim)
+            vn = np.sqrt(sumsq_lr(X))
+            Sr = round_spark(
+                np.stack(
+                    [
+                        dot_lr(X, C[c]) / np.maximum(vn * cn[c], 1e-12)
+                        for c in range(C.shape[0])
+                    ]
+                ),
+                9,
             )
-            vn = np.zeros(X.shape[0])
-            for j in range(dim):
-                vn = vn + X[:, j] * X[:, j]
-            vn = np.sqrt(vn)
-            S = np.empty((C.shape[0], X.shape[0]))
-            for c in range(C.shape[0]):
-                acc = np.zeros(X.shape[0])
-                for j in range(dim):
-                    acc = acc + X[:, j] * C[c, j]
-                S[c] = acc / np.maximum(vn * cn[c], 1e-12)
-            Sr = round9(S)
             S2 = Sr.copy()
             S2[np.isnan(S2)] = np.inf
             # ties (and NaN→inf runs) to the LARGEST id: last argmax
-            rev = S2[::-1]
-            best = (S2.shape[0] - 1) - np.argmax(rev, axis=0)
+            best = (S2.shape[0] - 1) - np.argmax(S2[::-1], axis=0)
             cells = karr[best]
             if with_sim:
                 # the winner's rounded sim may legitimately be NaN (a
                 # NaN-element vector) — carry the NaN double through,
                 # exactly like the fold's recomputed round9 would
                 wsim = Sr[best, np.arange(Sr.shape[1])]
-                for row_i, i in enumerate(good):
+                for row_i, i in enumerate(rows):
                     out[i] = (
                         int(cells[row_i]),
                         float(wsim[row_i]),
                         float(vn[row_i]),
                     )
             else:
-                for row_i, i in enumerate(good):
+                for row_i, i in enumerate(rows):
                     out[i] = int(cells[row_i])
         if with_sim:
             return pd.DataFrame(
-                [
-                    {"cell": None, "ccos9": None, "vn": None}
-                    if t is None
-                    else {"cell": t[0], "ccos9": t[1], "vn": t[2]}
-                    for t in out
-                ]
+                [t or (None, None, None) for t in out],
+                columns=["cell", "ccos9", "vn"],
             )
         return pd.Series(out, dtype="object")
 
@@ -735,7 +595,11 @@ def ivf_assign(
     (``nearest_centroid_udf``; r20 — the r19 shape broadcast a one-row
     centroid array and paid an interpreted per-row argmax fold, the IVF
     family's dominant executor cost). Still zero Exchange on the vector
-    side, and the per-row work is numpy over whole Arrow batches."""
+    side, and the per-row work is numpy over whole Arrow batches.
+
+    Construction is not lazy: it fires one bounded
+    ``centroids.collect()`` job (C rows) and freezes that centroid
+    snapshot into the returned plan."""
     cents = sorted(
         (
             (int(r[0]), [float(x) for x in r[1]])
@@ -860,7 +724,11 @@ def semdedup(
     within-cell pair join — quadratic IN THE CELL, the algorithm's real
     shape; cluster count must grow with the corpus so cells stay
     bounded (the paper uses ~100k clusters at web scale). The pair join
-    is an equi-join on the cell id, AQE-splittable."""
+    is an equi-join on the cell id, AQE-splittable.
+
+    Construction is not lazy: it fires one bounded
+    ``centroids.collect()`` job (C rows), whose snapshot the scoring
+    UDF embeds, before the ``localCheckpoint`` of the scored rows."""
     # ONE Arrow pass scores cell + rounded centroid cosine per row (r20,
     # guide §4): the r19 shape paid the interpreted argmax fold, a
     # broadcast centroid re-join, and a second interpreted cosine fold.

@@ -77,25 +77,10 @@ DEFAULT_BPE_MERGES: list[tuple[str, str]] = [
 ]
 
 
-def bpe_word_pieces(
-    word: str, merges: list[tuple[str, str]] | None = None
-) -> list[str]:
-    """Encode ONE word with the greedy BPE merge loop: repeatedly find
-    the lowest-rank merge whose pair is adjacent in the current piece
-    sequence and fuse its LEFTMOST occurrence, until no merge applies.
-    (Fusing one occurrence per step is equivalent to the paper's
-    fuse-all-occurrences step for a consistent merge table — a fused
-    symbol can only participate in LATER-rank merges, so the minimum
-    stays on the same pair while occurrences remain; pinned against a
-    fuse-all reference in test_bpe_encode.py.) No end-of-word marker —
-    the toy table carries none."""
-    ranks = {
-        pair: i
-        for i, pair in enumerate(
-            merges if merges is not None else DEFAULT_BPE_MERGES
-        )
-    }
-    pieces = list(word)
+def _bpe_merge(pieces: list[str], ranks: dict) -> list[str]:
+    """The greedy BPE merge loop over ``pieces`` (modified in place):
+    repeatedly fuse the LEFTMOST occurrence of the lowest-rank adjacent
+    pair in ``ranks`` (``(left, right) -> rank``) until none applies."""
     while len(pieces) > 1:
         best, bi = None, -1
         for i in range(len(pieces) - 1):
@@ -108,6 +93,22 @@ def bpe_word_pieces(
     return pieces
 
 
+def bpe_word_pieces(
+    word: str, merges: list[tuple[str, str]] | None = None
+) -> list[str]:
+    """Encode ONE word with the greedy BPE merge loop: repeatedly find
+    the lowest-rank merge whose pair is adjacent in the current piece
+    sequence and fuse its LEFTMOST occurrence, until no merge applies.
+    (Fusing one occurrence per step is equivalent to the paper's
+    fuse-all-occurrences step for a consistent merge table — a fused
+    symbol can only participate in LATER-rank merges, so the minimum
+    stays on the same pair while occurrences remain; pinned against a
+    fuse-all reference in test_bpe_encode.py.) No end-of-word marker —
+    the toy table carries none."""
+    table = merges if merges is not None else DEFAULT_BPE_MERGES
+    return _bpe_merge(list(word), {pair: i for i, pair in enumerate(table)})
+
+
 def bpe_pieces_udf(merges: list[tuple[str, str]] | None = None):
     """Arrow-batched scalar pandas UDF: word → space-joined BPE pieces.
 
@@ -116,8 +117,7 @@ def bpe_pieces_udf(merges: list[tuple[str, str]] | None = None):
     equi-join the (word → pieces) dictionary back onto the exploded
     tokens. At corpus scale the dictionary is orders of magnitude
     smaller than the token stream, so the only Python in the pipeline
-    touches the small side. The closure is self-contained (merge table
-    captured by value; no interop_spark imports on executors)."""
+    touches the small side."""
     table = list(merges if merges is not None else DEFAULT_BPE_MERGES)
 
     from pyspark.sql.functions import pandas_udf
@@ -125,23 +125,9 @@ def bpe_pieces_udf(merges: list[tuple[str, str]] | None = None):
     @pandas_udf("string")
     def _enc(words):  # pd.Series -> pd.Series
         ranks = {pair: i for i, pair in enumerate(table)}
-
-        def enc(w):
-            if w is None:
-                return None
-            pieces = list(w)
-            while len(pieces) > 1:
-                best, bi = None, -1
-                for i in range(len(pieces) - 1):
-                    r = ranks.get((pieces[i], pieces[i + 1]))
-                    if r is not None and (best is None or r < best):
-                        best, bi = r, i
-                if best is None:
-                    break
-                pieces[bi : bi + 2] = [pieces[bi] + pieces[bi + 1]]
-            return " ".join(pieces)
-
-        return words.map(enc)
+        return words.map(
+            lambda w: None if w is None else " ".join(_bpe_merge(list(w), ranks))
+        )
 
     return _enc
 

@@ -105,7 +105,6 @@ def sessionize_stream(
 
     This is the streaming twin of the batch ``sessionize`` query (lag +
     cumulative flag-sum); state per user is one open session (bounded).
-    The closure is self-contained so executors need no package install.
     """
     import pandas as pd  # noqa: F401 (documents the worker dependency)
 

@@ -250,10 +250,10 @@ def test_parse_mp4_special_size_encodings():
 
 
 def test_video_meta_closure_agrees_with_parse_mp4(spark):
-    """The inline closure in video_meta must agree with the
-    module-level parse_mp4 on every corpus entry, including the
-    special size encodings (guards against a fix landing in only one
-    of the two copies)."""
+    """video_meta, run through mapInPandas on the workers, must agree
+    with parse_mp4 called on the driver for every corpus entry,
+    including the special size encodings — the only test that runs
+    the operator over the special-size box corpus."""
     from interop_spark.operators.multimodal import parse_mp4, video_meta
 
     corpus = _mp4_special_corpus()
