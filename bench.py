@@ -139,68 +139,6 @@ HEADLINE = [
     "stratified_reservoir",
 ]
 
-# Cross-round drift accounting (r14 verdict item 2), written into
-# BENCH_DETAIL so the note travels with the numbers. The r15 re-bench
-# started from a genuinely idle machine (1-min loadavg 0.25; the
-# recorded loadavg_1m is sampled AFTER the headline loop, so it
-# includes the bench's own 32-thread load — interpret the field as
-# "machine state the run ENDED at", not ambient quiet).
-DRIFT_NOTE = (
-    "r16 root-cause of the two r15 watch items (both MEASURED, not "
-    "re-baselined). (1) corpus_clean headline creep 2.29->2.62s: "
-    "MECHANISM = it is the FIRST headline query, so its 5 timed reps "
-    "absorb the whole JVM's JIT warm-up; a quiet 9-rep run descends "
-    "3.1->2.2s with steady state 2.2-2.4s == r13's 2.29. Fix: one "
-    "untimed JVM warm-up execution before the headline loop (below). "
-    "(2) corpus_clean probe band 3.2-3.4 -> 3.5-4.5: MECHANISM = the "
-    "10x leg's within-session spread (6.5-13.3s across 8 same-code "
-    "samples; GC/checkpoint churn) makes a 2-sample min a noisy "
-    "estimator; steady state ~6.5s/2.1s ~= 3.1x, IN band. Fix: 4 "
-    "samples on corpus_clean's 10x leg (_PROBE_REPS). Accumulated-"
-    "state hypothesis REJECTED by experiment: ratio after running the "
-    "five r15b probes first = 3.75 vs 3.96 fresh. (3) simhash probe "
-    "7.5x vs the 4.6x decomposition floor: the decomposition was "
-    "rerun per-stage — the candidate JOIN adds ~1s on BOTH legs "
-    "(guard working as designed); ~90% of the 10x leg is the md5 "
-    "signature stage, which is linear in TOKEN BYTES, and the "
-    "retokened fixture carries 14.9x the bytes at the '10x' leg "
-    "(rN_-prefixed tokens inflate short tokens ~1.66x): measured "
-    "signature-stage ratio 6.5x at 14.9x bytes = 0.44x per byte, "
-    "decisively sublinear. The probe now publishes bytes_x1/bytes_x10/"
-    "ratio_per_byte for both simhash probes so the band is read "
-    "against byte volume, not replica count. Read the band as "
-    "ratio_per_byte <= ~0.6 (quiet r16 runs measure ~0.5-0.6); the "
-    "raw ratio_10x lands ~7-8 at this fixture's 14.9x bytes and is "
-    "NOT the sublinearity signal. r17: fhir_ingest_corpus's band is "
-    "likewise per-byte now — the artifact stamps fhir_corpus_bytes "
-    "(the on-disk JSON volume at the stamped corpus_version); read "
-    "the row as sec/MB across rounds (r12's 1.46s was recorded "
-    "against the smaller v10 corpus; the v16 corpus carries ~2.5x "
-    "the JSON per file, so the raw-seconds trend is fixture growth, "
-    "not reader creep — flat sec/byte is the invariant). r17 host-"
-    "variance measurement: two SAME-CODE headline captures in one "
-    "session read 48.5s (loadavg_pre 0.91) and 57.1s (loadavg_pre "
-    "0.07), a third full run 54.5s (loadavg_pre 0.90; the committed "
-    "artifact — it carries the round's full 30-probe set incl. the "
-    "linkage guard pair) — start loadavg does NOT predict run "
-    "quality on this shared host; the quiet-wait gates the "
-    "predictable kind of contention (a loud start), the residual "
-    "10-20% spread is exogenous. Read cross-round totals against the committed "
-    "capture's per-query `spread` (min/sd), and treat any UNIFORM "
-    "all-query multiplier vs a prior round as environment, not "
-    "engine (the r16 quiet capture's 36.1s total was recorded on a "
-    "visibly faster machine-state; every r17/r16 per-query ratio is "
-    "a near-constant multiple of it). r18: the uniform-multiplier "
-    "argument is now MEASURED, not inferred — the artifact stamps "
-    "calibration_sec (fixed in-memory hash+agg+sort, zero repo/"
-    "fixture dependence): read cross-round per-query ratios against "
-    "the calibration ratio first. fhir_notebook_e2e (the r17 2.23x "
-    "watch item): fixture generation is pre-run untimed "
-    "(fhir_fixture_gen_sec) and BENCH_DETAIL carries per-leg stamps "
-    "(fhir_notebook_e2e_legs: fixture/ingest/sink/rejoin/writer) so "
-    "the next drift names a leg."
-)
-
 
 def _scaled_documents(spark, sf_dir: str, mult: int):
     """documents × ``mult`` derived from the driver's own parquet (no
@@ -1440,7 +1378,6 @@ def main() -> None:
         "queries_min": {n: s["min"] for n, s in spread.items()},
         "compile": compile_stats,
         "loadavg_1m_post_headline": round(os.getloadavg()[0], 2),
-        "drift_note": DRIFT_NOTE,
     }
     # safety net: the headline numbers exist in the output even if the
     # probes below take the JVM down (round-4 lost the whole artifact

@@ -27,123 +27,42 @@ _MODULES = (
 )
 
 # --------------------------------------------------------------------------
-# Driver check-window rotation (the driver's correctness gate covers the
-# FIRST 50 registry entries; dicts preserve insertion order).
+# Driver check window: the driver's correctness gate covers the FIRST 50
+# registry entries (dicts preserve insertion order).
 #
-# Invariant, re-stated and applied every round: every query that is NEW
-# this round, plus every query whose RESULT could be affected by this
-# round's diffs — judged module-granularly over the query's transitive
-# imports, with any finer-than-module claim justified per-diff below —
-# sits inside the first 50; everything past 50 has a green row in a
-# prior CORRECTNESS file AND its code is unchanged since that check.
-# Belt and suspenders: `tests/driver_sim.py` runs ALL queries against
-# their oracles locally each round (round 11: ALL MATCH at sf0.01; see
-# STATUS.md). Window tuples and per-round rationale for rounds 5-10
-# live in git history (prior revisions of this block — trimmed per
-# ADVICE r9 #3 / r10 verdict item 8; history belongs in git log).
+# Invariant: every query whose RESULT a change could affect — judged
+# module-granularly over the query's transitive imports, with any
+# finer-than-module claim stated here — sits inside the first 50;
+# everything past 50 has a green row in a prior CORRECTNESS file and its
+# result-producing code is unchanged since that check. Belt and
+# suspenders: `tests/driver_sim.py` runs ALL queries against their
+# oracles locally. The window's history is in git log.
 #
-# ROUND-12 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-13 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-14 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-15 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-16 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-17 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-18 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-19 window (50): executes the r18 verdict's queue exactly.
-#   * REGISTERED FROM STAGING (4, the whole staged set per verdict
-#     item 1): cohort_retention_bitmap + event_type_jaccard +
-#     stream_type_jaccard + rfm_segments (analytics_q) moved from
-#     R19_CANDIDATE_* into QUERIES/ORACLE (all four passed the pytest
-#     parity harness in r18). Completes the bitmap bit_and
-#     intersection algebra whose bit_or fold half shipped r17/r18.
-#   * NEW this round (2, verdict item 7): grouped_percentile_approx
-#     (Spark's native mergeable percentile_approx sketch agg vs exact
-#     DuckDB quantile_disc — exact at test SF by the accuracy choice)
-#     and stratified_reservoir (per-stratum deterministic hash-order
-#     reservoir via EXACT salted two-phase top-k), both selection_q
-#     appends.
-#   * DIFF RE-VERIFY (6): bitmap_distinct_users +
-#     stream_bitmap_distinct + rolling_7d_users_bitmap (operators/
-#     bitmap.py ADVICE r18 #3 'bits' group-column guard — the other
-#     bitmap consumers, cohort_retention_bitmap / *_type_jaccard, are
-#     in the staged set above); patient_record_linkage +
-#     linkage_entities + linkage_incremental (operators/linkage.py
-#     ADVICE r18 #1 lazy/opt-out localCheckpoint in blocked_pairs,
-#     and linkage_q ADVICE r18 #2 collision-free registry prefix +
-#     db-qualified purge in q_linkage_incremental). All other module
-#     hunks this round are pure appends (new functions + dict-entry
-#     registration only; no existing function hunk touched), so
-#     out-of-window greens stand.
-#   * R13 DRAIN (26 = the ENTIRE remaining r13 band): after this
-#     round no registry green is older than r14.
-#   * R14 DRAIN (12): alphabetical head of the 49-row r14 band
-#     (agg_minmax .. fhir_ndjson_coverage_bundles).
-# ROUND-19 window and rationale: git history (this block's prior
-# revision), per the trimming convention adopted in r9.
-#
-# ROUND-20 window (50) — OPTIMIZATION round 2, so NO staged
-# registrations (VERDICT r19 item 9: registering the 13 staged rows is
-# feature work, deferred to the next build round; the staged queue from
-# the prior revision of this block still applies then). Slots go to:
-#   * R20 DIFF RE-VERIFY (25): every query whose result-producing code
-#     was rewired this round — the Arrow-vectorized fold family
-#     (operators/pq.py pq_codes_udf everywhere pq_encode/pq_train run:
-#     pq_encode, pq_adc_topk, the four ivfpq_* rows, ivf_index_search;
-#     operators/similarity.py ivf_assign → nearest_centroid_udf:
-#     ivf_probe/multiprobe/recall, kmeans_fit/one_step, semdedup_keep,
-#     corpus_clean; lsh_bucket_udf: lsh_bucket_sizes,
-#     embedding_neardup + its pair_cosine_udf verification;
-#     query_cosine_udf ppb mode: mmr_rerank), the driver-side
-#     rank-sketch algebra (operators/sketch.py: quantile_sketch_estimate,
-#     domain_quantile_sketch, stream_quantile_sketch), and the BPE
-#     train-loop job cuts (operators/text.py bpe_train_merges_list:
-#     bpe_train_merges, bpe_train_encode). knn_cosine ended the round
-#     with a comment-only diff (the Arrow variant was reverted on
-#     measurement) and classifier_train_steps/pca_top_component sit in
-#     diff-touched modules — all three included as cheap insurance.
-#     Remaining hunks in the touched query modules are loader-line
-#     (load_spread → load) or comment-only changes on the queries
-#     listed here.
-#   * R19 REWRITE ROTATION (15, VERDICT r19 item 2): the queries the
-#     r19 optimizer rewrote that sat outside the r19 window —
-#     theta_sketch_setops, zorder_layout, heavy_hitter_tokens,
-#     fhir_notebook_e2e, ndcg_bsq_eval, bsq_hamming_search,
-#     winnow_dup_pairs, ngram_decontaminate, gopher_repetition_signals,
-#     triangle_count, and the spread-kept corpus rows lang_id,
-#     bm25_topk, paragraph_dedup, substring_dup_runs,
-#     pretrain_pipeline.
-#   * R20 DIFF RE-VERIFY, second batch (9): the minhash single-parse
-#     signature/band-key build (operators/dedup.py — expression-
-#     identical, pinned by test_minhash_signature_expr_equivalent)
-#     flows through minhash_lsh_neardup, minhash_incremental_dedup,
-#     minhash_est_error, neardup_clusters, neardup_clusters_star,
-#     dedup_representatives, edit_distance_neardup and
-#     stream_neardup_pairs; the theta_sketch materialize flag +
-#     overlapped bounded collects (operators/theta.py,
-#     queries/corpus_ext.py) flow through stream_theta_distinct
-#     (theta_sketch_setops itself is already in the first batch).
-#   * R14 DRAIN (1): fhir_ndjson_export_errors — the rest of the r14
-#     slice queued in the prior revision yields its slots to the
-#     second re-verify batch; resume the drain next round.
-# Everything past 50 has a green row in a prior CORRECTNESS file and
-# its result-producing code is unchanged since that check.
+# Current slots:
+#   * events-stream folds (8): every registered fold over the events
+#     stream runs through `streaming/cdc.py:fold_events`. The other
+#     hunks in their modules (analytics_q, corpus_ext, selection_q,
+#     temporal_q) only delete unregistered code or helpers no
+#     registered row used, so those modules' other rows stay out.
+#   * operator modules changed after the round-20 CORRECTNESS check
+#     (38): the rows whose transitive imports reach dedup.py or
+#     kmeans.py (isEmpty convergence probes), or pq.py, similarity.py,
+#     text.py, multimodal.py and kernels.py (one Spark-Round kernel,
+#     engine shipped to workers by value).
+#   * round-20 rewrites still holding slots (4): green in CORRECTNESS
+#     r20 and unchanged since; they yield first when slots are needed.
 # --------------------------------------------------------------------------
 _WINDOW = (
-    # --- ROUND 20: diff re-verify — Arrow fold family (pq.py) ---
+    # --- events-stream folds (streaming/cdc.py:fold_events) ---
+    "stream_merge_upsert",
+    "stream_hll_users",
+    "stream_quantile_sketch",
+    "stream_theta_distinct",
+    "stream_cms_topk",
+    "stream_daily_anomaly",
+    "stream_bitmap_distinct",
+    "stream_type_jaccard",
+    # --- pq.py / similarity.py / kmeans.py / kernels.py ---
     "pq_encode",
     "pq_adc_topk",
     "ivfpq_search",
@@ -151,7 +70,6 @@ _WINDOW = (
     "ivfpq_rerank_sweep",
     "ivfpq_residual_search",
     "ivf_index_search",
-    # --- ROUND 20: diff re-verify — ivf_assign/lsh/mmr (similarity.py) ---
     "ivf_probe_topk",
     "ivf_multiprobe_topk",
     "ivf_recall_at_k",
@@ -163,32 +81,20 @@ _WINDOW = (
     "embedding_neardup",
     "lsh_bucket_sizes",
     "mmr_rerank",
+    # --- text.py ---
     "classifier_train_steps",
-    "pca_top_component",
-    # --- ROUND 20: diff re-verify — sketch.py driver-side algebra ---
-    "quantile_sketch_estimate",
-    "domain_quantile_sketch",
-    "stream_quantile_sketch",
-    # --- ROUND 20: diff re-verify — BPE train-loop (text.py) ---
     "bpe_train_merges",
     "bpe_train_encode",
-    # --- ROUND 20: r19-rewrite rotation (VERDICT item 2) ---
-    "theta_sketch_setops",
-    "zorder_layout",
     "heavy_hitter_tokens",
-    "fhir_notebook_e2e",
-    "ndcg_bsq_eval",
-    "bsq_hamming_search",
-    "winnow_dup_pairs",
-    "ngram_decontaminate",
     "gopher_repetition_signals",
-    "triangle_count",
     "lang_id",
-    "bm25_topk",
-    "paragraph_dedup",
-    "substring_dup_runs",
     "pretrain_pipeline",
-    # --- ROUND 20: diff re-verify, second batch (9) ---
+    # --- dedup.py ---
+    "theta_sketch_setops",
+    "ngram_decontaminate",
+    "paragraph_dedup",
+    "winnow_dup_pairs",
+    "substring_dup_runs",
     "minhash_lsh_neardup",
     "minhash_incremental_dedup",
     "minhash_est_error",
@@ -197,11 +103,12 @@ _WINDOW = (
     "dedup_representatives",
     "edit_distance_neardup",
     "stream_neardup_pairs",
-    "stream_theta_distinct",
-    # --- ROUND 20: r14 drain (1) ---
-    "fhir_ndjson_export_errors",
+    # --- round-20 rewrites holding slots ---
+    "quantile_sketch_estimate",
+    "domain_quantile_sketch",
+    "fhir_notebook_e2e",
+    "bsq_hamming_search",
 )
-
 
 def _merged(attr: str) -> dict:
     out: dict = {}

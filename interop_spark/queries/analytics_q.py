@@ -1,6 +1,4 @@
-"""Round-16 third-wave product-analytics rows (new module so existing
-modules' out-of-window green rows stay untouched — the window invariant
-note in ``queries/__init__``).
+"""Product-analytics rows.
 
 Operators every warehouse/product-analytics user runs that the
 registry didn't yet cover (the adjacent shapes it DOES cover are noted,
@@ -567,57 +565,31 @@ def q_anomaly_days_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING daily-volume anomaly detection — the fourth
-    exactly-mergeable streaming fold next to the HLL register-max,
-    theta bottom-k, and CMS counter-sum members: per-batch (day, n)
-    partial counts fold by day-keyed SUM across the shared 4-chunk
-    landing, and the z-score/flag math runs on the <= span-days final
-    state. Count addition is exactly mergeable, so the batch SQL (the
-    ``anomaly_days_zscore`` oracle) is this row's oracle with zero
-    estimator slack. State between batches is O(days), never events.
+    """STREAMING daily-volume anomaly detection — an exactly-mergeable
+    streaming fold next to the HLL register-max, theta bottom-k, and
+    CMS counter-sum members: per-batch (day, n) partial counts fold by
+    day-keyed SUM across the 4 micro-batches, and the z-score/flag
+    math runs on the <= span-days final state. Count addition is
+    exactly mergeable, so the batch SQL (the ``anomaly_days_zscore``
+    oracle) is this row's oracle with zero estimator slack. State
+    between batches is O(days), never events."""
+    from interop_spark.streaming.cdc import fold_events
 
-    Lives in analytics_q (not temporal_q) as a pure append so
-    temporal_q's out-of-window streaming greens stay untouched — the
-    window invariant in ``queries/__init__``."""
-    import os
-
-    from interop_spark.streaming.cdc import land_event_chunks
-
-    ev = load(spark, sf_dir, "events").select("event_id", "ts")
-    key = "danom-" + (os.path.basename(os.path.normpath(sf_dir)) or "sf")
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"daily": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        d = batch_df.groupBy(
+    def _daily(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             F.date_format(
                 F.date_trunc("day", col("ts")), "yyyy-MM-dd"
             ).alias("day")
         ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-        if state["daily"] is None:
-            state["daily"] = d.localCheckpoint()
-        else:
-            state["daily"] = (
-                state["daily"]
-                .unionByName(d)
-                .groupBy("day")
-                .agg(F.sum("n").cast("long").alias("n"))
-                .localCheckpoint()
-            )
 
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    daily = state["daily"]
+    def _add(state: DataFrame, d: DataFrame) -> DataFrame:
+        return (
+            state.unionByName(d)
+            .groupBy("day")
+            .agg(F.sum("n").cast("long").alias("n"))
+        )
+
+    daily = fold_events(spark, sf_dir, _daily, _add)
     stats = daily.agg(
         F.avg("n").alias("mu"), F.stddev_pop("n").alias("sd")
     )
@@ -803,52 +775,19 @@ def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING exact distinct users — the FIFTH exactly-mergeable
-    streaming fold (bitmap bit_or, next to HLL register-max, theta
+    """STREAMING exact distinct users — the bitmap bit_or member of the
+    exactly-mergeable streaming folds (next to HLL register-max, theta
     bottom-k, CMS counter-sum, day-count SUM): per-batch (event_type,
-    word) bitmap partials fold by bit_or across the shared 4-chunk
-    landing. OR is idempotent as well as associative/commutative, so
+    word) bitmap partials fold by bit_or across the 4 micro-batches.
+    OR is idempotent as well as associative/commutative, so
     re-delivered events cannot even double-count — the strongest merge
-    algebra of the five members — and the batch SQL is the oracle with
-    zero estimator slack AND zero approximation (unlike the HLL
-    member, this streaming distinct is EXACT). State between batches
-    is O(|types| x |id_space|/64) words, never events."""
-    import os
+    algebra of the folds — and the batch SQL is the oracle with zero
+    estimator slack AND zero approximation (unlike the HLL member,
+    this streaming distinct is EXACT). State between batches is
+    O(|types| x |id_space|/64) words, never events."""
+    from interop_spark.operators.bitmap import merge_words, popcount
 
-    from interop_spark.operators.bitmap import (
-        bitmap_words,
-        merge_words,
-        popcount,
-    )
-    from interop_spark.streaming.cdc import land_event_chunks
-
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-    key = "bitmap-" + (os.path.basename(os.path.normpath(sf_dir)) or "sf")
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"words": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        w = bitmap_words(batch_df, ["event_type"], "user_id")
-        if state["words"] is None:
-            state["words"] = w.localCheckpoint()
-        else:
-            state["words"] = merge_words(
-                state["words"].unionByName(w), ["event_type"]
-            ).localCheckpoint()
-
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    words = state["words"]
+    words = _stream_type_words(spark, sf_dir)
     per_type = popcount(words, ["event_type"]).select(
         "event_type", col("n_distinct").alias("n_users")
     )
@@ -859,10 +798,22 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_type.unionByName(total)
 
 
+def _stream_type_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, word) user bitmaps of the whole events stream,
+    folded by bit_or across micro-batches."""
+    from interop_spark.operators.bitmap import bitmap_words, merge_words
+    from interop_spark.streaming.cdc import fold_events
+
+    return fold_events(
+        spark,
+        sf_dir,
+        lambda b: bitmap_words(b, ["event_type"], "user_id"),
+        lambda state, w: merge_words(state.unionByName(w), ["event_type"]),
+    )
+
+
 # --------------------------------------------------------------------------
-# Fourth wave (staged in r16 as R17_CANDIDATE_*, registered r17 per the
-# staging convention — parity tests passed a full round before the
-# driver row went live).
+# Fourth wave.
 # --------------------------------------------------------------------------
 
 
@@ -935,9 +886,7 @@ _ANOMALY_DAYS_SQL = """
 """
 
 # --------------------------------------------------------------------------
-# Fifth wave (staged in r16/r17 as R18_CANDIDATE_*, registered r18 per
-# the staging convention — parity tests passed a full round before the
-# driver rows went live).
+# Fifth wave.
 # --------------------------------------------------------------------------
 
 
@@ -1392,7 +1341,7 @@ QUERIES = {
     "percent_change_wow": q_percent_change_wow,
     "bitmap_distinct_users": q_bitmap_distinct_users,
     "stream_bitmap_distinct": q_stream_bitmap_distinct,
-    # --- registered r18 (staged r16/r17; the staging convention) ---
+    # --- fifth wave ---
     "top_paths": q_top_paths,
     "zorder_layout": q_zorder_layout,
     "rolling_7d_users_bitmap": q_rolling_7d_users_bitmap,
@@ -1759,11 +1708,8 @@ ORACLE["scd2_history"] = """
 
 
 # --------------------------------------------------------------------------
-# ROUND-19 STAGED CANDIDATES — full query+oracle pairs kept OUTSIDE
-# QUERIES/ORACLE (the staging convention; r19 registers them by moving
-# the dict entries into QUERIES/ORACLE and the window). Both extend
-# the bitmap algebra from fold (bit_or) to INTERSECTION (bit_and) —
-# the set-operation reuse COUNT(DISTINCT) results can never offer.
+# Sixth wave: bitmap INTERSECTION (bit_and) rows — the set-operation
+# reuse COUNT(DISTINCT) results can never offer — plus rfm_segments.
 # --------------------------------------------------------------------------
 
 
@@ -1792,9 +1738,8 @@ def q_cohort_retention_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # raw (user, week) rows feed the word build directly — bit_or
     # idempotence makes a pre-DISTINCT redundant, and the partial
-    # bit_or collapses map-side to words before the exchange (r19:
-    # dropped the staged version's distinct; same-shape note on
-    # q_event_type_jaccard)
+    # bit_or collapses map-side to words before the exchange (same
+    # shape as q_event_type_jaccard)
     active = ev.select(
         "user_id", F.to_date(F.date_trunc("week", col("ts"))).alias("week")
     )
@@ -1848,8 +1793,7 @@ def q_event_type_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIRECTLY — bit_or idempotence makes a pre-DISTINCT redundant, and
     the partial bit_or collapses each map task to words before the
     exchange, so the build pays ONE word-level shuffle instead of a
-    pair-level DISTINCT exchange plus the word one (r19: dropped the
-    staged version's distinct)."""
+    pair-level DISTINCT exchange plus the word one."""
     from interop_spark.operators.bitmap import bitmap_words
 
     tu = load(spark, sf_dir, "events").select("event_type", "user_id")
@@ -2054,49 +1998,16 @@ _R19_WAVE_ORACLE["rfm_segments"] = """
 def q_stream_type_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING pairwise user-set Jaccard between event types: the
     per-batch (event_type, word) bitmap partials fold by bit_or across
-    the shared 4-chunk landing (the stream_bitmap_distinct state,
-    byte for byte), and the final state answers a question the batches
-    were never asked — pairwise set INTERSECTION sizes — through the
-    SAME ``_jaccard_readout`` as the batch row. This is the bitmap
+    the 4 micro-batches (the stream_bitmap_distinct state), and the
+    final state answers a question the batches were never asked —
+    pairwise set INTERSECTION sizes — through the SAME
+    ``_jaccard_readout`` as the batch row. This is the bitmap
     re-mergeability claim doing new work: COUNT(DISTINCT)-style
     per-batch results could never be combined into cross-set algebra
     after the fact, while O(|types| x |id_space|/64) words can. Fold
     is exactly mergeable AND idempotent, so the batch SQL is the
     oracle with zero slack."""
-    import os
-
-    from interop_spark.operators.bitmap import bitmap_words, merge_words
-    from interop_spark.streaming.cdc import land_event_chunks
-
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-    # same landing as stream_bitmap_distinct: identical input frame,
-    # and the cache key content-fingerprints the rows
-    key = "bitmap-" + (os.path.basename(os.path.normpath(sf_dir)) or "sf")
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"words": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        w = bitmap_words(batch_df, ["event_type"], "user_id")
-        if state["words"] is None:
-            state["words"] = w.localCheckpoint()
-        else:
-            state["words"] = merge_words(
-                state["words"].unionByName(w), ["event_type"]
-            ).localCheckpoint()
-
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _jaccard_readout(state["words"])
+    return _jaccard_readout(_stream_type_words(spark, sf_dir))
 
 
 _R19_WAVE_QUERIES["stream_type_jaccard"] = q_stream_type_jaccard
@@ -2104,766 +2015,8 @@ _R19_WAVE_ORACLE["stream_type_jaccard"] = _R19_WAVE_ORACLE[
     "event_type_jaccard"
 ]
 
-# --------------------------------------------------------------------------
-# Registered round-19 (r18 verdict item 1; staged in r18 as
-# R19_CANDIDATE_* with green parity tests): the bitmap-intersection
-# pair (event_type_jaccard + its streaming fold twin
-# stream_type_jaccard — completing the bit_and algebra whose bit_or
-# fold half shipped r17/r18), cohort_retention_bitmap, and
-# rfm_segments. cohort_retention_bitmap and stream_type_jaccard
-# deliberately share their plain-SQL twins' oracle text
-# (execution-strategy contract, the rolling_7d_users_bitmap
-# convention).
+# cohort_retention_bitmap and stream_type_jaccard deliberately share
+# their plain-SQL twins' oracle text (execution-strategy contract, the
+# rolling_7d_users_bitmap convention).
 QUERIES.update(_R19_WAVE_QUERIES)
 ORACLE.update(_R19_WAVE_ORACLE)
-
-
-# --------------------------------------------------------------------------
-# STAGED for round-20 (the staging convention: parity-tested now,
-# registered + windowed next round): the data-quality / dashboard
-# staples the registry still circles — a per-column table profiler,
-# an equi-width histogram, and inter-arrival-time quantiles.
-# --------------------------------------------------------------------------
-
-PROFILE_NUM_COLS = ("o_orderkey", "o_custkey", "o_totalprice")
-PROFILE_STR_COLS = ("o_orderstatus", "o_orderpriority")
-PROFILE_DATE_COLS = ("o_orderdate",)
-
-
-def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column data-quality profile of ``orders`` (the
-    deequ/dbt-test staple): one output row per column with row count,
-    null count, EXACT distinct count, and typed min/max (numeric
-    columns fill ``min_num``/``max_num``; string/date columns fill
-    ``min_str``/``max_str`` — dates as 'YYYY-MM-DD' strings per the
-    cross-engine date contract). Shape: one single-column global
-    aggregate PER COLUMN, unioned — six pruned scans whose TOTAL bytes
-    equal one full-table pass (columnar layout), each compiling to a
-    partial+final HashAggregate pair with NO Expand (the one-pass
-    multi-count-distinct form multiplies every row x|columns| through
-    the distinct-agg rewrite — strictly worse at 100 TB than pruned
-    per-column passes, and this is the registry's one deliberate
-    multi-scan plan). Exact distincts are the profiler contract; an
-    approx_count_distinct variant would drop the exchange rows but
-    break the oracle."""
-    o = load(spark, sf_dir, "orders")
-
-    def leg(c: str, kind: str) -> DataFrame:
-        if kind == "num":
-            mn = F.min(col(c)).cast("double").alias("min_num")
-            mx = F.max(col(c)).cast("double").alias("max_num")
-            ms = F.lit(None).cast("string").alias("min_str")
-            xs = F.lit(None).cast("string").alias("max_str")
-        else:
-            fmt = (
-                (lambda x: F.date_format(x, "yyyy-MM-dd"))
-                if kind == "date"
-                else (lambda x: x.cast("string"))
-            )
-            mn = F.lit(None).cast("double").alias("min_num")
-            mx = F.lit(None).cast("double").alias("max_num")
-            ms = fmt(F.min(col(c))).alias("min_str")
-            xs = fmt(F.max(col(c))).alias("max_str")
-        return o.select(col(c)).agg(
-            F.lit(c).alias("column"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            (F.count(F.lit(1)) - F.count(col(c)))
-            .cast("long")
-            .alias("n_nulls"),
-            F.count_distinct(col(c)).cast("long").alias("n_distinct"),
-            mn,
-            mx,
-            ms,
-            xs,
-        )
-
-    legs = (
-        [leg(c, "num") for c in PROFILE_NUM_COLS]
-        + [leg(c, "str") for c in PROFILE_STR_COLS]
-        + [leg(c, "date") for c in PROFILE_DATE_COLS]
-    )
-    out = legs[0]
-    for l in legs[1:]:
-        out = out.unionByName(l)
-    return out
-
-
-def _column_profile_oracle() -> str:
-    legs = []
-    for c in PROFILE_NUM_COLS:
-        legs.append(f"""
-          SELECT '{c}' AS column,
-                 CAST(count(*) AS BIGINT) AS n_rows,
-                 CAST(count(*) - count({c}) AS BIGINT) AS n_nulls,
-                 CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-                 CAST(min({c}) AS DOUBLE) AS min_num,
-                 CAST(max({c}) AS DOUBLE) AS max_num,
-                 CAST(NULL AS VARCHAR) AS min_str,
-                 CAST(NULL AS VARCHAR) AS max_str
-          FROM orders""")
-    for c in PROFILE_STR_COLS:
-        legs.append(f"""
-          SELECT '{c}' AS column,
-                 CAST(count(*) AS BIGINT) AS n_rows,
-                 CAST(count(*) - count({c}) AS BIGINT) AS n_nulls,
-                 CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-                 CAST(NULL AS DOUBLE) AS min_num,
-                 CAST(NULL AS DOUBLE) AS max_num,
-                 min({c}) AS min_str,
-                 max({c}) AS max_str
-          FROM orders""")
-    for c in PROFILE_DATE_COLS:
-        legs.append(f"""
-          SELECT '{c}' AS column,
-                 CAST(count(*) AS BIGINT) AS n_rows,
-                 CAST(count(*) - count({c}) AS BIGINT) AS n_nulls,
-                 CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-                 CAST(NULL AS DOUBLE) AS min_num,
-                 CAST(NULL AS DOUBLE) AS max_num,
-                 strftime(min({c}), '%Y-%m-%d') AS min_str,
-                 strftime(max({c}), '%Y-%m-%d') AS max_str
-          FROM orders""")
-    return " UNION ALL ".join(legs)
-
-
-HIST_BINS = 20
-
-
-def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of ``events.value`` per event type (the
-    dashboard staple): global [min, max] reduces to ONE broadcast row,
-    bin = least(floor((v-min)/width), bins-1) is a pure projection
-    (identical IEEE double arithmetic on both engines — no
-    summation-order dependence anywhere), and the rollup is a bounded
-    |types| x bins aggregate. Two exchanges total: the 1-row stats
-    agg and the (type, bin) count; the scan never shuffles row-level
-    values. Empty bins are absent (the oracle's GROUP BY shape)."""
-    ev = load(spark, sf_dir, "events").select("event_type", "value")
-    stats = ev.agg(
-        F.min("value").alias("_mn"), F.max("value").alias("_mx")
-    )
-    width = (col("_mx") - col("_mn")) / HIST_BINS
-    # degenerate corpus (min == max): width 0 makes the Spark bin 0/0
-    # = NaN (ANSI cast throws) while DuckDB 0/0 returns NULL — pin
-    # both engines to bin 0 instead (r19 review)
-    b = F.when(
-        col("_mx") > col("_mn"),
-        F.least(
-            F.floor((col("value") - col("_mn")) / width),
-            F.lit(HIST_BINS - 1),
-        ),
-    ).otherwise(F.lit(0)).cast("int")
-    return (
-        ev.crossJoin(F.broadcast(stats))
-        .select("event_type", b.alias("bin"), "_mn", "_mx")
-        .groupBy("event_type", "bin")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            (
-                F.round(
-                    F.first("_mn")
-                    + col("bin") * (F.first("_mx") - F.first("_mn")) / HIST_BINS,
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias("bin_lo"),
-        )
-    )
-
-
-def _value_histogram_oracle() -> str:
-    return f"""
-        WITH stats AS (
-          SELECT min(value) AS mn, max(value) AS mx FROM events
-        ),
-        binned AS (
-          SELECT event_type,
-                 CAST(CASE WHEN mx > mn THEN
-                        least(floor((value - mn) / ((mx - mn) / {HIST_BINS})),
-                              {HIST_BINS - 1})
-                      ELSE 0 END AS INT) AS bin,
-                 mn, mx
-          FROM events, stats
-        )
-        SELECT event_type, bin,
-               CAST(count(*) AS BIGINT) AS n,
-               round(min(mn) + bin * (min(mx) - min(mn)) / {HIST_BINS},
-                     6) + 0.0 AS bin_lo
-        FROM binned GROUP BY event_type, bin
-    """
-
-
-IA_PS = (0.5, 0.9, 0.99)
-
-
-def q_interarrival_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type quantiles of USER inter-arrival time (the
-    engagement-cadence staple): gap = this event's epoch MICROSECONDS
-    minus the same user's previous event (any type; integer
-    arithmetic end-to-end per the cross-engine timestamp contract —
-    unix_micros vs epoch_us, never second-granularity diffs), gaps
-    attributed to the LATER event's type, then EXACT interpolating
-    percentiles (Spark ``percentile`` ≡ DuckDB ``quantile_cont``,
-    both Hyndman-Fan type 7 — the percentile_agg precedent). The lag
-    window orders by (ts, event_id): the unique tiebreak makes the
-    ordering total, so tied timestamps cannot flip gap attribution
-    between evaluations (the dup_span_removal lesson). Shape: one
-    user_id exchange for the window, one |types|-key percentile agg."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts", "event_id"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(col("ts"))
-    gap = (us - F.lag(us).over(w)).alias("gap_us")
-    gaps = ev.select("event_type", gap).where(col("gap_us").isNotNull())
-    aggs = [
-        (
-            F.round(F.percentile(col("gap_us"), F.lit(p)), 6) + F.lit(0.0)
-        ).alias(f"gap_us_p{int(p * 100)}")
-        for p in IA_PS
-    ]
-    return gaps.groupBy("event_type").agg(
-        *aggs, F.count(F.lit(1)).cast("long").alias("n_gaps")
-    )
-
-
-def _interarrival_oracle() -> str:
-    cols = ",\n               ".join(
-        f"round(quantile_cont(gap_us, {repr(p)}), 6) + 0.0"
-        f" AS gap_us_p{int(p * 100)}"
-        for p in IA_PS
-    )
-    return f"""
-        WITH gaps AS (
-          SELECT event_type,
-                 epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS gap_us
-          FROM events
-        )
-        SELECT event_type,
-               {cols},
-               CAST(count(*) AS BIGINT) AS n_gaps
-        FROM gaps WHERE gap_us IS NOT NULL
-        GROUP BY event_type
-    """
-
-
-R20_CANDIDATE_QUERIES = {
-    "column_profile": q_column_profile,
-    "value_histogram": q_value_histogram,
-    "interarrival_quantiles": q_interarrival_quantiles,
-}
-
-R20_CANDIDATE_ORACLE = {
-    "column_profile": _column_profile_oracle(),
-    "value_histogram": _value_histogram_oracle(),
-    "interarrival_quantiles": _interarrival_oracle(),
-}
-
-
-def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative revenue per acquisition cohort by cohort age (the
-    LTV-curve staple `cohort_retention` counts users for — this row
-    sums money): cohort = customer's first order week, revenue rolls
-    up to (cohort_week, week_offset), then a cumulative window over
-    offset WITHIN cohort. Float discipline: per-cell sums round to
-    2dp BEFORE the cumulative sum (a ~1e-8-ULP float sum rounds
-    identically on both engines at cent granularity; the rfm_segments
-    precedent), so the running total is integer-exact cent
-    arithmetic. Shape: one custkey shuffle for the cohort frame, a
-    broadcast-joinable (custkey → cohort) map back onto orders, one
-    (cohort, offset) rollup, and a cumulative window whose partitions
-    are cohort-sized — bounded by the calendar, not the corpus."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    first = o.groupBy("o_custkey").agg(
-        F.to_date(F.date_trunc("week", F.min("o_orderdate"))).alias(
-            "cohort_week"
-        )
-    )
-    cells = (
-        o.join(first, "o_custkey")
-        .select(
-            "cohort_week",
-            (
-                F.datediff(
-                    F.to_date(F.date_trunc("week", col("o_orderdate"))),
-                    col("cohort_week"),
-                )
-                / 7
-            )
-            .cast("int")
-            .alias("week_offset"),
-            "o_totalprice",
-        )
-        .groupBy("cohort_week", "week_offset")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-        )
-    )
-    w = (
-        Window.partitionBy("cohort_week")
-        .orderBy("week_offset")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return cells.select(
-        F.date_format("cohort_week", "yyyy-MM-dd").alias("cohort_week"),
-        "week_offset",
-        "n_orders",
-        "revenue",
-        (F.round(F.sum("revenue").over(w), 2) + F.lit(0.0)).alias(
-            "cum_revenue"
-        ),
-    )
-
-
-def _cohort_ltv_oracle() -> str:
-    return """
-        WITH first AS (
-          SELECT o_custkey,
-                 CAST(date_trunc('week', min(o_orderdate)) AS DATE)
-                   AS cohort_week
-          FROM orders GROUP BY 1
-        ),
-        cells AS (
-          SELECT f.cohort_week,
-                 CAST(date_diff('day', f.cohort_week,
-                      CAST(date_trunc('week', o.o_orderdate) AS DATE)) // 7
-                      AS INT) AS week_offset,
-                 round(sum(o.o_totalprice), 2) AS revenue,
-                 CAST(count(*) AS BIGINT) AS n_orders
-          FROM orders o JOIN first f USING (o_custkey)
-          GROUP BY 1, 2
-        )
-        SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-               week_offset, n_orders, revenue,
-               round(sum(revenue) OVER (
-                 PARTITION BY cohort_week ORDER BY week_offset
-                 ROWS UNBOUNDED PRECEDING
-               ), 2) + 0.0 AS cum_revenue
-        FROM cells
-    """
-
-
-def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit audit of order totals (the
-    fraud/data-quality screen): observed first-significant-digit
-    counts vs the Benford expectation log10(1+1/d), with the
-    per-digit deviation in ppm. The digit extraction is pure string
-    arithmetic on the absolute value (no float log per row), counts
-    are exact integers, and the expectation is nine compile-time
-    literals — one 9-key aggregate over a single pruned scan; at
-    100 TB this is scan-bandwidth bound with a 9-row result. (TPC-H
-    prices are uniform-ish, NOT Benford — the row reports the
-    deviation rather than asserting conformance; the operator is the
-    deliverable, the fixture just exercises it.)"""
-    o = load(spark, sf_dir, "orders").select("o_totalprice")
-    stripped = F.regexp_replace(
-        F.abs(col("o_totalprice")).cast("string"), r"[0.]*", ""
-    )
-    # an all-zero value strips to '' — guard the cast so it yields
-    # NULL (filtered below) instead of an ANSI CAST_INVALID_INPUT
-    # under the driver's plain session, matching the oracle's
-    # TRY_CAST (r19 review)
-    d1 = F.when(
-        F.length(stripped) > 0, F.substring(stripped, 1, 1).cast("int")
-    )
-    obs = (
-        o.select(d1.alias("digit"))
-        .where(col("digit").isNotNull() & (col("digit") > 0))
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = obs.agg(F.sum("n").alias("_t"))
-    expect = F.element_at(
-        F.array(
-            *[
-                F.lit(int(round(math.log10(1 + 1 / d) * 1_000_000)))
-                for d in range(1, 10)
-            ]
-        ),
-        col("digit"),
-    )
-    return obs.crossJoin(F.broadcast(tot)).select(
-        "digit",
-        "n",
-        F.floor(col("n") * 1_000_000 / col("_t"))
-        .cast("long")
-        .alias("observed_ppm"),
-        expect.cast("long").alias("benford_ppm"),
-        (
-            F.floor(col("n") * 1_000_000 / col("_t")) - expect
-        )
-        .cast("long")
-        .alias("delta_ppm"),
-    )
-
-
-def _benford_oracle() -> str:
-    import math as _m
-
-    cases = " ".join(
-        f"WHEN {d} THEN {int(round(_m.log10(1 + 1 / d) * 1_000_000))}"
-        for d in range(1, 10)
-    )
-    return f"""
-        WITH obs AS (
-          SELECT TRY_CAST(substr(regexp_replace(
-                   CAST(abs(o_totalprice) AS VARCHAR), '[0.]*', ''),
-                   1, 1) AS INT) AS digit,
-                 CAST(count(*) AS BIGINT) AS n
-          FROM orders
-          GROUP BY 1
-        ),
-        tot AS (SELECT sum(n) AS t FROM obs WHERE digit > 0)
-        SELECT digit, n,
-               CAST(floor(n * 1000000.0 / t) AS BIGINT) AS observed_ppm,
-               CAST(CASE digit {cases} END AS BIGINT) AS benford_ppm,
-               CAST(floor(n * 1000000.0 / t)
-                    - CASE digit {cases} END AS BIGINT) AS delta_ppm
-        FROM obs, tot
-        WHERE digit IS NOT NULL AND digit > 0
-    """
-
-
-R20_CANDIDATE_QUERIES["cohort_ltv_curve"] = q_cohort_ltv_curve
-R20_CANDIDATE_ORACLE["cohort_ltv_curve"] = _cohort_ltv_oracle()
-R20_CANDIDATE_QUERIES["benford_first_digit"] = q_benford_first_digit
-R20_CANDIDATE_ORACLE["benford_first_digit"] = _benford_oracle()
-
-
-def q_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert quantiles between funnel stages (the question
-    every funnel dashboard asks right after `funnel_conversion`
-    answers "how many"): per converting user, the gap from first view
-    to first qualifying click and from that click to first qualifying
-    purchase, in integer MICROSECONDS (the cross-engine timestamp
-    contract), then EXACT interpolating p50/p90 per stage. The stage
-    chain MIRRORS `funnel_conversion`'s (same horizons, same min-ts
-    semantics) — deliberately not refactored into a shared core this
-    round: funnel_conversion sits OUTSIDE the r19 check window and the
-    window invariant forbids touching its code path; unify under one
-    core when both rows are in-window together (r20). Shape: the
-    funnel joins are user-keyed equi-joins, the quantile agg is
-    2-key."""
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    horizon = F.expr(f"INTERVAL {FUNNEL_HORIZON_DAYS} DAYS")
-    s1 = (
-        ev.where(col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.where(col("event_type") == "click")
-        .join(s1, "user_id")
-        .where((col("ts") > col("t1")) & (col("ts") <= col("t1") + horizon))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.where(col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .where((col("ts") > col("t2")) & (col("ts") <= col("t2") + horizon))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    g2 = s2.join(s1, "user_id").select(
-        F.lit("view_to_click").alias("stage"),
-        (F.unix_micros(col("t2")) - F.unix_micros(col("t1"))).alias(
-            "gap_us"
-        ),
-    )
-    g3 = s3.join(s2, "user_id").select(
-        F.lit("click_to_purchase").alias("stage"),
-        (F.unix_micros(col("t3")) - F.unix_micros(col("t2"))).alias(
-            "gap_us"
-        ),
-    )
-    return (
-        g2.unionByName(g3)
-        .groupBy("stage")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_converted"),
-            (F.round(F.percentile(col("gap_us"), F.lit(0.5)), 6) + F.lit(0.0))
-            .alias("gap_us_p50"),
-            (F.round(F.percentile(col("gap_us"), F.lit(0.9)), 6) + F.lit(0.0))
-            .alias("gap_us_p90"),
-        )
-    )
-
-
-def _funnel_ttc_oracle() -> str:
-    return f"""
-        WITH s1 AS (
-          SELECT user_id, min(ts) AS t1 FROM events
-          WHERE event_type = 'view' GROUP BY 1
-        ),
-        s2 AS (
-          SELECT e.user_id, min(e.ts) AS t2
-          FROM events e JOIN s1 USING (user_id)
-          WHERE e.event_type = 'click' AND e.ts > s1.t1
-            AND e.ts <= s1.t1 + INTERVAL {FUNNEL_HORIZON_DAYS} DAYS
-          GROUP BY 1
-        ),
-        s3 AS (
-          SELECT e.user_id, min(e.ts) AS t3
-          FROM events e JOIN s2 USING (user_id)
-          WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-            AND e.ts <= s2.t2 + INTERVAL {FUNNEL_HORIZON_DAYS} DAYS
-          GROUP BY 1
-        ),
-        gaps AS (
-          SELECT 'view_to_click' AS stage,
-                 epoch_us(t2) - epoch_us(t1) AS gap_us
-          FROM s2 JOIN s1 USING (user_id)
-          UNION ALL
-          SELECT 'click_to_purchase' AS stage,
-                 epoch_us(t3) - epoch_us(t2) AS gap_us
-          FROM s3 JOIN s2 USING (user_id)
-        )
-        SELECT stage,
-               CAST(count(*) AS BIGINT) AS n_converted,
-               round(quantile_cont(gap_us, 0.5), 6) + 0.0 AS gap_us_p50,
-               round(quantile_cont(gap_us, 0.9), 6) + 0.0 AS gap_us_p90
-        FROM gaps GROUP BY stage
-    """
-
-
-R20_CANDIDATE_QUERIES["funnel_time_to_convert"] = q_funnel_time_to_convert
-R20_CANDIDATE_ORACLE["funnel_time_to_convert"] = _funnel_ttc_oracle()
-
-
-TREND_EPOCH = "2024-01-01"  # x-origin: recenters day index near the data
-
-
-def q_daily_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-segment KPI trend line — OLS slope / intercept / r² of the
-    DAILY MEAN value against the day index, per event_type (the
-    grouped sibling of ``zipf_fit_slope``'s single global log-log fit;
-    the "is this metric drifting per segment" sparkline every
-    monitoring dashboard fits). Two-level shape: the corpus pass is
-    one (type, day) rollup — the grid is calendar × |types| bounded,
-    independent of event count — and the regression runs per type on
-    that bounded frame via the ``regr_*`` partial aggregates (sums of
-    moments, one exchange of O(|types|) moment tuples at 100 TB).
-    Float discipline: daily means round to 6dp BEFORE the fit (the
-    cohort_ltv cell convention), x recenters to days-since-epoch-
-    literal so the moment magnitudes stay O(10) (keeping cross-engine
-    summation ULP far below the 5dp output rounding), r² is corr²
-    (the zipf_fit_slope convention — identical NULL semantics on both
-    engines when a degenerate group has zero variance)."""
-    ev = load(spark, sf_dir, "events").select("event_type", "ts", "value")
-    daily = ev.groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(
-        F.round(F.avg("value"), 6).alias("y"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-    x = F.datediff(
-        col("day"), F.lit(TREND_EPOCH).cast("date")
-    ).cast("double")
-    fitted = daily.select("event_type", "y", "n_events", x.alias("x"))
-    return fitted.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("n_events").cast("long").alias("n_events"),
-        (F.round(F.regr_slope("y", "x"), 5) + F.lit(0.0)).alias("slope"),
-        (F.round(F.regr_intercept("y", "x"), 5) + F.lit(0.0)).alias(
-            "intercept"
-        ),
-        (F.round(F.pow(F.corr("x", "y"), 2), 5) + F.lit(0.0)).alias("r2"),
-    )
-
-
-def _daily_value_trend_oracle() -> str:
-    return f"""
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-                 round(avg(value), 6) AS y,
-                 CAST(count(*) AS BIGINT) AS n_events
-          FROM events GROUP BY 1, 2
-        ),
-        fitted AS (
-          SELECT event_type, y, n_events,
-                 CAST(date_diff('day', DATE '{TREND_EPOCH}', day)
-                      AS DOUBLE) AS x
-          FROM daily
-        )
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_days,
-               CAST(sum(n_events) AS BIGINT) AS n_events,
-               round(regr_slope(y, x), 5) + 0.0 AS slope,
-               round(regr_intercept(y, x), 5) + 0.0 AS intercept,
-               round(pow(corr(x, y), 2), 5) + 0.0 AS r2
-        FROM fitted GROUP BY event_type
-    """
-
-
-R20_CANDIDATE_QUERIES["daily_value_trend"] = q_daily_value_trend
-R20_CANDIDATE_ORACLE["daily_value_trend"] = _daily_value_trend_oracle()
-
-
-KM_OBS_HOURS = 48  # administrative censoring: follow-up cap per subject
-_KM_HOUR_US = 3_600_000_000
-
-
-def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan–Meier time-to-first-error survival curve with
-    right-censoring — the survival-analysis staple (`cohort_retention`
-    counts returners; this estimates S(t) = P(no error within t) while
-    CORRECTLY keeping not-yet-failed subjects in the risk set instead
-    of dropping or miscounting them). Subjects: users; origin: the
-    user's first event; event: their first 'error'; observation ends
-    at min(first + ``KM_OBS_HOURS``, corpus end) — the clinical-trial
-    fixed-horizon design WITH staggered entry, so a subject enrolling
-    within the cap of corpus end is censored at their TRUE (shorter)
-    follow-up instead of being mislabeled as error-free for hours
-    nobody observed; everyone else censors at the cap (past every
-    printable step, so on such a corpus the printed ``n_censored`` is
-    typically 0 — late enrollees are what make it nonzero). Durations
-    are integer HOURS from epoch-µs integer arithmetic (the
-    interarrival_quantiles discipline). Estimator: at each failure
-    hour t, S(t) *= (1 - d_t / n_t), n_t = subjects with duration ≥ t,
-    computed as a cumulative product via exp(Σ ln) — the zipf
-    cross-engine-log precedent, one-ULP libm slack absorbed by the
-    6dp rounding; a full-failure step (d = n, ln(0)) is CASE-guarded
-    to an exact 0.0 on both engines (DuckDB ERRORS on ln(0)).
-
-    Scale shape: ONE user-keyed exchange builds the per-subject
-    (origin, last-seen, first-error) frame via conditional min/max
-    aggregates, plus a 1-row broadcast stats join for corpus end (the
-    value_histogram idiom); from there every window runs on the
-    DISTINCT-DURATION frame — bounded by the follow-up cap
-    (≤ KM_OBS_HOURS + 1 rows), independent of user count, so the
-    unpartitioned ordered windows are O(cap) on one reducer, never a
-    corpus sort. The risk-set total is a whole-frame window sum on
-    that same bounded frame. Output: one row per failure step
-    (censoring thins the risk set between steps but prints no row —
-    the standard KM table shape)."""
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    us = F.unix_micros(col("ts"))
-    # hash once, merge many (the bitmap_distinct_users checkpoint
-    # pattern): without it the corpus-end stats branch RE-SCANS events
-    # and repeats the user-keyed exchange; with it both branches read
-    # the bounded per-subject frame.
-    per = ev.groupBy("user_id").agg(
-        F.min(us).alias("first_us"),
-        F.max(us).alias("last_us"),
-        F.min(F.when(col("event_type") == "error", us)).alias("err_us"),
-    ).localCheckpoint()
-    stats = per.agg(F.max("last_us").alias("_t_end"))
-    j = per.crossJoin(F.broadcast(stats))
-    cap = F.lit(KM_OBS_HOURS * _KM_HOUR_US)
-    obs_end = F.least(col("first_us") + cap, col("_t_end"))
-    failed = col("err_us").isNotNull() & (col("err_us") < obs_end)
-    dur_us = F.when(failed, col("err_us") - col("first_us")).otherwise(
-        obs_end - col("first_us")
-    )
-    durs = j.select(
-        failed.cast("int").alias("fail"), dur_us.alias("dur_us")
-    ).select(
-        F.expr(f"dur_us div {_KM_HOUR_US}").alias("dur_hr"), "fail"
-    )
-    counts = durs.groupBy("dur_hr").agg(
-        F.sum("fail").cast("long").alias("n_fail"),
-        F.count(F.lit(1)).cast("long").alias("n_at"),
-    )
-    w_all = Window.orderBy("dur_hr").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_prev = Window.orderBy("dur_hr").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    risk = counts.select(
-        "dur_hr",
-        "n_fail",
-        (col("n_at") - col("n_fail")).alias("n_censored"),
-        (
-            F.sum("n_at").over(w_all)
-            - F.coalesce(F.sum("n_at").over(w_prev), F.lit(0))
-        )
-        .cast("long")
-        .alias("n_risk"),
-    )
-    steps = risk.where(col("n_fail") > 0)
-    ln_term = F.when(
-        col("n_fail") < col("n_risk"),
-        F.log(
-            F.lit(1.0)
-            - col("n_fail").cast("double") / col("n_risk").cast("double")
-        ),
-    )  # NULL (skipped by sum) on a full-failure step; survival forced 0
-    w_cum = Window.orderBy("dur_hr").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return steps.select(
-        "dur_hr",
-        "n_risk",
-        "n_fail",
-        "n_censored",
-        F.when(col("n_fail") == col("n_risk"), F.lit(0.0))
-        .otherwise(
-            F.round(F.exp(F.sum(ln_term).over(w_cum)), 6) + F.lit(0.0)
-        )
-        .alias("survival"),
-    )
-
-
-def _survival_km_oracle() -> str:
-    cap_us = KM_OBS_HOURS * _KM_HOUR_US
-    return f"""
-        WITH per AS (
-          SELECT user_id,
-                 min(epoch_us(ts)) AS first_us,
-                 max(epoch_us(ts)) AS last_us,
-                 min(CASE WHEN event_type = 'error'
-                          THEN epoch_us(ts) END) AS err_us
-          FROM events GROUP BY 1
-        ),
-        stats AS (SELECT max(last_us) AS t_end FROM per),
-        obs AS (
-          SELECT p.*, least(p.first_us + {cap_us}, s.t_end) AS obs_end
-          FROM per p CROSS JOIN stats s
-        ),
-        durs AS (
-          SELECT CASE WHEN err_us IS NOT NULL AND err_us < obs_end
-                      THEN 1 ELSE 0 END AS fail,
-                 (CASE WHEN err_us IS NOT NULL AND err_us < obs_end
-                       THEN err_us - first_us
-                       ELSE obs_end - first_us END)
-                 // {_KM_HOUR_US} AS dur_hr
-          FROM obs
-        ),
-        counts AS (
-          SELECT dur_hr,
-                 CAST(sum(fail) AS BIGINT) AS n_fail,
-                 CAST(count(*) AS BIGINT) AS n_at
-          FROM durs GROUP BY 1
-        ),
-        risk AS (
-          SELECT dur_hr, n_fail, n_at - n_fail AS n_censored,
-                 CAST(sum(n_at) OVER () - coalesce(sum(n_at) OVER (
-                   ORDER BY dur_hr
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ), 0) AS BIGINT) AS n_risk
-          FROM counts
-        ),
-        steps AS (SELECT * FROM risk WHERE n_fail > 0)
-        SELECT dur_hr, n_risk, n_fail, n_censored,
-               CASE WHEN n_fail = n_risk THEN 0.0
-                    ELSE round(exp(sum(
-                           CASE WHEN n_fail < n_risk
-                                THEN ln(1.0 - CAST(n_fail AS DOUBLE)
-                                            / CAST(n_risk AS DOUBLE))
-                           END) OVER (
-                             ORDER BY dur_hr ROWS UNBOUNDED PRECEDING
-                           )), 6) + 0.0
-               END AS survival
-        FROM steps
-    """
-
-
-R20_CANDIDATE_QUERIES["survival_km"] = q_survival_km
-R20_CANDIDATE_ORACLE["survival_km"] = _survival_km_oracle()

@@ -1,6 +1,4 @@
-"""Round-15b corpus-analytics extensions (new module so the existing
-query modules' out-of-window green rows stay untouched — the window
-invariant note in ``queries/__init__``).
+"""Corpus-analytics extensions.
 
 Oracle-backed driver rows (four r15b originals, then the r16
 additions ``mmr_rerank`` / ``stream_theta_distinct`` /
@@ -664,9 +662,7 @@ ORACLE = {
 
 
 # --------------------------------------------------------------------------
-# Round-16 registrations (staged + parity-proven in r15, registered in
-# r16 with window slots — the r15 window was full): `mmr_rerank` and
-# `stream_theta_distinct` join QUERIES/ORACLE below.
+# `mmr_rerank` and `stream_theta_distinct` join QUERIES/ORACLE below.
 # --------------------------------------------------------------------------
 
 MMR_QUERY_ID = 1
@@ -774,63 +770,36 @@ ORACLE["mmr_rerank"] = _mmr_oracle()
 
 def q_stream_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING theta/KMV distinct sketch — per-event-type distinct
-    USERS maintained across micro-batches by `theta_merge` (staged r16
-    row; the KMV sibling of `stream_hll_users`): the events table
-    streams as the same 4-chunk landing the CDC/HLL/rank-sketch twins
-    use, each batch builds its own k-bounded bottom-k sketch, and
-    ``foreachBatch`` folds them. The merge is PROVABLY exact for any
-    batch split (`test_theta_streaming_fold_equals_batch`), so the
-    oracle is the batch sketch over all events. Unlike HLL this sketch
+    USERS maintained across micro-batches by `theta_merge` (the KMV
+    sibling of `stream_hll_users`): each of the 4 micro-batches builds
+    its own k-bounded bottom-k sketch, and the fold merges them. The
+    merge is PROVABLY exact for any batch split
+    (`test_theta_streaming_fold_equals_batch`), so the oracle is the
+    batch sketch over all events. Unlike HLL this sketch
     also supports INTERSECTION algebra — the reason both exist.
 
     Emits per event_type: n_kept, theta, est_distinct (the KMV
     ``(k-1) * 2^32 div theta`` estimator, exact when unsaturated) and
     exact_distinct as the audit. State between batches is
     O(groups * k) survivor rows, never event rows."""
-    import os
+    from interop_spark.operators.theta import theta_merge
+    from interop_spark.streaming.cdc import fold_events
 
-    from interop_spark.operators.theta import (
-        THETA_K,
-        THETA_MAXH,
-        theta_items,
-        theta_merge,
-        theta_sketch,
-    )
-    from interop_spark.streaming.cdc import land_event_chunks
-
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    key = "thetaq-" + (
-        os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    )
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"kept": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def _sketch(batch_df: DataFrame) -> DataFrame:
         kb, _ = theta_sketch(
             theta_items(batch_df, col("event_type"), col("user_id")),
             k=THETA_K,
         )
-        if state["kept"] is None:
-            state["kept"] = kb.localCheckpoint()
-        else:
-            mk, _ = theta_merge(state["kept"], kb, k=THETA_K)
-            state["kept"] = mk.localCheckpoint()
+        return kb
 
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
+    folded = fold_events(
+        spark,
+        sf_dir,
+        _sketch,
+        lambda state, kb: theta_merge(state, kb, k=THETA_K)[0],
     )
-    q.awaitTermination()
-    kept, theta = theta_merge(state["kept"], state["kept"], k=THETA_K)
+    ev = load(spark, sf_dir, "events")
+    kept, theta = theta_merge(folded, folded, k=THETA_K)
     nk = kept.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
     exact = ev.groupBy(col("event_type").alias("g")).agg(
         F.countDistinct("user_id").cast("long").alias("exact_distinct")
@@ -914,10 +883,9 @@ CMS_PHI_DEN = 40  # heavy-user threshold: est >= n_events / 40
 def q_stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING Count-Min heavy hitters — per-user event-count sketch
     maintained across micro-batches by counter-wise SUM (the CMS merge;
-    additive, hence fold == one-pass with NO estimator drift): the
-    events table streams as the same 4-chunk landing the CDC/HLL/theta
-    twins use, each batch contributes its own depth x width counter
-    frame, and ``foreachBatch`` folds them by (j, b) sum. The final
+    additive, hence fold == one-pass with NO estimator drift): each of
+    the 4 micro-batches contributes its own depth x width counter
+    frame, and the fold sums them by (j, b). The final
     probe joins every DISTINCT user against the <= depth*width
     broadcast sketch and keeps users whose estimate clears
     n_events/{CMS_PHI_DEN}; exact counts ride along as the audit
@@ -928,48 +896,28 @@ def q_stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-id distinct frame. At 100 TB the sketch frame is bytes-sized
     while exact per-user counts would be a full keyed shuffle — the
     reason the sketch family exists."""
-    import os
+    from interop_spark.streaming.cdc import fold_events
 
-    from interop_spark.streaming.cdc import land_event_chunks
-
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    key = "cmsq-" + (os.path.basename(os.path.normpath(sf_dir)) or "sf")
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"sketch": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def _counters(batch_df: DataFrame) -> DataFrame:
         rows = batch_df.select(
             col("user_id").cast("string").alias("w"),
             F.explode(F.sequence(F.lit(0), F.lit(HH_DEPTH - 1))).alias("j"),
         )
-        sk = (
+        return (
             rows.withColumn("b", _cms_bucket(col("j"), col("w")))
             .groupBy("j", "b")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        if state["sketch"] is None:
-            state["sketch"] = sk.localCheckpoint()
-        else:
-            merged = (
-                state["sketch"].unionByName(sk)
-                .groupBy("j", "b")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-            state["sketch"] = merged.localCheckpoint()
 
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sketch = state["sketch"]
+    def _add(state: DataFrame, sk: DataFrame) -> DataFrame:
+        return (
+            state.unionByName(sk)
+            .groupBy("j", "b")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        )
+
+    sketch = fold_events(spark, sf_dir, _counters, _add)
+    ev = load(spark, sf_dir, "events")
     exact = ev.groupBy(col("user_id").cast("string").alias("token")).agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt")
     )

@@ -117,12 +117,6 @@ def q_patient_record_linkage(
     )
 
 
-# --------------------------------------------------------------------------
-# Staged in r17, REGISTERED r18 (the staging convention: parity proven
-# a full round before the driver row went live).
-# --------------------------------------------------------------------------
-
-
 def _crosswalk(records: DataFrame) -> DataFrame:
     """Records → (rec_id, entity_id) crosswalk: blocked pairing + the
     verify band, connected components by min-label propagation

@@ -1,6 +1,4 @@
-"""Round-4 pipeline-operator promotions (new module so `pipeline.py` —
-and therefore its 24 out-of-window round-3-green queries — stays
-untouched; see the window invariant note in ``queries/__init__``).
+"""Pipeline-operator promotions.
 
 Promotes the two round-3 "weak" components into the driver's oracle gate
 (`gopher_quality_flags`, the ``IVFIndex`` build-once/search-many API) and

@@ -1,7 +1,4 @@
-"""Round-8 data-selection / retrieval / CDC promotions (new module so
-``pipeline.py`` / ``pipeline_ext.py`` / ``temporal_q.py`` — and their
-out-of-window green rows — stay untouched; see the window invariant
-note in ``queries/__init__``).
+"""Data-selection / retrieval / CDC rows.
 
 Adds five oracle-backed driver queries:
 
@@ -3498,592 +3495,3 @@ QUERIES["grouped_percentile_approx"] = q_grouped_percentile_approx
 QUERIES["stratified_reservoir"] = q_stratified_reservoir
 ORACLE["grouped_percentile_approx"] = _grouped_percentile_approx_oracle()
 ORACLE["stratified_reservoir"] = _stratified_reservoir_oracle()
-
-
-# --------------------------------------------------------------------------
-# round-20 staged candidates (the staging convention: full driver oracle
-# contract proven this round, registration + window next round). These
-# live HERE next to their batch twin; the other six r20 candidates are in
-# ``analytics_q.R20_CANDIDATE_*`` — the r20 registration sweep gathers
-# BOTH dicts (see the rotation note in ``queries/__init__``).
-# --------------------------------------------------------------------------
-
-
-def _strat_topk(df: DataFrame, with_rank: bool = False) -> DataFrame:
-    """The ``STRAT_K`` smallest ``_h`` per event_type — the
-    ``stratified_reservoir`` order (md5 of the unique event_id, a total
-    order within each stratum, so ``row_number`` is deterministic and
-    the two call sites — per-batch and merge — cannot disagree on
-    ties). Spark plans the rank-filter as WindowGroupLimit, capping
-    every map task at k rows per stratum BEFORE the exchange."""
-    w = Window.partitionBy("event_type").orderBy("_h")
-    r = df.select("*", F.row_number().over(w).alias("rk")).where(
-        col("rk") <= STRAT_K
-    )
-    return r if with_rank else r.drop("rk")
-
-
-def q_stream_stratified_reservoir(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """STREAMING deterministic reservoir — the SIXTH exactly-mergeable
-    streaming fold (bottom-k-of-hash, joining bitmap bit_or, HLL
-    register-max, theta bottom-k, CMS counter-sum, and the rank-sketch
-    merge), and the first whose state is the SAMPLE ITSELF: where the
-    theta member keeps bottom-k hashes to estimate a count, this keeps
-    the k hash-smallest ROWS per stratum, so what survives the stream
-    is the exact fixed-size sample ``stratified_reservoir`` draws in
-    batch. Merge exactness: a stratum's k smallest hashes over the
-    whole stream are each among the k smallest of their own
-    micro-batch, so ``topk(state ∪ topk(batch)) = topk(all)`` for ANY
-    batch split — the DuckDB oracle is therefore the batch row's SQL
-    verbatim (shared-oracle convention: same result contract, different
-    execution strategy — the ``stream_bitmap_distinct`` precedent).
-
-    The events table streams as the same 4-chunk landing the CDC
-    upsert / HLL / rank-sketch twins reuse (``maxFilesPerTrigger=1`` →
-    4 real micro-batches); each batch ranks itself with the SAME
-    ``_strat_topk`` the merge uses (WindowGroupLimit caps map tasks at
-    k per stratum before the exchange), and ``foreachBatch`` folds
-    survivor frames. State between batches is O(|strata| · k) rows,
-    never events — the fixed-memory contract that lets a production
-    crawl keep a live per-source sample forever. Batch twin + the
-    salted wide-cluster form: ``q_stratified_reservoir`` /
-    ``operators/scale.salted_grouped_topk``."""
-    from interop_spark.streaming.cdc import streamed_events
-
-    src = streamed_events(spark, sf_dir)  # shared 4-chunk landing
-    state: dict = {"res": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        b = _strat_topk(
-            batch_df.select(
-                "event_type",
-                "event_id",
-                "user_id",
-                F.md5(col("event_id").cast("string")).alias("_h"),
-            )
-        )
-        if state["res"] is None:
-            state["res"] = b.localCheckpoint()
-        else:
-            state["res"] = _strat_topk(
-                state["res"].unionByName(b)
-            ).localCheckpoint()
-
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _strat_topk(state["res"], with_rank=True).select(
-        "event_type",
-        "event_id",
-        "user_id",
-        col("rk").cast("long").alias("rk"),
-    )
-
-
-R20_CANDIDATE_QUERIES = {
-    "stream_stratified_reservoir": q_stream_stratified_reservoir,
-}
-
-# shared-oracle convention (documented per-row): the streaming fold is an
-# execution-strategy change with an identical result contract, so it pins
-# against the batch twin's SQL verbatim.
-R20_CANDIDATE_ORACLE = {
-    "stream_stratified_reservoir": _stratified_reservoir_oracle(),
-}
-
-
-# Poisson(1) inverse-CDF thresholds, computed ONCE here and consumed by
-# BOTH engines (Spark lit() and the oracle's f-string interpolation see
-# the identical Python double, so the replicate counts cannot diverge).
-def _poisson1_cdf(n: int) -> tuple:
-    import math
-
-    out, term, acc = [], math.exp(-1.0), 0.0
-    for k in range(n):
-        acc += term
-        out.append(acc)
-        term /= k + 1
-    return tuple(out)
-
-
-_P1_CDF = _poisson1_cdf(7)
-BOOT_B = 32  # bootstrap replicates
-BOOT_Z = 1.96
-
-
-def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap confidence interval for the per-segment mean —
-    THE shuffle-free form of the bootstrap at scale (Chamandy et al.,
-    "Estimating Uncertainty for Massive Data Streams", Google 2012):
-    instead of drawing B resamples (each a full-corpus shuffle), every
-    row draws its OWN per-replicate multiplicity m ~ Poisson(1) from a
-    hash — one pass, B partial aggregates, no resample materialized.
-    Multiplicities are DETERMINISTIC (inverse-CDF over a md5-derived
-    uniform, the ``weighted_sample_topk`` hash idiom), so membership of
-    every replicate — not just the summary — is engine-reproducible
-    and the DuckDB oracle pins the exact same draws; the CDF thresholds
-    are module-level Python doubles interpolated into both engines.
-
-    Shape: explode ×B (map-side compute, no extra scan), partial-agg
-    to (type, replicate) weighted means — the ONE exchange moves
-    O(|types|·B) moment tuples — then an O(|types|·B)-row fold to the
-    replicate-spread SE. The point estimate is the plain per-type mean
-    on its own, NARROWER scan (2 columns vs the replicate branch's 3 —
-    a second table pass, but 1/B-th of the branch that dominates). Float discipline: replicate
-    means and the base mean round to 6dp, SE rounds to 6dp, and the CI
-    derives from the ROUNDED components so both engines do identical
-    literal arithmetic. Poisson truncates at m=7 (P ≈ 8e-5 of draws
-    cap, identically on both sides — a bias of the estimator's
-    DEFINITION here, not an engine divergence)."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", "event_id", "value"
-    )
-    r = F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("r")
-    rep = ev.select("*", r)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        col("event_id").cast("string"),
-                        col("r").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(4294967296.0)
-    )
-    m = F.lit(7)
-    for k in range(6, -1, -1):
-        m = F.when(u < F.lit(_P1_CDF[k]), F.lit(k)).otherwise(m)
-    rep_means = (
-        rep.select("event_type", "r", m.alias("m"), "value")
-        .groupBy("event_type", "r")
-        .agg(
-            F.round(
-                F.sum(col("m") * col("value")) / F.sum(col("m")), 6
-            ).alias("rep_mean")
-        )
-    )
-    spread = rep_means.groupBy("event_type").agg(
-        (F.round(F.stddev_samp("rep_mean"), 6) + F.lit(0.0)).alias(
-            "boot_se"
-        )
-    )
-    base = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(F.avg("value"), 6).alias("mean_value"),
-    )
-    return base.join(F.broadcast(spread), "event_type").select(
-        "event_type",
-        "n_events",
-        "mean_value",
-        "boot_se",
-        F.round(
-            col("mean_value") - F.lit(BOOT_Z) * col("boot_se"), 6
-        ).alias("ci_lo"),
-        F.round(
-            col("mean_value") + F.lit(BOOT_Z) * col("boot_se"), 6
-        ).alias("ci_hi"),
-    )
-
-
-def _bootstrap_ci_oracle() -> str:
-    cases = " ".join(
-        f"WHEN u < {_P1_CDF[k]!r} THEN {k}" for k in range(7)
-    )
-    return f"""
-        WITH rep AS (
-          SELECT event_type, value, r,
-                 CAST(CAST(concat('0x', substr(md5(
-                        CAST(event_id AS VARCHAR) || ':' ||
-                        CAST(r AS VARCHAR)), 1, 8))
-                      AS BIGINT) AS DOUBLE) / 4294967296.0 AS u
-          FROM events
-          CROSS JOIN (SELECT unnest(generate_series(0, {BOOT_B - 1}))
-                      AS r) reps
-        ),
-        rep_means AS (
-          SELECT event_type, r,
-                 round(sum((CASE {cases} ELSE 7 END) * value)
-                       / sum(CASE {cases} ELSE 7 END), 6) AS rep_mean
-          FROM rep GROUP BY event_type, r
-        ),
-        spread AS (
-          SELECT event_type,
-                 round(stddev_samp(rep_mean), 6) + 0.0 AS boot_se
-          FROM rep_means GROUP BY event_type
-        ),
-        base AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n_events,
-                 round(avg(value), 6) AS mean_value
-          FROM events GROUP BY event_type
-        )
-        SELECT event_type, n_events, mean_value, boot_se,
-               round(mean_value - {BOOT_Z!r} * boot_se, 6) AS ci_lo,
-               round(mean_value + {BOOT_Z!r} * boot_se, 6) AS ci_hi
-        FROM base JOIN spread USING (event_type)
-    """
-
-
-R20_CANDIDATE_QUERIES["bootstrap_ci"] = q_bootstrap_ci
-R20_CANDIDATE_ORACLE["bootstrap_ci"] = _bootstrap_ci_oracle()
-
-
-def q_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING Poisson-bootstrap CI — the SEVENTH exactly-mergeable
-    streaming fold (counter-sum over bootstrap moments, next to bitmap
-    bit_or, HLL register-max, theta bottom-k, CMS counter-sum, the
-    rank-sketch merge, and the reservoir bottom-k): per batch, each
-    (type, replicate) contributes partial moment sums (Σ m·v, Σ m) and
-    each type its base sums (Σ v, n) — ALL plain additions, so folding
-    per-batch partials across ANY batch split equals the single-pass
-    sums and the batch twin's oracle pins the stream verbatim (the
-    round-6 float contract absorbs the fold's summation order exactly
-    as it absorbs partition count). What the stream maintains that no
-    other fold member does: a live STANDARD ERROR — uncertainty for an
-    unbounded metric stream in O(|types|·B) moment-row state, never
-    event rows. Replicate draws are the batch twin's hash-deterministic
-    Poisson(1) multiplicities, so re-chunking the corpus cannot change
-    any subject's draw — only WHERE its addend folds in.
-
-    Events stream as the shared 4-chunk landing (``maxFilesPerTrigger=1``
-    → 4 real micro-batches); the SE/CI readout runs post-fold on the
-    bounded state frame with the SAME rounded arithmetic as
-    ``q_bootstrap_ci``. Batch twin: ``q_bootstrap_ci``."""
-    from interop_spark.streaming.cdc import streamed_events
-
-    src = streamed_events(spark, sf_dir)  # shared 4-chunk landing
-
-    def _partials(batch_df: DataFrame) -> DataFrame:
-        r = F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("r")
-        rep = batch_df.select("event_type", "event_id", "value", r)
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            col("event_id").cast("string"),
-                            col("r").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            / F.lit(4294967296.0)
-        )
-        m = F.lit(7)
-        for k in range(6, -1, -1):
-            m = F.when(u < F.lit(_P1_CDF[k]), F.lit(k)).otherwise(m)
-        return (
-            rep.select("event_type", "r", m.alias("m"), "value")
-            .groupBy("event_type", "r")
-            .agg(
-                F.sum(col("m") * col("value")).alias("s_mv"),
-                F.sum("m").cast("long").alias("s_m"),
-            )
-        )
-
-    def _base(batch_df: DataFrame) -> DataFrame:
-        # n_val (NULL-skipping, avg's denominator) folded separately
-        # from n (count(*), the n_events output) so the stream matches
-        # the batch twin's avg(value) even if value carries NULLs
-        return batch_df.groupBy("event_type").agg(
-            F.sum("value").alias("s_v"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.count("value").cast("long").alias("n_val"),
-        )
-
-    state: dict = {"rep": None, "base": None}
-
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        p, b = _partials(batch_df), _base(batch_df)
-        if state["rep"] is None:
-            state["rep"], state["base"] = (
-                p.localCheckpoint(),
-                b.localCheckpoint(),
-            )
-        else:
-            state["rep"] = (
-                state["rep"]
-                .unionByName(p)
-                .groupBy("event_type", "r")
-                .agg(
-                    F.sum("s_mv").alias("s_mv"),
-                    F.sum("s_m").cast("long").alias("s_m"),
-                )
-                .localCheckpoint()
-            )
-            state["base"] = (
-                state["base"]
-                .unionByName(b)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("s_v").alias("s_v"),
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("n_val").cast("long").alias("n_val"),
-                )
-                .localCheckpoint()
-            )
-
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spread = (
-        state["rep"]
-        .select(
-            "event_type",
-            F.round(col("s_mv") / col("s_m"), 6).alias("rep_mean"),
-        )
-        .groupBy("event_type")
-        .agg(
-            (F.round(F.stddev_samp("rep_mean"), 6) + F.lit(0.0)).alias(
-                "boot_se"
-            )
-        )
-    )
-    base = state["base"].select(
-        "event_type",
-        col("n").alias("n_events"),
-        F.round(col("s_v") / col("n_val"), 6).alias("mean_value"),
-    )
-    return base.join(F.broadcast(spread), "event_type").select(
-        "event_type",
-        "n_events",
-        "mean_value",
-        "boot_se",
-        F.round(
-            col("mean_value") - F.lit(BOOT_Z) * col("boot_se"), 6
-        ).alias("ci_lo"),
-        F.round(
-            col("mean_value") + F.lit(BOOT_Z) * col("boot_se"), 6
-        ).alias("ci_hi"),
-    )
-
-
-R20_CANDIDATE_QUERIES["stream_bootstrap_ci"] = q_stream_bootstrap_ci
-# shared-oracle convention (documented per-row): the streaming fold is
-# an execution-strategy change with an identical result contract.
-R20_CANDIDATE_ORACLE["stream_bootstrap_ci"] = _bootstrap_ci_oracle()
-
-
-WP_PS = (0.5, 0.9, 0.99)
-
-
-def q_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source TOKEN-MASS percentiles of document length — the exact
-    WEIGHTED quantile (inverted-CDF convention: the smallest length L
-    with Σ weight[len ≤ L] ≥ p·W), weighting each document by its token
-    count. The curation statistic the unweighted rows can't give:
-    `percentile_agg` answers "the median DOCUMENT is this long";
-    this answers "half the corpus' TOKENS live in documents shorter
-    than this" — the number a truncation/packing threshold actually
-    needs (a few giant docs dominate token mass long before they
-    dominate doc count). Completes the registry's quantile spectrum on
-    the weighted axis: exact-unweighted (percentile_agg), mergeable
-    sketch (grouped_percentile_approx), now exact-weighted.
-
-    Determinism is INTEGER, not rounded-float: weights are token
-    counts, the cumulative and total weights are integer window sums
-    over the total (n_chars, doc_id) order, and the p·W comparison is
-    one exact double product per group — no summation-order ULP
-    anywhere (documented envelope: exact while W < 2^53). Scale shape:
-    one per-source window sort (the inherent cost of EXACT weighted
-    quantiles — the mergeable alternative is the sketch row above) and
-    a per-source fold; weights come from the same pruned scan, so the
-    corpus is read once."""
-    d = load(spark, sf_dir, "documents")
-    base = d.select(
-        "source", "doc_id", "n_chars", _token_weight().alias("wt")
-    )
-    w_cum = (
-        Window.partitionBy("source")
-        .orderBy("n_chars", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("source")
-    frame = base.select(
-        "source",
-        "n_chars",
-        "wt",
-        F.sum("wt").over(w_cum).alias("cumw"),
-        F.sum("wt").over(w_all).alias("tot"),
-    )
-    aggs = [
-        F.min(
-            F.when(
-                col("cumw") >= F.lit(p) * col("tot"), col("n_chars")
-            )
-        ).alias(f"len_p{int(p * 100)}")
-        for p in WP_PS
-    ]
-    return frame.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("wt").cast("long").alias("w_total"),
-        *aggs,
-    )
-
-
-def _weighted_percentile_oracle() -> str:
-    cols = ",\n               ".join(
-        f"min(CASE WHEN cumw >= {p!r} * tot THEN n_chars END)"
-        f" AS len_p{int(p * 100)}"
-        for p in WP_PS
-    )
-    return f"""
-        WITH d AS (
-          SELECT source, doc_id, n_chars,
-                 {_SEL_WEIGHT_SQL} AS wt
-          FROM documents
-        ),
-        f AS (
-          SELECT source, n_chars, wt,
-                 sum(wt) OVER (
-                   PARTITION BY source ORDER BY n_chars, doc_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) AS cumw,
-                 sum(wt) OVER (PARTITION BY source) AS tot
-          FROM d
-        )
-        SELECT source,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(wt) AS BIGINT) AS w_total,
-               {cols}
-        FROM f GROUP BY source
-    """
-
-
-R20_CANDIDATE_QUERIES["weighted_percentile"] = q_weighted_percentile
-R20_CANDIDATE_ORACLE["weighted_percentile"] = _weighted_percentile_oracle()
-
-
-def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT ROC-AUC of the lang-ID scoring signal as an is-English
-    classifier — the evaluation gate the classifier family lacked
-    (``classifier_train_steps`` trains, ``quality_classifier_filter``
-    infers, ``ndcg_bsq_eval`` grades retrieval; nothing graded a
-    CLASSIFIER). Mann–Whitney form with FULL tie correction:
-    AUC = [Σ_s p_s·(2·cum_neg_below(s) + n_s)] / (2·P·N) — the
-    mid-rank identity — where s is the English-stopword-fraction score
-    in integer PPM (integer ``div``, the survival_km discipline), so
-    every quantity up to the final division is exact integer
-    arithmetic on both engines and ties (heavy at ppm granularity)
-    are handled by construction, not by float rank averaging. The
-    final division is one double op on identical integers; a
-    single-class corpus (P or N zero) is CASE-guarded to NULL on both
-    engines (Spark IEEE x/0=Inf vs DuckDB NULL — the ab_test_zstat
-    degenerate-fixture lesson). On THIS synthetic corpus the signal
-    carries no real separation (AUC ≈ 0.5) — the operator is the
-    deliverable, the fixture exercises it (the benford_first_digit
-    convention).
-
-    Scale shape: one corpus pass rolls up to the SCORE GRID — bounded
-    by ppm granularity (≤ 1e6 + 1 rows), independent of corpus size —
-    and the rank window + final fold run on that bounded frame (the
-    survival_km posture). Scorer twin: ``operators/text.
-    stopword_count_of_tokens`` (the lang_id scorer), SQL side via
-    ``pipeline._dk_stop_count`` — the established parity pair."""
-    from interop_spark.operators.text import stopword_count_of_tokens
-
-    d = load(spark, sf_dir, "documents").where(col("text").isNotNull())
-    toks = tx_tokens(col("text"))
-    base = d.select(
-        F.when(col("lang") == "en", 1).otherwise(0).alias("y"),
-        stopword_count_of_tokens(toks, "en").alias("sw"),
-        F.greatest(F.size(toks), F.lit(1)).alias("nt"),
-    ).select("y", F.expr("(sw * 1000000) div nt").alias("s"))
-    grid = base.groupBy("s").agg(
-        F.sum("y").cast("long").alias("p_s"),
-        (F.count(F.lit(1)) - F.sum("y")).cast("long").alias("n_s"),
-    )
-    w_prev = Window.orderBy("s").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    r = grid.select(
-        "p_s",
-        "n_s",
-        F.coalesce(F.sum("n_s").over(w_prev), F.lit(0)).alias("cum_neg"),
-    )
-    return r.agg(
-        F.sum("p_s").cast("long").alias("n_pos"),
-        F.sum("n_s").cast("long").alias("n_neg"),
-        F.count(F.lit(1)).cast("long").alias("n_scores"),
-        F.when(
-            (F.sum("p_s") > 0) & (F.sum("n_s") > 0),
-            F.round(
-                F.sum(
-                    col("p_s") * (F.lit(2) * col("cum_neg") + col("n_s"))
-                ).cast("double")
-                / (
-                    F.lit(2.0)
-                    * F.sum("p_s").cast("double")
-                    * F.sum("n_s").cast("double")
-                ),
-                6,
-            )
-            + F.lit(0.0),
-        ).alias("auc"),
-    )
-
-
-def _classifier_auc_oracle() -> str:
-    from interop_spark.queries.pipeline import _dk_stop_count
-
-    sw = _dk_stop_count("en")
-    return f"""
-        WITH t AS (
-          SELECT lang, {_SEL_TOKENS} AS toks
-          FROM documents WHERE text IS NOT NULL
-        ),
-        d AS (
-          SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-                 ({sw} * 1000000) // greatest(len(toks), 1) AS s
-          FROM t
-        ),
-        grid AS (
-          SELECT s, CAST(sum(y) AS BIGINT) AS p_s,
-                 CAST(count(*) - sum(y) AS BIGINT) AS n_s
-          FROM d GROUP BY 1
-        ),
-        r AS (
-          SELECT p_s, n_s,
-                 coalesce(sum(n_s) OVER (
-                   ORDER BY s
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ), 0) AS cum_neg
-          FROM grid
-        )
-        SELECT CAST(sum(p_s) AS BIGINT) AS n_pos,
-               CAST(sum(n_s) AS BIGINT) AS n_neg,
-               CAST(count(*) AS BIGINT) AS n_scores,
-               CASE WHEN sum(p_s) > 0 AND sum(n_s) > 0
-                    THEN round(CAST(sum(p_s * (2 * cum_neg + n_s))
-                                    AS DOUBLE)
-                               / (2.0 * CAST(sum(p_s) AS DOUBLE)
-                                      * CAST(sum(n_s) AS DOUBLE)), 6)
-                         + 0.0
-               END AS auc
-        FROM r
-    """
-
-
-R20_CANDIDATE_QUERIES["classifier_auc"] = q_classifier_auc
-R20_CANDIDATE_ORACLE["classifier_auc"] = _classifier_auc_oracle()

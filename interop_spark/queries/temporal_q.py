@@ -360,11 +360,9 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC upsert — the foreachBatch MERGE pattern the
     reference's Delta sinks run in production (change records arrive as
     a stream; each micro-batch merges into an accumulating target): the
-    events table is re-landed as FOUR chunk files, streamed with
-    ``maxFilesPerTrigger=1`` so availableNow executes 4 real
-    micro-batches, and every batch applies the CONDITIONAL merge clause
-    (``WHEN MATCHED AND s is newer THEN UPDATE SET *``,
-    ``WHEN NOT MATCHED INSERT *`` — `operators/merge.py:
+    events stream as 4 real micro-batches, and every batch applies the
+    CONDITIONAL merge clause (``WHEN MATCHED AND s is newer THEN UPDATE
+    SET *``, ``WHEN NOT MATCHED INSERT *`` — `operators/merge.py:
     merge_into_conditional`) with a last-writer-wins guard on
     ``(ts, event_id)``.
 
@@ -374,37 +372,11 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly the batch latest-event-per-user argmax the oracle
     computes. A reordered delivery or a re-split backfill changes
     nothing; THAT is the idempotence contract a CDC consumer relies on.
+    Scale shape: see ``streaming/cdc.py:lww_winners``/``lww_merge``."""
+    from interop_spark.streaming.cdc import fold_events, lww_merge, lww_winners
 
-    Landing + upsert live in ``streaming/cdc.py`` (shared with the
-    multi-batch pytest so the two copies cannot drift); the landing is
-    marker-idempotent, so repeated bench/driver runs reuse one copy.
-    Scale shape: see ``lww_upsert_sink``."""
-    import os
-
-    from interop_spark.io import load
-    from interop_spark.streaming.cdc import land_event_chunks, lww_upsert_sink
-
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
-    )
-    key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    flat = land_event_chunks(ev, 4, key)
-
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-
-    state: dict = {}
-    q = (
-        src.writeStream.foreachBatch(lww_upsert_sink(state))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return state["tgt"].select(
+    tgt = fold_events(spark, sf_dir, lww_winners, lww_merge)
+    return tgt.select(
         "user_id",
         col("ts").alias("last_ts"),
         col("event_id").alias("last_event_id"),
@@ -415,12 +387,10 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING HyperLogLog — distinct-user cardinality maintained
-    across micro-batches by REGISTER MERGE (round-13): the events table
-    streams as the same 4-chunk landing the CDC upsert uses
-    (``maxFilesPerTrigger=1`` → 4 real micro-batches), each batch
-    computes its own ≤256-row register frame, and ``foreachBatch``
-    folds them with per-bucket max. Mergeability (max is associative
-    and commutative) makes the final registers — and therefore the
+    across micro-batches by REGISTER MERGE: each of the 4 micro-batches
+    computes its own ≤256-row register frame, and the fold merges them
+    with per-bucket max. Mergeability (max is associative and
+    commutative) makes the final registers — and therefore the
     estimate — EQUAL to the single-pass batch sketch for ANY batch
     split, which is exactly what the DuckDB oracle computes over all
     events at once: the sketch sibling of ``stream_merge_upsert``'s
@@ -429,40 +399,19 @@ def q_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is O(m): only register frames are checkpointed between
     batches, never event rows — the property that lets a production
     stream keep an unbounded-cardinality counter in fixed memory."""
-    import os
-
     from interop_spark.operators.sketch import hll_estimate, hll_merge, hll_registers
-    from interop_spark.io import load
-    from interop_spark.streaming.cdc import land_event_chunks
+    from interop_spark.streaming.cdc import fold_events
 
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
+    regs = fold_events(
+        spark,
+        sf_dir,
+        lambda b: hll_registers(b, col("user_id")),
+        hll_merge,
     )
-    key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    flat = land_event_chunks(ev, 4, key)  # shared with stream_merge_upsert
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+    est = hll_estimate(regs)
+    exact = load(spark, sf_dir, "events").agg(
+        F.countDistinct("user_id").alias("n_exact")
     )
-    state: dict = {"regs": None}
-
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        regs_b = hll_registers(batch_df, col("user_id"))
-        if state["regs"] is None:
-            state["regs"] = regs_b.localCheckpoint()
-        else:
-            state["regs"] = hll_merge(state["regs"], regs_b).localCheckpoint()
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    est = hll_estimate(state["regs"])
-    exact = ev.agg(F.countDistinct("user_id").alias("n_exact"))
     return est.crossJoin(F.broadcast(exact)).select(
         col("n_exact").cast("long").alias("n_exact"),
         "hll_estimate",
@@ -472,58 +421,32 @@ def q_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING quantile sketch — per-domain-threshold math on an
-    UNBOUNDED score stream in O(capacity) state (round-14): the events
-    table streams as the same 4-chunk landing the CDC upsert and the
-    HLL twin use, each micro-batch builds its own hash-level rank
-    sketch (histogram + capacity-bounded survivors), and
-    ``foreachBatch`` folds them with ``rank_sketch_merge``. The merge
-    is PROVABLY exact, not approximate-compounding: histograms add, the
-    merged threshold is monotone under union, and union-then-refilter
-    equals the one-pass sketch for ANY batch split — so the oracle is
-    simply the batch sketch over all events (the same SQL as
+    UNBOUNDED score stream in O(capacity) state: each micro-batch
+    builds its own hash-level rank sketch (histogram +
+    capacity-bounded survivors), and the fold combines them with
+    ``rank_sketch_merge``. The merge is PROVABLY exact, not
+    approximate-compounding: histograms add, the merged threshold is
+    monotone under union, and union-then-refilter equals the one-pass
+    sketch for ANY batch split — so the oracle is simply the batch
+    sketch over all events (the same SQL as
     ``quantile_sketch_estimate`` minus the true-rank audit).
 
     State between batches is O(capacity + levels): survivor values and
     a ≤33-row histogram, never event rows."""
-    import os
-
     from interop_spark.operators.sketch import (
         rank_sketch_build,
         rank_sketch_merge,
         rank_sketch_quantiles,
     )
-    from interop_spark.io import load
-    from interop_spark.streaming.cdc import land_event_chunks
+    from interop_spark.streaming.cdc import fold_events
 
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
+    sk = fold_events(
+        spark,
+        sf_dir,
+        lambda b: rank_sketch_build(b, col("value"), col("event_id")),
+        rank_sketch_merge,
     )
-    key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    flat = land_event_chunks(ev, 4, key)  # shared with stream_merge_upsert
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"sk": None}
-
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        sk_b = rank_sketch_build(batch_df, col("value"), col("event_id"))
-        if state["sk"] is None:
-            state["sk"] = sk_b.localCheckpoint()
-        else:
-            state["sk"] = rank_sketch_merge(
-                state["sk"], sk_b
-            ).localCheckpoint()
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return rank_sketch_quantiles(state["sk"])
+    return rank_sketch_quantiles(sk)
 
 
 QUERIES = {

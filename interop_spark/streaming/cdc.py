@@ -1,7 +1,9 @@
-"""CDC fixture landing + last-writer-wins upsert, shared by the
-``stream_merge_upsert`` query (`queries/temporal_q.py`) and its
-multi-batch pytest (`tests/test_streaming.py`) — extracted so the two
-copies cannot drift (ADVICE r12).
+"""The events fixture as a stream, and the folds run over it.
+
+``fold_events`` is the one place that knows how the events fixture is
+landed, replayed as micro-batches and folded into state; every
+streaming query passes it a partial/merge pair. ``lww_winners`` +
+``lww_merge`` are the last-writer-wins CDC upsert (``stream_merge_upsert``).
 
 Reference surface: the foreachBatch-MERGE pattern the reference's Delta
 sinks run in production (`01_dbignite_sample.py:72,112` write Delta
@@ -12,6 +14,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,15 +29,11 @@ LWW_GUARD = "s.ts > t.ts OR (s.ts = t.ts AND s.event_id > t.event_id)"
 
 
 def streamed_events(spark, sf_dir: str):
-    """The shared events-as-stream preamble: select the canonical
-     5-column frame, land it as the shared 4-chunk marker-idempotent
-    fixture (one /tmp copy per fixture content, reused by every
-    streaming twin), and return a ``readStream`` source that replays
-    it as 4 real micro-batches (``maxFilesPerTrigger=1``). Extracted
-    (r19 review) so the landing contract — chunk count, column set,
-    schema handling — lives once; the pre-r19 streaming rows carry the
-    same block inline and migrate here as window rotation brings them
-    in-window."""
+    """The events-as-stream source: select the canonical 5-column
+    frame, land it as the 4-chunk marker-idempotent fixture (one /tmp
+    copy per fixture content, shared by every streaming query), and
+    return a ``readStream`` source that replays it as 4 real
+    micro-batches (``maxFilesPerTrigger=1``)."""
     from interop_spark.io import load
 
     ev = load(spark, sf_dir, "events").select(
@@ -48,6 +47,40 @@ def streamed_events(spark, sf_dir: str):
         .option("maxFilesPerTrigger", 1)
         .parquet(flat)
     )
+
+
+def fold_events(
+    spark,
+    sf_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Fold the streamed events into state and return the final state:
+    ``partial(batch)`` for the first micro-batch, then
+    ``merge(state, partial(batch))`` for each later one. Each new state
+    is localCheckpoint-ed, so plan depth stays O(1) in the number of
+    batches and state between batches is whatever ``partial`` keeps,
+    never event rows. For any batch split the result equals
+    ``partial`` over all events whenever ``merge(partial(a),
+    partial(b))`` equals ``partial(a ∪ b)`` — true of every streaming
+    fold in the registry."""
+    state = None
+
+    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
+        nonlocal state
+        part = partial(batch_df)
+        state = (part if state is None else merge(state, part)).localCheckpoint()
+
+    q = (
+        streamed_events(spark, sf_dir)
+        .writeStream.foreachBatch(_fold)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    if state is None:
+        raise ValueError("the events stream delivered no micro-batch")
+    return state
 
 
 def land_event_chunks(df: DataFrame, n: int, cache_key: str) -> str:
@@ -117,42 +150,31 @@ def land_event_chunks(df: DataFrame, n: int, cache_key: str) -> str:
     return flat
 
 
-def lww_upsert_sink(state: dict):
-    """Build the ``foreachBatch`` closure applying the conditional MERGE
-    under :data:`LWW_GUARD`; accumulates the target into
-    ``state['tgt']`` and counts micro-batches in ``state['batches']``.
+def lww_winners(batch_df: DataFrame) -> DataFrame:
+    """Per-user latest change of one batch by (ts, event_id): ONE
+    partial-aggregated shuffle on user_id (map tasks emit at most one
+    row per user)."""
+    return (
+        batch_df.groupBy("user_id")
+        .agg(
+            F.max(F.struct("ts", "event_id", "event_type", "value")).alias(
+                "m"
+            )
+        )
+        .select("user_id", "m.ts", "m.event_id", "m.event_type", "m.value")
+    )
 
-    Scale shape: per batch, ONE partial-aggregated winners shuffle on
-    user_id (map tasks emit ≤1 row per user) + the merge's equi-joins on
-    the same key; the target is localCheckpoint-ed each batch so plan
-    depth stays O(1) in the number of batches (the parquet-table analog
-    of Delta's transactional rewrite).
-    """
+
+def lww_merge(target: DataFrame, winners: DataFrame) -> DataFrame:
+    """Conditional MERGE of a batch's winners into the target under
+    :data:`LWW_GUARD` (equi-joins on user_id; the parquet-table analog
+    of Delta's transactional rewrite)."""
     from interop_spark.operators.merge import merge_into_conditional
 
-    state.setdefault("tgt", None)
-    state.setdefault("batches", 0)
-
-    def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
-        state["batches"] += 1
-        winners = (
-            batch_df.groupBy("user_id")
-            .agg(
-                F.max(
-                    F.struct("ts", "event_id", "event_type", "value")
-                ).alias("m")
-            )
-            .select("user_id", "m.ts", "m.event_id", "m.event_type", "m.value")
-        )
-        if state["tgt"] is None:
-            state["tgt"] = winners.localCheckpoint()
-        else:
-            state["tgt"] = merge_into_conditional(
-                state["tgt"],
-                winners,
-                ["user_id"],
-                matched_condition=LWW_GUARD,
-                source_unique=True,
-            ).localCheckpoint()
-
-    return _upsert
+    return merge_into_conditional(
+        target,
+        winners,
+        ["user_id"],
+        matched_condition=LWW_GUARD,
+        source_unique=True,
+    )

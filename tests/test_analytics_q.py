@@ -921,8 +921,7 @@ def test_staged_bitmap_rows_plan_shape(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# round-20 staged candidates (the staging convention: full driver
-# oracle contract proven now, registration + window next round)
+# Rows outside the query registry (tests/unregistered_queries.py)
 # --------------------------------------------------------------------------
 
 def test_column_profile_staged_parity_and_semantics(spark, sf_dir):
@@ -932,17 +931,16 @@ def test_column_profile_staged_parity_and_semantics(spark, sf_dir):
     populated on exactly one side)."""
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.analytics_q import (
+    from tests import unregistered_queries as uq
+    from tests.unregistered_queries import (
         PROFILE_DATE_COLS,
         PROFILE_NUM_COLS,
         PROFILE_STR_COLS,
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
     )
 
-    sdf = R20_CANDIDATE_QUERIES["column_profile"](spark, sf_dir).toPandas()
+    sdf = uq.QUERIES["column_profile"](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["column_profile"]).df()
+    ddf = con.execute(uq.ORACLE["column_profile"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -962,10 +960,10 @@ def test_column_profile_plan_no_expand(spark, sf_dir):
     """Plan pin: the per-column-leg shape — NO Expand (the one-pass
     multi-count-distinct rewrite's x|columns| row multiplier), every
     leg's scan pruned to its single column."""
-    from interop_spark.queries.analytics_q import R20_CANDIDATE_QUERIES
+    from tests import unregistered_queries as uq
 
     ex = (
-        R20_CANDIDATE_QUERIES["column_profile"](spark, sf_dir)
+        uq.QUERIES["column_profile"](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -984,15 +982,12 @@ def test_value_histogram_staged_parity_and_mass(spark, sf_dir):
     from tests.test_oracle_parity import _canon, _duck
 
     from interop_spark.io import load
-    from interop_spark.queries.analytics_q import (
-        HIST_BINS,
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
+    from tests.unregistered_queries import HIST_BINS
 
-    sdf = R20_CANDIDATE_QUERIES["value_histogram"](spark, sf_dir).toPandas()
+    sdf = uq.QUERIES["value_histogram"](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["value_histogram"]).df()
+    ddf = con.execute(uq.ORACLE["value_histogram"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1007,16 +1002,13 @@ def test_interarrival_quantiles_staged_parity(spark, sf_dir):
     positive (ts ties broken by unique event_id keep gaps >= 0)."""
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.analytics_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["interarrival_quantiles"](
+    sdf = uq.QUERIES["interarrival_quantiles"](
         spark, sf_dir
     ).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["interarrival_quantiles"]).df()
+    ddf = con.execute(uq.ORACLE["interarrival_quantiles"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1032,14 +1024,11 @@ def test_cohort_ltv_curve_staged_parity_and_monotone(spark, sf_dir):
     rounded cell sum, offsets non-negative)."""
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.analytics_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["cohort_ltv_curve"](spark, sf_dir).toPandas()
+    sdf = uq.QUERIES["cohort_ltv_curve"](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["cohort_ltv_curve"]).df()
+    ddf = con.execute(uq.ORACLE["cohort_ltv_curve"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1059,16 +1048,13 @@ def test_benford_first_digit_staged_parity_and_digits(spark, sf_dir):
 
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.analytics_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["benford_first_digit"](
+    sdf = uq.QUERIES["benford_first_digit"](
         spark, sf_dir
     ).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["benford_first_digit"]).df()
+    ddf = con.execute(uq.ORACLE["benford_first_digit"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1088,10 +1074,7 @@ def test_value_histogram_degenerate_constant_value(spark, tmp_path):
     oracle."""
     import duckdb
 
-    from interop_spark.queries.analytics_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
     import datetime
 
@@ -1104,12 +1087,12 @@ def test_value_histogram_degenerate_constant_value(spark, tmp_path):
     )
     d = str(tmp_path / "degenerate")
     df.coalesce(1).write.parquet(d + "/events.parquet")
-    sdf = R20_CANDIDATE_QUERIES["value_histogram"](spark, d).toPandas()
+    sdf = uq.QUERIES["value_histogram"](spark, d).toPandas()
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet/*.parquet'"
     )
-    ddf = con.execute(R20_CANDIDATE_ORACLE["value_histogram"]).df()
+    ddf = con.execute(uq.ORACLE["value_histogram"]).df()
     con.close()
     from tests.test_oracle_parity import _canon
 
@@ -1124,21 +1107,18 @@ def test_benford_zero_value_row_is_dropped_not_fatal(spark, tmp_path):
     instead of an ANSI CAST_INVALID_INPUT under a plain session."""
     import duckdb
 
-    from interop_spark.queries.analytics_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
     rows = [(float(v),) for v in (0.0, 123.45, 20.07, 9.9, 123.45)]
     df = spark.createDataFrame(rows, "o_totalprice double")
     d = str(tmp_path / "zeroprice")
     df.coalesce(1).write.parquet(d + "/orders.parquet")
-    sdf = R20_CANDIDATE_QUERIES["benford_first_digit"](spark, d).toPandas()
+    sdf = uq.QUERIES["benford_first_digit"](spark, d).toPandas()
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW orders AS SELECT * FROM '{d}/orders.parquet/*.parquet'"
     )
-    ddf = con.execute(R20_CANDIDATE_ORACLE["benford_first_digit"]).df()
+    ddf = con.execute(uq.ORACLE["benford_first_digit"]).df()
     con.close()
     from tests.test_oracle_parity import _canon
 
@@ -1154,18 +1134,14 @@ def test_funnel_time_to_convert_staged_parity(spark, sf_dir):
     `funnel_conversion`."""
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.analytics_q import (
-        FUNNEL_HORIZON_DAYS,
-        QUERIES,
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from interop_spark.queries.analytics_q import FUNNEL_HORIZON_DAYS, QUERIES
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["funnel_time_to_convert"](
+    sdf = uq.QUERIES["funnel_time_to_convert"](
         spark, sf_dir
     ).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["funnel_time_to_convert"]).df()
+    ddf = con.execute(uq.ORACLE["funnel_time_to_convert"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1188,15 +1164,12 @@ def test_daily_value_trend_staged_parity_and_fit(spark, sf_dir):
     from tests.test_oracle_parity import _canon, _duck
 
     from interop_spark.io import load
-    from interop_spark.queries.analytics_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-        TREND_EPOCH,
-    )
+    from tests import unregistered_queries as uq
+    from tests.unregistered_queries import TREND_EPOCH
 
-    sdf = R20_CANDIDATE_QUERIES["daily_value_trend"](spark, sf_dir).toPandas()
+    sdf = uq.QUERIES["daily_value_trend"](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["daily_value_trend"]).df()
+    ddf = con.execute(uq.ORACLE["daily_value_trend"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1226,7 +1199,7 @@ def test_daily_value_trend_partitioning_invariant(spark, sf_dir):
     trend row's 6dp-rounded daily means + 5dp-rounded moments must
     absorb it (the round-6 float contract — the driver runs at
     whatever parallelism it likes)."""
-    from interop_spark.queries.analytics_q import R20_CANDIDATE_QUERIES
+    from tests import unregistered_queries as uq
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -1237,7 +1210,7 @@ def test_daily_value_trend_partitioning_invariant(spark, sf_dir):
                 sorted(
                     map(
                         tuple,
-                        R20_CANDIDATE_QUERIES["daily_value_trend"](
+                        uq.QUERIES["daily_value_trend"](
                             spark, sf_dir
                         ).collect(),
                     )
@@ -1254,10 +1227,10 @@ def test_daily_value_trend_plan_two_level_moment_agg(spark, sf_dir):
     fold), the regression moving as partial_regr_* moment tuples (map-
     side fold — O(|types|) tuples cross the second exchange, never
     daily rows), and the scan pruned to the three live columns."""
-    from interop_spark.queries.analytics_q import R20_CANDIDATE_QUERIES
+    from tests import unregistered_queries as uq
 
     ex = (
-        R20_CANDIDATE_QUERIES["daily_value_trend"](spark, sf_dir)
+        uq.QUERIES["daily_value_trend"](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -1287,21 +1260,17 @@ def test_survival_km_staged_parity_and_estimator(spark, sf_dir):
     from tests.test_oracle_parity import _canon, _duck
 
     from interop_spark.io import load
-    from interop_spark.queries.analytics_q import (
-        _KM_HOUR_US,
-        KM_OBS_HOURS,
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
+    from tests.unregistered_queries import KM_OBS_HOURS, _KM_HOUR_US
 
     sdf = (
-        R20_CANDIDATE_QUERIES["survival_km"](spark, sf_dir)
+        uq.QUERIES["survival_km"](spark, sf_dir)
         .toPandas()
         .sort_values("dur_hr")
         .reset_index(drop=True)
     )
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["survival_km"]).df()
+    ddf = con.execute(uq.ORACLE["survival_km"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1354,10 +1323,10 @@ def test_survival_km_plan_single_corpus_pass(spark, sf_dir):
     user-keyed exchange — the one corpus pass and its user shuffle are
     paid once at construction; everything downstream (stats broadcast,
     duration rollup, ordered windows) runs on bounded frames."""
-    from interop_spark.queries.analytics_q import R20_CANDIDATE_QUERIES
+    from tests import unregistered_queries as uq
 
     ex = (
-        R20_CANDIDATE_QUERIES["survival_km"](spark, sf_dir)
+        uq.QUERIES["survival_km"](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

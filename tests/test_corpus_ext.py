@@ -222,13 +222,11 @@ def test_theta_merge_equals_one_pass(spark):
 
 def test_theta_streaming_fold_equals_batch(spark, sf_dir):
     """Streaming readiness of the theta sketch: folding per-micro-batch
-    sketches with `theta_merge` across a real 4-chunk file stream
-    (`land_event_chunks`, the stream_hll_users landing) yields the
+    sketches with `theta_merge` across the real 4-chunk events stream
+    (`fold_events`, the stream_theta_distinct fold) yields the
     IDENTICAL sketch as the one-pass batch build over all events —
     per (event_type) group, distinct user_id keys. O(groups * k) state
-    between batches, never event rows. Registry row candidate for r16
-    (this round's check window is full)."""
-    from pyspark.sql import functions as F
+    between batches, never event rows."""
     from pyspark.sql.functions import col
 
     from interop_spark.io import load
@@ -237,7 +235,7 @@ def test_theta_streaming_fold_equals_batch(spark, sf_dir):
         theta_merge,
         theta_sketch,
     )
-    from interop_spark.streaming.cdc import land_event_chunks
+    from interop_spark.streaming.cdc import fold_events
 
     k = 16
     ev = load(spark, sf_dir, "events").select(
@@ -247,36 +245,21 @@ def test_theta_streaming_fold_equals_batch(spark, sf_dir):
         theta_items(ev, col("event_type"), col("user_id")), k=k
     )
 
-    key = "theta-" + (sf_dir.rstrip("/").rsplit("/", 1)[-1] or "sf")
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state: dict = {"kept": None}
+    calls = []
 
-    def _fold(batch_df, _batch_id):
+    def _sketch(batch_df):
+        calls.append(1)
         kb, _ = theta_sketch(
             theta_items(batch_df, col("event_type"), col("user_id")), k=k
         )
-        if state["kept"] is None:
-            state["kept"] = kb.localCheckpoint()
-        else:
-            mk, _ = theta_merge(state["kept"], kb, k=k)
-            state["kept"] = mk.localCheckpoint()
+        return kb
 
-    q = (
-        src.writeStream.foreachBatch(_fold)
-        .trigger(availableNow=True)
-        .start()
+    folded = fold_events(
+        spark, sf_dir, _sketch, lambda st, kb: theta_merge(st, kb, k=k)[0]
     )
-    q.processAllAvailable()  # deterministic barrier (no fixed-clock race)
-    q.stop()
-    q.awaitTermination()
+    assert len(calls) == 4, len(calls)
 
-    m_kept, m_theta = theta_merge(state["kept"], state["kept"], k=k)
+    m_kept, m_theta = theta_merge(folded, folded, k=k)
     assert sorted(map(tuple, m_kept.collect())) == sorted(
         map(tuple, one_kept.collect())
     )

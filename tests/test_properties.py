@@ -951,15 +951,15 @@ _RES_ROWS = st.lists(
 @settings(max_examples=15, deadline=None)
 @given(rows=_RES_ROWS, k=st.integers(1, 5))
 def test_stream_reservoir_fold_split_independent(sparkp, rows, k):
-    """The streaming reservoir's fold (`selection_q._strat_topk` per
+    """The streaming reservoir's fold (`_strat_topk` per
     batch, then topk(state ∪ topk(batch))) equals the single-pass
     top-k for ANY batch split and ANY k — the merge-exactness claim
-    `q_stream_stratified_reservoir` states for the driver's fixed
-    4-chunk landing, proven here over arbitrary frames/splits/ks."""
-    from interop_spark.queries import selection_q
+    `q_stream_stratified_reservoir` states for the fixed 4-chunk
+    landing, proven here over arbitrary frames/splits/ks."""
+    from tests import unregistered_queries as uq
 
-    old_k = selection_q.STRAT_K
-    selection_q.STRAT_K = k
+    old_k = uq.STRAT_K
+    uq.STRAT_K = k
     try:
         batches: dict = {}
         for g, key, b in rows:
@@ -970,20 +970,20 @@ def test_stream_reservoir_fold_split_independent(sparkp, rows, k):
             df = sparkp.createDataFrame(
                 batches[b], ["event_type", "event_id", "_h"]
             )
-            part = selection_q._strat_topk(df)
+            part = uq._strat_topk(df)
             state = (
                 part
                 if state is None
-                else selection_q._strat_topk(state.unionByName(part))
+                else uq._strat_topk(state.unionByName(part))
             )
         got = {
             (r.event_type, r.event_id, r.rk)
-            for r in selection_q._strat_topk(
+            for r in uq._strat_topk(
                 state, with_rank=True
             ).collect()
         }
     finally:
-        selection_q.STRAT_K = old_k
+        uq.STRAT_K = old_k
     by_g: dict = {}
     for g, key, _b in rows:
         by_g.setdefault(str(g), []).append(key)

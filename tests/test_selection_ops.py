@@ -825,8 +825,7 @@ def test_stratified_reservoir_plan_rank_limit_pushdown(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# round-20 staged candidate (the staging convention: full driver oracle
-# contract proven now, registration + window next round)
+# Rows outside the query registry (tests/unregistered_queries.py)
 # --------------------------------------------------------------------------
 
 def test_stream_stratified_reservoir_staged_parity(spark, sf_dir):
@@ -839,19 +838,15 @@ def test_stream_stratified_reservoir_staged_parity(spark, sf_dir):
     either execution strategy)."""
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.selection_q import (
-        QUERIES,
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-        STRAT_K,
-    )
+    from interop_spark.queries.selection_q import QUERIES, STRAT_K
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["stream_stratified_reservoir"](
+    sdf = uq.QUERIES["stream_stratified_reservoir"](
         spark, sf_dir
     ).toPandas()
     con = _duck(sf_dir)
     ddf = con.execute(
-        R20_CANDIDATE_ORACLE["stream_stratified_reservoir"]
+        uq.ORACLE["stream_stratified_reservoir"]
     ).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
@@ -873,7 +868,7 @@ def test_strat_topk_plan_rank_limit_pushdown(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from interop_spark.io import load
-    from interop_spark.queries.selection_q import _strat_topk
+    from tests.unregistered_queries import _strat_topk
 
     ev = load(spark, sf_dir, "events").select(
         "event_type",
@@ -900,14 +895,11 @@ def test_bootstrap_ci_staged_parity_and_coverage(spark, sf_dir):
     from tests.test_oracle_parity import _canon, _duck
 
     from interop_spark.io import load
-    from interop_spark.queries.selection_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["bootstrap_ci"](spark, sf_dir).toPandas()
+    sdf = uq.QUERIES["bootstrap_ci"](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["bootstrap_ci"]).df()
+    ddf = con.execute(uq.ORACLE["bootstrap_ci"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -928,7 +920,7 @@ def test_bootstrap_ci_staged_parity_and_coverage(spark, sf_dir):
 def test_bootstrap_ci_partitioning_invariant(spark, sf_dir):
     """The staged bootstrap row's rounded replicate means / SE / CI
     must absorb summation-order changes (the round-6 float contract)."""
-    from interop_spark.queries.selection_q import R20_CANDIDATE_QUERIES
+    from tests import unregistered_queries as uq
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -939,7 +931,7 @@ def test_bootstrap_ci_partitioning_invariant(spark, sf_dir):
                 sorted(
                     map(
                         tuple,
-                        R20_CANDIDATE_QUERIES["bootstrap_ci"](
+                        uq.QUERIES["bootstrap_ci"](
                             spark, sf_dir
                         ).collect(),
                     )
@@ -958,10 +950,10 @@ def test_bootstrap_ci_plan_mapside_explode(spark, sf_dir):
     columns."""
     import re
 
-    from interop_spark.queries.selection_q import R20_CANDIDATE_QUERIES
+    from tests import unregistered_queries as uq
 
     ex = (
-        R20_CANDIDATE_QUERIES["bootstrap_ci"](spark, sf_dir)
+        uq.QUERIES["bootstrap_ci"](spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -987,20 +979,17 @@ def test_stream_bootstrap_ci_staged_parity(spark, sf_dir):
     the stream result equals the batch twin row-for-row."""
     from tests.test_oracle_parity import _canon, _duck
 
-    from interop_spark.queries.selection_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["stream_bootstrap_ci"](
+    sdf = uq.QUERIES["stream_bootstrap_ci"](
         spark, sf_dir
     ).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["stream_bootstrap_ci"]).df()
+    ddf = con.execute(uq.ORACLE["stream_bootstrap_ci"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
-    bdf = R20_CANDIDATE_QUERIES["bootstrap_ci"](spark, sf_dir).toPandas()
+    bdf = uq.QUERIES["bootstrap_ci"](spark, sf_dir).toPandas()
     assert _canon(sdf) == _canon(bdf)
 
 
@@ -1014,18 +1003,15 @@ def test_weighted_percentile_staged_parity_and_reference(spark, sf_dir):
 
     from interop_spark.io import load
     from interop_spark.operators.text import tokens as tx_tokens
-    from interop_spark.queries.selection_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-        WP_PS,
-    )
+    from tests import unregistered_queries as uq
+    from tests.unregistered_queries import WP_PS
     from pyspark.sql import functions as F
 
-    sdf = R20_CANDIDATE_QUERIES["weighted_percentile"](
+    sdf = uq.QUERIES["weighted_percentile"](
         spark, sf_dir
     ).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["weighted_percentile"]).df()
+    ddf = con.execute(uq.ORACLE["weighted_percentile"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)
@@ -1072,14 +1058,11 @@ def test_classifier_auc_staged_parity_and_reference(spark, sf_dir):
 
     from interop_spark.io import load
     from interop_spark.operators.text import STOPWORDS
-    from interop_spark.queries.selection_q import (
-        R20_CANDIDATE_ORACLE,
-        R20_CANDIDATE_QUERIES,
-    )
+    from tests import unregistered_queries as uq
 
-    sdf = R20_CANDIDATE_QUERIES["classifier_auc"](spark, sf_dir).toPandas()
+    sdf = uq.QUERIES["classifier_auc"](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    ddf = con.execute(R20_CANDIDATE_ORACLE["classifier_auc"]).df()
+    ddf = con.execute(uq.ORACLE["classifier_auc"]).df()
     con.close()
     assert sorted(sdf.columns) == sorted(ddf.columns)
     assert _canon(sdf) == _canon(ddf)

@@ -805,7 +805,12 @@ def test_stream_merge_upsert_runs_multiple_batches(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from interop_spark.io import load
-    from interop_spark.streaming.cdc import land_event_chunks, lww_upsert_sink
+    from interop_spark.streaming.cdc import (
+        fold_events,
+        land_event_chunks,
+        lww_merge,
+        lww_winners,
+    )
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
@@ -820,20 +825,14 @@ def test_stream_merge_upsert_runs_multiple_batches(spark, sf_dir):
         f: os.path.getmtime(os.path.join(flat, f)) for f in os.listdir(flat)
     }
 
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state = {}
-    q = (
-        src.writeStream.foreachBatch(lww_upsert_sink(state))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert state["batches"] == 4, f"expected 4 micro-batches, got {state['batches']}"
+    calls = []
+
+    def _winners(batch_df):
+        calls.append(1)
+        return lww_winners(batch_df)
+
+    tgt = fold_events(spark, sf_dir, _winners, lww_merge)
+    assert len(calls) == 4, f"expected 4 micro-batches, got {len(calls)}"
 
     from pyspark.sql.window import Window
 
@@ -846,9 +845,7 @@ def test_stream_merge_upsert_runs_multiple_batches(spark, sf_dir):
         .where(F.col("rn") == 1)
         .collect()
     }
-    got = {
-        (r["user_id"], r["event_id"]) for r in state["tgt"].collect()
-    }
+    got = {(r["user_id"], r["event_id"]) for r in tgt.collect()}
     assert got == want
 
 
@@ -858,8 +855,6 @@ def test_stream_hll_register_merge_multiple_batches(spark, sf_dir):
     batches fold through hll_merge, and that the merged registers
     (and thus the estimate) EQUAL the one-pass batch sketch: the
     mergeability contract that makes HLL a streaming citizen."""
-    import os
-
     from pyspark.sql import functions as F
 
     from interop_spark.io import load
@@ -868,42 +863,27 @@ def test_stream_hll_register_merge_multiple_batches(spark, sf_dir):
         hll_merge,
         hll_registers,
     )
-    from interop_spark.streaming.cdc import land_event_chunks
+    from interop_spark.streaming.cdc import fold_events
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state = {"regs": None, "batches": 0}
+    calls = []
 
-    def _merge(batch_df, _bid):
-        state["batches"] += 1
-        regs_b = hll_registers(batch_df, F.col("user_id"))
-        if state["regs"] is None:
-            state["regs"] = regs_b.localCheckpoint()
-        else:
-            state["regs"] = hll_merge(state["regs"], regs_b).localCheckpoint()
+    def _registers(batch_df):
+        calls.append(1)
+        return hll_registers(batch_df, F.col("user_id"))
 
-    q = src.writeStream.foreachBatch(_merge).trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert state["batches"] == 4, state["batches"]
+    regs = fold_events(spark, sf_dir, _registers, hll_merge)
+    assert len(calls) == 4, len(calls)
 
-    streamed = {
-        (r.bucket, r.reg) for r in state["regs"].collect()
-    }
+    streamed = {(r.bucket, r.reg) for r in regs.collect()}
     one_pass = {
         (r.bucket, r.reg)
         for r in hll_registers(ev, F.col("user_id")).collect()
     }
     assert streamed == one_pass
-    got = hll_estimate(state["regs"]).first()
+    got = hll_estimate(regs).first()
     want = hll_estimate(hll_registers(ev, F.col("user_id"))).first()
     assert got.hll_estimate == want.hll_estimate
     assert got.n_empty_buckets == want.n_empty_buckets
@@ -954,8 +934,6 @@ def test_stream_rank_sketch_merge_multiple_batches(spark, sf_dir):
     frame (histogram AND survivor multiset) EQUALS the one-pass batch
     sketch: the exact-mergeability contract that makes the rank sketch
     a streaming citizen."""
-    import os
-
     from pyspark.sql import functions as F
 
     from interop_spark.io import load
@@ -963,39 +941,22 @@ def test_stream_rank_sketch_merge_multiple_batches(spark, sf_dir):
         rank_sketch_build,
         rank_sketch_merge,
     )
-    from interop_spark.streaming.cdc import land_event_chunks
+    from interop_spark.streaming.cdc import fold_events
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    flat = land_event_chunks(ev, 4, key)
-    schema = spark.read.parquet(flat).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    state = {"sk": None, "batches": 0}
+    calls = []
 
-    def _merge(batch_df, _bid):
-        state["batches"] += 1
-        sk_b = rank_sketch_build(
-            batch_df, F.col("value"), F.col("event_id")
-        )
-        if state["sk"] is None:
-            state["sk"] = sk_b.localCheckpoint()
-        else:
-            state["sk"] = rank_sketch_merge(
-                state["sk"], sk_b
-            ).localCheckpoint()
+    def _sketch(batch_df):
+        calls.append(1)
+        return rank_sketch_build(batch_df, F.col("value"), F.col("event_id"))
 
-    q = src.writeStream.foreachBatch(_merge).trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert state["batches"] == 4, state["batches"]
+    sk = fold_events(spark, sf_dir, _sketch, rank_sketch_merge)
+    assert len(calls) == 4, len(calls)
 
     one_pass = rank_sketch_build(ev, F.col("value"), F.col("event_id"))
     as_ms = lambda df: sorted(  # noqa: E731 - comparator
         (r.kind, r.level, r.v, r.cnt) for r in df.collect()
     )
-    assert as_ms(state["sk"]) == as_ms(one_pass)
+    assert as_ms(sk) == as_ms(one_pass)

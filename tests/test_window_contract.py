@@ -23,3 +23,25 @@ def test_entry_module_contract():
     o = em.oracle_sql()
     assert set(o) == set(q)
     assert callable(next(iter(q.values())))
+
+
+def test_every_query_function_is_registered():
+    """Every module-level ``q_*`` function defined in a registry module
+    is a registered query, so no second registry of unregistered rows
+    can grow beside the driver's."""
+    import importlib
+    import inspect
+
+    from interop_spark.queries import _MODULES, all_queries
+
+    registered = set(all_queries().values())
+    stray = [
+        f"{modname}.{name}"
+        for modname in _MODULES
+        for name, fn in vars(importlib.import_module(modname)).items()
+        if name.startswith("q_")
+        and inspect.isfunction(fn)
+        and fn.__module__ == modname
+        and fn not in registered
+    ]
+    assert not stray, stray
