@@ -1384,25 +1384,7 @@ def main() -> None:
     # that way). Prefixed + stderr so the driver's one-JSON-line stdout
     # contract still holds.
     print("HEADLINE (pre-probe): " + json.dumps(result), file=sys.stderr, flush=True)
-    # r17 verdict item 2 (second half): per-leg timing for the e2e
-    # chain — the next fhir_notebook_e2e drift names a LEG (fixture /
-    # ingest / sink / rejoin / writer), not a lump. AFTER the safety-
-    # net print and behind the probe gate: this re-runs the heaviest
-    # chain in the suite, and a JVM-killing failure here must cost the
-    # probe block, never the headline artifact (the round-4 lesson).
     if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        try:
-            from interop_spark.queries.fhir_queries import (
-                notebook_e2e_leg_times,
-            )
-
-            detail["fhir_notebook_e2e_legs"] = notebook_e2e_leg_times(
-                spark, sf_dir
-            )
-        except Exception as e:
-            detail["fhir_notebook_e2e_legs"] = {
-                "error": f"{type(e).__name__}: {e}"[:300]
-            }
         try:
             detail["scaling"] = _scaling_probes(spark, sf_dir)
         except Exception as e:

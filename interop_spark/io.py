@@ -12,6 +12,9 @@ prunes columns into the FileScan, so a query that touches 2 of lineitem's
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -89,8 +92,6 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     core) keeps the rule conservative: anything near a real split
     size per core stays on its scan layout.
     """
-    import os
-
     df = load(spark, sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
     try:
@@ -122,15 +123,21 @@ def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     def _stream(schema):
         # the fixture table is a single FILE; FileStreamSource insists
         # its path be a DIRECTORY (basePath), so expose the file through
-        # a one-symlink temp directory. On a cluster the source is a
-        # real landing directory and this shim disappears.
-        import os
-        import tempfile
-
+        # a one-symlink shim directory, one per source file and reused by
+        # every call. On a cluster the source is a real landing directory
+        # and this shim disappears.
         src_dir = path
         if os.path.isfile(path):
-            src_dir = tempfile.mkdtemp(prefix=f"stream_{name}_")
-            os.symlink(path, os.path.join(src_dir, f"{name}.parquet"))
+            src = os.path.abspath(path)
+            digest = hashlib.md5(src.encode()).hexdigest()[:16]
+            src_dir = os.path.join(
+                "/tmp/interop_spark_fixtures", f"stream-{name}-{digest}"
+            )
+            os.makedirs(src_dir, exist_ok=True)
+            try:
+                os.symlink(src, os.path.join(src_dir, f"{name}.parquet"))
+            except FileExistsError:  # an earlier or concurrent call made it
+                pass
         return spark.readStream.schema(schema).parquet(src_dir)
 
     if name != "events":

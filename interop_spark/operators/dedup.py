@@ -76,22 +76,85 @@ def minhash_signature(shingles: Column | str, k: int = 12) -> Column:
     )
 
 
-def lsh_band_keys(signature: Column, bands: int = 4, rows: int = 3) -> Column:
-    """Band the signature: band key = md5 of the concatenated rows.
-    Docs sharing any (band_index, key) become candidate pairs."""
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"{b}:"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[signature[b * rows + r] for r in range(rows)]
-                    )
-                ),
+def band_key(sig: Column, b: Column, rows: int) -> Column:
+    """LSH key of band ``b`` (0-based) of a MinHash signature: the band
+    index, ``':'``, then the md5 of the band's ``rows`` signature
+    elements joined by ``'|'``. The one band-key layout — batch band
+    tables, stream probes and ``lsh_band_keys`` all derive keys here, so
+    a probe always meets the index it was built against."""
+    return F.concat(
+        b.cast("string"),
+        F.lit(":"),
+        F.md5(
+            F.concat_ws(
+                "|",
+                *[F.element_at(sig, b * rows + (r + 1)) for r in range(rows)],
             )
-            for b in range(bands)
-        ]
+        ),
     )
+
+
+def lsh_band_keys(signature: Column, bands: int = 4, rows: int = 3) -> Column:
+    """Band the signature into an array of ``bands`` band keys
+    (``band_key``). Docs sharing any key become candidate pairs. Pass a
+    projected signature COLUMN: an inline signature expression is
+    re-evaluated once per band inside the lambda."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: band_key(signature, b, rows),
+    )
+
+
+def _check_band_shape(k: int, bands: int, rows: int) -> None:
+    if k < bands * rows:
+        raise ValueError(
+            f"minhash signature too short: k={k} < bands*rows={bands * rows}"
+        )
+
+
+def band_table(
+    sig_df: DataFrame, k: int, bands: int, rows: int, *carry: str
+) -> DataFrame:
+    """One row per (document, band) of a frame holding a ``k``-element
+    MinHash signature column ``sig``: the ``carry`` columns plus
+    ``band_key``. Raises ``ValueError`` at construction when the
+    signature is shorter than ``bands * rows``.
+
+    Explodes a CONSTANT band-index sequence and derives each key after
+    the explode: exploding the band-key array itself lets
+    InferFiltersFromGenerate push the whole signature expression into
+    the scan filter, hashing every row twice."""
+    _check_band_shape(k, bands, rows)
+    return sig_df.select(
+        *carry,
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("_b"),
+        F.col("sig"),
+    ).select(
+        *carry, band_key(F.col("sig"), F.col("_b"), rows).alias("band_key")
+    )
+
+
+def drop_hot_keys(
+    df: DataFrame,
+    keys: list[str],
+    cap: int | None,
+    distinct: str | None = None,
+) -> DataFrame:
+    """Hot-key guard for a self-join on ``keys``: drop every key shared
+    by more than ``cap`` rows (or, with ``distinct``, by more than
+    ``cap`` distinct values of that column) BEFORE the join, which
+    would otherwise emit O(n²) pairs for it. ``cap=None`` returns ``df``
+    unchanged."""
+    if cap is None:
+        return df
+    n = F.count(F.lit(1)) if distinct is None else F.countDistinct(distinct)
+    keep = (
+        df.groupBy(*keys)
+        .agg(n.alias("_nd"))
+        .where(F.col("_nd") <= cap)
+        .select(*keys)
+    )
+    return df.join(keep, keys)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -124,7 +187,6 @@ def minhash_candidate_pairs(
     bands: int = 4,
     rows: int = 3,
     shingle_n: int = 3,
-    materialize: bool = True,
     spread: bool = True,
     max_band_docs: int | None = None,
 ) -> DataFrame:
@@ -138,32 +200,27 @@ def minhash_candidate_pairs(
     from a self-equi-join on band_key (AQE-splittable if a band skews,
     unlike a per-bucket collect_list, which caps bucket size at one task's
     memory), are deduped to distinct (a < b) pairs, and only then re-join
-    the compact shingle table twice for exact-Jaccard verification.
-
-    ``materialize=True`` checkpoints the shingle and band tables so the
-    expensive hashing runs ONCE instead of once per self-join side plus
-    once per verification side (~2.5× wall-clock at test scale) — the
-    local-mode analog of what a 100 TB run does anyway: persist the
-    signature table before the candidate join.
+    the compact shingle table twice for exact-Jaccard verification. The
+    shingle and band tables are checkpointed, so the hashing runs ONCE
+    instead of once per self-join side plus once per verification side.
 
     ``spread=True`` repartitions the input to ``defaultParallelism``
     before the (CPU-heavy) shingle+signature projection. Per-row
     signature work inherits the INPUT's split count — fine on a
     many-split 100 TB table, pathological on a single large file where
-    the whole corpus hashes on one core (the round-4 scaling probes
-    measured exactly that). Values are unaffected; pass ``False`` when
-    the input's partitioning is already wide.
+    the whole corpus hashes on one core. Values are unaffected; pass
+    ``False`` when the input's partitioning is already wide.
 
-    ``max_band_docs`` is the hot-band frequency guard (the band-join twin
-    of ``substring_dup_runs``'s ``max_hash_docs``): a band key shared by
-    more than that many documents — a boilerplate mega-cluster — is
-    dropped BEFORE the self-join, which otherwise emits O(cluster²) pairs
-    per band for that cluster. Default ``None`` preserves exact
-    candidate-generation semantics (the oracle's); pass a cap at corpus
-    scale and collapse exact-identical texts first (fingerprint keep-list,
-    as ``corpus_clean`` does) so the guard only ever trims pathological
-    near-identical clusters, whose pairs a cluster-level output
-    (``dedup_clusters``) represents without enumerating.
+    ``max_band_docs`` is the hot-band guard (``drop_hot_keys``): a band
+    key shared by more than that many documents — a boilerplate
+    mega-cluster — is dropped BEFORE the self-join, which otherwise
+    emits O(cluster²) pairs per band for that cluster. Default ``None``
+    preserves exact candidate-generation semantics (the oracle's); pass
+    a cap at corpus scale and collapse exact-identical texts first
+    (fingerprint keep-list, as ``corpus_clean`` does) so the guard only
+    ever trims pathological near-identical clusters, whose pairs a
+    cluster-level output (``dedup_clusters``) represents without
+    enumerating.
     """
     cand, shing = _minhash_candidates(
         df,
@@ -173,7 +230,6 @@ def minhash_candidate_pairs(
         bands=bands,
         rows=rows,
         shingle_n=shingle_n,
-        materialize=materialize,
         spread=spread,
         max_band_docs=max_band_docs,
     )
@@ -202,65 +258,21 @@ def _minhash_candidates(
     bands: int = 4,
     rows: int = 3,
     shingle_n: int = 3,
-    materialize: bool = True,
     spread: bool = True,
     max_band_docs: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Candidate generation core of ``minhash_candidate_pairs`` (pure
-    code motion — identical expression tree): returns the distinct
-    (doc_a < doc_b) band-join candidates AND the shingle table, so
-    callers that verify with something other than exact Jaccard
-    (``edit_verified_pairs``' Levenshtein) can skip the two shingle
-    re-joins entirely — the unused shingle frame is lazy and never
-    enters their plan."""
-    if k < bands * rows:
-        raise ValueError(
-            f"minhash signature too short: k={k} < bands*rows={bands * rows}"
-        )
+    """Candidate generation core of ``minhash_candidate_pairs``: returns
+    the distinct (doc_a < doc_b) band-join candidates AND the shingle
+    table, so callers that verify with something other than exact
+    Jaccard (``edit_verified_pairs``' Levenshtein) can skip the two
+    shingle re-joins entirely — the unused shingle frame is lazy and
+    never enters their plan."""
     if spread:
         df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    shing = df.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(F.col(text_col), shingle_n).alias("shingles"),
+    shing, banded = _shingle_band_tables(
+        df, id_col, text_col, k, bands, rows, shingle_n
     )
-    if materialize:
-        shing = shing.localCheckpoint()
-    sig = shing.select(
-        "doc_id", minhash_signature("shingles", k).alias("sig")
-    )
-    # explode a CONSTANT band-index sequence and derive each band key
-    # after the explode: exploding the band_keys array directly makes
-    # InferFiltersFromGenerate push the whole minhash expression into the
-    # scan filter, doubling the (expensive) hashing work per row — the
-    # constant sequence folds that inferred filter away, and the signature
-    # is computed once per document in the pre-explode projection
-    banded = sig.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("_b"),
-        F.col("sig"),
-    ).select(
-        "doc_id",
-        # one F.expr parse (r20, same rationale as minhash_signature's
-        # string path — expression-identical to the element-wise build)
-        F.expr(
-            "concat(cast(_b as string), ':', md5(concat_ws('|', "
-            + ", ".join(
-                f"element_at(sig, _b * {rows} + {r + 1})"
-                for r in range(rows)
-            )
-            + ")))"
-        ).alias("band_key"),
-    )
-    if materialize:
-        banded = banded.localCheckpoint()
-    if max_band_docs is not None:
-        keep = (
-            banded.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-            .where(F.col("_nd") <= max_band_docs)
-            .select("band_key")
-        )
-        banded = banded.join(keep, "band_key")
+    banded = drop_hot_keys(banded, ["band_key"], max_band_docs)
     cand = (
         banded.alias("l")
         .join(
@@ -417,31 +429,30 @@ def simhash_candidate_pairs(
     text_col: str = "text",
     hamming_max: int = 12,
     max_band_docs: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Banded SimHash near-duplicate pairs at the scale-safe width: docs
     sharing any 30-bit band of their 120-bit simhash become candidates
     via a band-key SELF-JOIN, verified by Hamming ≤ ``hamming_max`` over
     the full 120 bits (the single body behind ``simhash_neardup_pairs``
-    and the bench scaling probe — previously duplicated).
+    and the bench scaling probe).
 
     Scale shape: the self-join shuffles only (band_idx, band_val,
     doc_id, sh) — AQE-splittable, no per-bucket collect_list; 30-bit
     bands give a ~1B key space per band so bucket occupancy stays O(1)
-    as the corpus grows. ``materialize`` checkpoints the signature
-    table so the hash pipeline runs once, not once per join side.
+    as the corpus grows. The signature table is checkpointed so the
+    hash pipeline runs once, not once per join side.
 
-    ``max_band_docs`` is the hot-band frequency guard — the SimHash
-    twin of ``minhash_candidate_pairs``'s parameter of the same name: a
-    band value shared by more than that many documents (a boilerplate /
-    template mega-cluster, or short docs whose majority-vote bits
-    collapse onto the corpus's common-token signature) is dropped
-    BEFORE the self-join, which otherwise emits O(cluster²) candidate
-    pairs for that band. Default ``None`` preserves exact candidate
-    semantics (the driver oracle's); at corpus scale pass a cap and
-    collapse exact-identical texts first so the guard only trims
-    pathological clusters, whose membership a cluster-level output
-    (``dedup_clusters``) represents without enumerating pairs.
+    ``max_band_docs`` is the hot-band guard (``drop_hot_keys``), as in
+    ``minhash_candidate_pairs``: a band value shared by more than that
+    many documents (a boilerplate / template mega-cluster, or short docs
+    whose majority-vote bits collapse onto the corpus's common-token
+    signature) is dropped BEFORE the self-join, which otherwise emits
+    O(cluster²) candidate pairs for that band. Default ``None``
+    preserves exact candidate semantics (the driver oracle's); at corpus
+    scale pass a cap and collapse exact-identical texts first so the
+    guard only trims pathological clusters, whose membership a
+    cluster-level output (``dedup_clusters``) represents without
+    enumerating pairs.
     Recall note: a doc pair trimmed from one hot band still pairs
     through any of its other 3 bands, so only pairs agreeing SOLELY on
     a mega-cluster band are lost."""
@@ -450,9 +461,7 @@ def simhash_candidate_pairs(
         simhash_wide_of_hashes(token_hashes_wide(F.col(text_col))).alias(
             "sh"
         ),
-    )
-    if materialize:
-        sh = sh.localCheckpoint()
+    ).localCheckpoint()
     banded = sh.select(
         "doc_id",
         "sh",
@@ -460,14 +469,7 @@ def simhash_candidate_pairs(
             "band_idx", "band_val"
         ),
     )
-    if max_band_docs is not None:
-        keep = (
-            banded.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-            .where(F.col("_nd") <= max_band_docs)
-            .select("band_idx", "band_val")
-        )
-        banded = banded.join(keep, ["band_idx", "band_val"])
+    banded = drop_hot_keys(banded, ["band_idx", "band_val"], max_band_docs)
     return (
         banded.alias("l")
         .join(
@@ -709,7 +711,6 @@ def substring_dup_runs(
     max_hash_docs: int | None = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Maximal cross-document duplicated substring runs:
     ``(doc_a, doc_b, start_a, start_b, match_len, n_windows)`` with
@@ -719,27 +720,17 @@ def substring_dup_runs(
     self-equi-join on the window hash → per-(pair, diagonal) window
     run-merge. All shuffles are keyed by high-cardinality hashes or
     (pair, diagonal) keys; ``max_hash_docs`` drops boilerplate windows
-    shared by more than that many documents, which otherwise contribute
-    O(n²) candidate pairs per hash (handle such runaway content with
-    the doc-level dedup family instead).
-
-    ``materialize=True`` checkpoints the window-hash table so the text
-    is scanned and hashed ONCE instead of once per self-join side plus
-    once for the frequency guard — the minhash pattern: persist the
-    fingerprint table before the candidate join."""
+    shared by more than that many documents (``drop_hot_keys``), which
+    otherwise contribute O(n²) candidate pairs per hash (handle such
+    runaway content with the doc-level dedup family instead). The
+    window-hash table is checkpointed so the text is scanned and hashed
+    ONCE instead of once per self-join side plus once for the guard."""
     from pyspark.sql.window import Window
 
     wins = substring_windows(df, w, stride, id_col, text_col)
-    if materialize:
-        wins = wins.localCheckpoint()
-    if max_hash_docs is not None:
-        keep = (
-            wins.groupBy("h")
-            .agg(F.countDistinct(id_col).alias("_nd"))
-            .where(F.col("_nd") <= max_hash_docs)
-            .select("h")
-        )
-        wins = wins.join(keep, "h")
+    wins = drop_hot_keys(
+        wins.localCheckpoint(), ["h"], max_hash_docs, distinct=id_col
+    )
     a = wins.select(
         F.col(id_col).alias("doc_a"),
         F.col("pos").alias("pos_a"),
@@ -837,7 +828,6 @@ def winnow_dup_pairs(
     max_hash_docs: int | None = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Cross-document near-dup candidates from shared winnowing
     fingerprints: ``(doc_a, doc_b, n_shared, first_a, first_b)`` with
@@ -845,9 +835,9 @@ def winnow_dup_pairs(
     hashes and ``first_*`` = each side's earliest fingerprinted k-gram
     position among the shared hashes. Same plan scale shape as
     ``substring_dup_runs``: per-doc projection → hash-frequency guard
-    → self-equi-join on the fingerprint hash → pair aggregate.
-    ``materialize=True`` checkpoints the fingerprint table so k-gram
-    hashing + selection runs once, not once per join side."""
+    → self-equi-join on the fingerprint hash → pair aggregate. The
+    fingerprint table is checkpointed so k-gram hashing + selection runs
+    once, not once per join side."""
     hs = df.select(
         F.col(id_col),
         kgram_hash_structs(F.col(text_col), k).alias("_hs"),
@@ -860,16 +850,9 @@ def winnow_dup_pairs(
         F.col("_f.h").alias("h"),
         (-F.col("_f.np")).alias("pos"),
     )
-    if materialize:
-        fps = fps.localCheckpoint()
-    if max_hash_docs is not None:
-        keep = (
-            fps.groupBy("h")
-            .agg(F.countDistinct(id_col).alias("_nd"))
-            .where(F.col("_nd") <= max_hash_docs)
-            .select("h")
-        )
-        fps = fps.join(keep, "h")
+    fps = drop_hot_keys(
+        fps.localCheckpoint(), ["h"], max_hash_docs, distinct=id_col
+    )
     a = fps.select(
         F.col(id_col).alias("doc_a"), F.col("pos").alias("pos_a"), "h"
     )
@@ -1405,45 +1388,20 @@ def _shingle_band_tables(
     bands: int,
     rows: int,
     shingle_n: int,
-    materialize: bool,
 ) -> tuple[DataFrame, DataFrame]:
-    """(shingle table, banded table) for ONE side of a CROSS-corpus band
-    join. Same signature/band construction as ``_minhash_candidates``
-    (constant-sequence explode so InferFiltersFromGenerate can't clone
-    the hashing into a scan filter; checkpoint so the signature pipeline
-    runs once per side, not once per downstream consumer) — kept as a
-    separate single-side helper so the self-join core's expression tree,
-    and therefore every existing minhash row's verified plan, stays
-    byte-identical."""
+    """(shingle table, band table) of one corpus, both checkpointed so
+    the shingle and signature hashing each run once, however many joins
+    read them. Raises ``ValueError`` before any Spark job when the
+    signature is shorter than ``bands * rows``."""
+    _check_band_shape(k, bands, rows)
     shing = df.select(
         F.col(id_col).alias("doc_id"),
         word_shingles(F.col(text_col), shingle_n).alias("shingles"),
-    )
-    if materialize:
-        shing = shing.localCheckpoint()
+    ).localCheckpoint()
     sig = shing.select(
         "doc_id", minhash_signature("shingles", k).alias("sig")
     )
-    banded = sig.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("_b"),
-        F.col("sig"),
-    ).select(
-        "doc_id",
-        # one F.expr parse (r20, same rationale as minhash_signature's
-        # string path — expression-identical to the element-wise build)
-        F.expr(
-            "concat(cast(_b as string), ':', md5(concat_ws('|', "
-            + ", ".join(
-                f"element_at(sig, _b * {rows} + {r + 1})"
-                for r in range(rows)
-            )
-            + ")))"
-        ).alias("band_key"),
-    )
-    if materialize:
-        banded = banded.localCheckpoint()
-    return shing, banded
+    return shing, band_table(sig, k, bands, rows, "doc_id").localCheckpoint()
 
 
 def build_minhash_index(
@@ -1454,7 +1412,6 @@ def build_minhash_index(
     bands: int = 4,
     rows: int = 3,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The persistable history-side index of
     ``minhash_incremental_dedup``: (shingle table, banded table). A
@@ -1463,7 +1420,7 @@ def build_minhash_index(
     hash-once/probe-many amortization as the PQ codebooks
     (``ivfpq_search_only``) and the Bloom bitmap."""
     return _shingle_band_tables(
-        df, id_col, text_col, k, bands, rows, shingle_n, materialize
+        df, id_col, text_col, k, bands, rows, shingle_n
     )
 
 
@@ -1477,7 +1434,6 @@ def minhash_incremental_dedup(
     rows: int = 3,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
     max_band_docs: int | None = None,
     history_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
@@ -1503,28 +1459,21 @@ def minhash_incremental_dedup(
     only (band_key, doc_id); shingle arrays re-join per CANDIDATE for
     exact-Jaccard verification; the final aggregate is keyed by new-doc
     id. ``max_band_docs`` drops boilerplate mega-bands on the history
-    side before the join (same guard semantics as
+    side before the join (``drop_hot_keys``, as in
     ``minhash_candidate_pairs``). ``history_index`` takes a prebuilt
     (shingle table, banded table) pair — ``build_minhash_index`` — so a
     recurring pipeline pays history hashing once, not per batch; the
     ``history`` frame is ignored when it's given."""
     n_sh, n_band = _shingle_band_tables(
-        new, id_col, text_col, k, bands, rows, shingle_n, materialize
+        new, id_col, text_col, k, bands, rows, shingle_n
     )
     if history_index is not None:
         h_sh, h_band = history_index
     else:
         h_sh, h_band = _shingle_band_tables(
-            history, id_col, text_col, k, bands, rows, shingle_n, materialize
+            history, id_col, text_col, k, bands, rows, shingle_n
         )
-    if max_band_docs is not None:
-        keep = (
-            h_band.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-            .where(F.col("_nd") <= max_band_docs)
-            .select("band_key")
-        )
-        h_band = h_band.join(keep, "band_key")
+    h_band = drop_hot_keys(h_band, ["band_key"], max_band_docs)
     cand = (
         n_band.select(F.col("doc_id").alias("new_id"), "band_key")
         .join(

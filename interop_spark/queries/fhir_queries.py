@@ -3434,99 +3434,3 @@ ORACLE = {
         FROM t GROUP BY 1, 2, 3
     """,
 }
-
-
-def notebook_e2e_leg_times(spark: SparkSession, sf_dir: str) -> dict:
-    """BENCH INSTRUMENTATION, not a registry row (r17 verdict item 2):
-    run the ``fhir_notebook_e2e`` chain leg by leg — fixture / ingest /
-    sink / rejoin / writer — with each leg's upstream localCheckpoint-ed
-    so a leg's stamp times THAT leg's work only. The next
-    fhir_notebook_e2e bench drift names a leg instead of a lump
-    (its r17 2.23x read was IO-spread on the sink+fixture legs).
-    Uses its own catalog database (nb_e2e_probe) so the headline row's
-    tables are never touched. Returns {leg: seconds}."""
-    import os
-    import shutil
-    import time as _time
-    from urllib.parse import urlparse
-
-    from interop_spark.fhir import (
-        Bundle,
-        Mapping,
-        MappingManager,
-        read_from_directory,
-    )
-    from interop_spark.fhir.analytics import omop_person, patient_conditions
-    from interop_spark.fhir.gen import write_corpus
-    from interop_spark.fhir.schema import CONDITION, PATIENT, FhirSchemaModel
-    from interop_spark.fhir.write import bulk_table_write, drop_table_if_exists
-
-    legs: dict[str, float] = {}
-    loc = "nb_e2e_probe.driver"
-
-    t0 = _time.time()
-    corpus = write_corpus(spark, sf_dir, max_custkey=_E2E_LIMIT)
-    legs["fixture_sec"] = round(_time.time() - t0, 3)
-
-    t0 = _time.time()
-    entry = (
-        read_from_directory(
-            "file://" + corpus, spark=spark, glob_filter="*.json"
-        )
-        .entry(
-            schemas=FhirSchemaModel(
-                fhir_resource_map={"Patient": PATIENT, "Condition": CONDITION}
-            )
-        )
-        .localCheckpoint()
-    )
-    legs["ingest_sec"] = round(_time.time() - t0, 3)
-
-    t0 = _time.time()
-    for t in ("Patient", "Condition"):
-        drop_table_if_exists(spark, f"{loc}.{t}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        shutil.rmtree(
-            os.path.join(wh, "nb_e2e_probe_driver.db"), ignore_errors=True
-        )
-    bulk_table_write(
-        entry, loc, columns=["Patient", "Condition"], materialize=False
-    )
-    legs["sink_sec"] = round(_time.time() - t0, 3)
-
-    t0 = _time.time()
-    rejoined = spark.table("nb_e2e_probe_driver.Patient").join(
-        spark.table("nb_e2e_probe_driver.Condition"), "bundleUUID"
-    )
-    pc = patient_conditions(rejoined).select(
-        "Patient", "condition_code", "clinical_status"
-    ).localCheckpoint()
-    persons = omop_person(entry).select(
-        "person_id", col("year_of_birth").cast("int").alias("year_of_birth")
-    )
-    pc.join(persons, pc.Patient == persons.person_id).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    legs["rejoin_sec"] = round(_time.time() - t0, 3)
-
-    t0 = _time.time()
-    src = pc.select(
-        col("Patient").alias("PAT_ID"),
-        col("condition_code").alias("COND_CODE"),
-    )
-    emitted = Bundle(
-        MappingManager(
-            [
-                Mapping("PAT_ID", "Patient.id"),
-                Mapping("COND_CODE", "Patient.name.text"),
-            ],
-            src.schema,
-        )
-    ).df_to_fhir_df(src)
-    emitted.select(F.try_parse_json(col("value")).alias("v")).select(
-        F.variant_get("v", "$.entry[0].resource.id", "string"),
-        F.variant_get("v", "$.entry[0].resource.name[0].text", "string"),
-    ).write.format("noop").mode("overwrite").save()
-    legs["writer_sec"] = round(_time.time() - t0, 3)
-    return legs

@@ -821,21 +821,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Whether q_embedding_neardup checkpoints its (vec_id, bucket) table
-# before the self-join. True = hash each vector's n_planes dot products
-# ONCE (the 100 TB shape: persist the signature table); False = let both
-# self-join sides recompute them but skip the serialization barrier.
-# Default picked from an n=5 sf0.1 measurement (see STATUS.md round-3
-# notes): materialized is faster once the corpus outgrows the barrier
-# cost, and is the only shape that survives scale — kept True.
-EMBED_NEARDUP_MATERIALIZE = True
-
-
-def q_embedding_neardup(
-    spark: SparkSession,
-    sf_dir: str,
-    materialize: bool = EMBED_NEARDUP_MATERIALIZE,
-) -> DataFrame:
+def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: vectors sharing a hyperplane
     LSH bucket with cosine ≥ 0.99. The corpus is unioned with exact clones
     (id+offset) so the expected duplicate set is non-empty at every scale.
@@ -845,7 +831,9 @@ def q_embedding_neardup(
     from a SELF-JOIN on the bucket id over a compact (vec_id, bucket)
     projection (AQE-splittable; no per-bucket collect_list of vectors, so
     no task-sized bucket array), and embeddings are re-joined only for the
-    surviving candidate pairs' cosine verification."""
+    surviving candidate pairs' cosine verification. The bucket table is
+    checkpointed, so each vector's plane dot products run once, not once
+    per self-join side."""
     n_planes = sim.recommended_n_planes(NEARDUP_CORPUS, target_bucket_size=16)
     if n_planes != NEARDUP_PLANES:  # oracle twin inlines NEARDUP_PLANES planes
         raise RuntimeError(
@@ -858,18 +846,15 @@ def q_embedding_neardup(
         (col("vec_id") + DUP_OFFSET).alias("vec_id"), "embedding"
     )
     u = e.select("vec_id", "embedding").unionByName(clones)
-    # Arrow-vectorized signature + pair-verification passes (r20, guide
-    # §4): the interpreted per-plane dot folds and the per-pair cosine
-    # fold were the query's executor cost; numpy does the identical
-    # arithmetic on whole batches (bit-exactness pinned in
-    # tests/test_operators.py)
+    # Arrow-vectorized signature + pair-verification passes: the
+    # interpreted per-plane dot folds and the per-pair cosine fold were
+    # the query's executor cost; numpy does the identical arithmetic on
+    # whole batches (bit-exactness pinned in tests/test_operators.py)
     planes = [sim._hyperplane(i, EMB_DIM) for i in range(n_planes)]
     banded = u.select(
         "vec_id",
         sim.lsh_bucket_udf(planes)(col("embedding")).alias("bucket"),
-    )
-    if materialize:
-        banded = banded.localCheckpoint()
+    ).localCheckpoint()
     cand = (
         banded.alias("l")
         .join(

@@ -395,9 +395,11 @@ def stream_neardup_pairs(
     stream side join ITSELF (stream-stream state on every row); carrying
     ~shingle-sized rows through a stateless projection is the right
     trade in a micro-batch. Emits (new_id, hist_id, jaccard_sim) pairs
-    in append mode.
+    in append mode. The stream's band keys come from ``dedup.band_table``,
+    the code that built the index's, so probe and index always agree.
     """
     from interop_spark.operators.dedup import (
+        band_table,
         jaccard,
         minhash_signature,
         word_shingles,
@@ -412,31 +414,7 @@ def stream_neardup_pairs(
         "_sh_n",
         minhash_signature("_sh_n", k).alias("sig"),
     )
-    # constant-sequence explode, same rationale as dedup's banding: an
-    # explode of the band-key array itself would let
-    # InferFiltersFromGenerate clone the hashing into the scan filter
-    banded = sig.select(
-        "new_id",
-        "_sh_n",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("_b"),
-        F.col("sig"),
-    ).select(
-        "new_id",
-        "_sh_n",
-        F.concat(
-            F.col("_b").cast("string"),
-            F.lit(":"),
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.element_at(F.col("sig"), F.col("_b") * rows + r + 1)
-                        for r in range(rows)
-                    ],
-                )
-            ),
-        ).alias("band_key"),
-    )
+    banded = band_table(sig, k, bands, rows, "new_id", "_sh_n")
     return (
         banded.join(
             h_band.select(

@@ -245,15 +245,20 @@ from interop_spark.io import load
 from interop_spark.operators import dedup as dd, similarity as sim
 from interop_spark.queries import pipeline as pl
 
-docs = load(spark, SF, "documents").where(F.col("doc_id") < 100)
+sig = pl._with_near_dups(load(spark, SF, "documents"), limit=100).select(
+    F.col("doc_id"),
+    dd.minhash_signature(dd.word_shingles(F.col("text"), pl.SHINGLE_N),
+                         pl.MINHASH_K).alias("sig"))
+emb = load(spark, SF, "embeddings").where(F.col("vec_id") < 300)
+vecs = emb.select("vec_id", "embedding").unionByName(emb.select(
+    (F.col("vec_id") + pl.DUP_OFFSET).alias("vec_id"), "embedding"))
+planes = [sim._hyperplane(i, pl.EMB_DIM) for i in range(pl.NEARDUP_PLANES)]
 builds = {
     "minhash signature/band build (persisted before the self-join)":
-        dd.minhash_candidate_pairs(
-            pl._with_near_dups(load(spark, SF, "documents"), limit=100),
-            "doc_id", "text", k=pl.MINHASH_K, bands=pl.BANDS, rows=pl.ROWS,
-            shingle_n=pl.SHINGLE_N, materialize=False),
+        dd.band_table(sig, pl.MINHASH_K, pl.BANDS, pl.ROWS, "doc_id"),
     "embedding bucket build (persisted before the self-join)":
-        pl.q_embedding_neardup(spark, SF, materialize=False),
+        vecs.select("vec_id", sim.lsh_bucket_udf(planes)(
+            F.col("embedding")).alias("bucket")),
 }
 out.append("## build plans of persisted tables\n")
 for title, df in builds.items():

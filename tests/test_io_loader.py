@@ -77,3 +77,29 @@ def test_load_events_current_driver_fixture(spark, sf_dir):
     df = load(spark, sf_dir, "events")
     assert isinstance(df.schema["ts"].dataType, TimestampType)
     assert df.count() > 0
+
+
+def test_load_stream_reuses_its_shim_directory(spark, sf_dir):
+    """The file-to-directory shim of ``load_stream`` is made once per
+    source file: a second stream over the same table creates no new
+    directory."""
+    import os
+    import tempfile
+
+    from interop_spark.io import load_stream
+
+    def stream_dirs():
+        roots = (tempfile.gettempdir(), "/tmp/interop_spark_fixtures")
+        return {
+            os.path.join(root, d)
+            for root in roots
+            if os.path.isdir(root)
+            for d in os.listdir(root)
+            if d.startswith("stream")
+        }
+
+    load_stream(spark, sf_dir, "documents")
+    before = stream_dirs()
+    again = load_stream(spark, sf_dir, "documents")
+    assert again.isStreaming
+    assert stream_dirs() == before

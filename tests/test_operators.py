@@ -874,6 +874,13 @@ def test_winnow_catches_offset_misaligned_overlap(spark):
     assert r.n_shared >= 3
     assert r.first_a <= 120 and 38 <= r.first_b <= 157
 
+    # cap: fingerprints shared by MORE docs than max_hash_docs are dropped
+    many = spark.createDataFrame(
+        [(i, shared) for i in range(10)], ["doc_id", "text"]
+    )
+    assert winnow_dup_pairs(many, k=20, w=8, max_hash_docs=5).count() == 0
+    assert winnow_dup_pairs(many, k=20, w=8, max_hash_docs=None).count() == 45
+
 
 def test_semdedup_drops_clones_keeps_tie_lowest_id(spark, sf_dir):
     """SemDeDup semantics: an exact clone forms a tau-duplicate pair
@@ -1074,11 +1081,15 @@ def test_pq_train_short_corpus_no_raise(spark):
 
 
 def test_minhash_max_band_docs_drops_hot_cluster_only(spark):
-    """max_band_docs (round-10 hot-band guard): a mega-cluster of
-    identical texts shares every band key, so its bands exceed the cap
-    and its pairs vanish from the candidate set, while pairs that share
-    only non-hot bands survive. Default None keeps exact semantics."""
-    from interop_spark.operators.dedup import minhash_candidate_pairs
+    """max_band_docs (hot-band guard): a mega-cluster of identical texts
+    shares every band key, so its bands exceed the cap and its pairs
+    vanish from the candidate set, while pairs that share only non-hot
+    bands survive; the incremental screen's history-side guard drops the
+    same cluster's matches. Default None keeps exact semantics."""
+    from interop_spark.operators.dedup import (
+        minhash_candidate_pairs,
+        minhash_incremental_dedup,
+    )
 
     boiler = "all work and no play makes jack a dull boy " * 4
     rows = [(i, boiler) for i in range(10)] + [
@@ -1099,6 +1110,87 @@ def test_minhash_max_band_docs_drops_hot_cluster_only(spark):
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert (100, 101) in got  # 2-doc bands survive the cap
     assert not any(a < 100 and b < 100 for a, b in got)  # cluster dropped
+
+    # the same guard on the history side of an incremental screen
+    new = spark.createDataFrame(
+        [(200, boiler), (201, rows[10][1])], "doc_id long, text string"
+    )
+
+    def best_matches(cap):
+        screened = minhash_incremental_dedup(new, df, max_band_docs=cap)
+        return {r.doc_id: r.best_match for r in screened.collect()}
+
+    assert best_matches(None) == {200: 0, 201: 100}
+    assert best_matches(4) == {200: None, 201: 100}
+
+
+@pytest.mark.parametrize(
+    "builder",
+    [
+        "minhash_candidate_pairs",
+        "build_minhash_index",
+        "minhash_incremental_dedup",
+        "stream_neardup_pairs",
+    ],
+)
+def test_short_signature_raises_at_construction(spark, builder):
+    """A signature shorter than bands*rows raises ValueError while the
+    frame is built, before any Spark job, in every MinHash band-table
+    builder, batch and stream alike."""
+    from interop_spark.operators import dedup as dd
+    from interop_spark.streaming.streams import stream_neardup_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    short = {"k": 6, "bands": 4, "rows": 3}
+    build = {
+        "minhash_candidate_pairs": lambda: dd.minhash_candidate_pairs(
+            docs, "doc_id", "text", **short
+        ),
+        "build_minhash_index": lambda: dd.build_minhash_index(docs, **short),
+        "minhash_incremental_dedup": lambda: dd.minhash_incremental_dedup(
+            docs, docs, **short
+        ),
+        "stream_neardup_pairs": lambda: stream_neardup_pairs(
+            docs, (docs, docs), **short
+        ),
+    }[builder]
+    sc = spark.sparkContext
+    group = f"short-signature-{builder}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=r"k=6 < bands\*rows=12"):
+            build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_lsh_band_keys_equal_index_band_table(spark):
+    """``lsh_band_keys`` and the index's band table are one layout: the
+    exploded key array of each document equals its band-table rows."""
+    from interop_spark.operators.dedup import (
+        build_minhash_index,
+        lsh_band_keys,
+        minhash_signature,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy cat"),
+            (3, "parquet pages carry min and max statistics"),
+        ],
+        "doc_id long, text string",
+    )
+    sig = minhash_signature(word_shingles(F.col("text"), 3), 12)
+    keys = docs.select("doc_id", F.explode(lsh_band_keys(sig, 4, 3)))
+    _, banded = build_minhash_index(docs, k=12, bands=4, rows=3)
+    got = sorted(tuple(r) for r in keys.collect())
+    assert len(got) == 12
+    assert got == sorted(tuple(r) for r in banded.collect())
 
 
 def test_remove_boilerplate_lines_edges(spark):
