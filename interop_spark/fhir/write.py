@@ -25,13 +25,14 @@ BUNDLE_META_COLS = ("bundleUUID", "bundleId", "bundleType", "timestamp", "_file_
 def resolve_table_name(spark: SparkSession, location: str, table: str) -> str:
     """Map ``location + table`` to a writable identifier, creating the
     database if needed. 3-level names collapse to ``<cat>_<schema>`` when
-    the session catalog is the only one available."""
+    the session catalog is the only one available. Whether the first part
+    names a catalog is read from the session conf (``spark_catalog`` or
+    a ``spark.sql.catalog.<name>`` entry): ``catalog.listCatalogs()``
+    would cost a Spark job per call."""
     parts = [p for p in location.split(".") if p]
-    try:
-        catalogs = {c.name for c in spark.catalog.listCatalogs()}
-    except Exception:
-        catalogs = {"spark_catalog"}
-    if len(parts) >= 2 and parts[0] not in catalogs:
+    if len(parts) >= 2 and parts[0] != "spark_catalog" and (
+        spark.conf.get(f"spark.sql.catalog.{parts[0]}", None) is None
+    ):
         db = "_".join(parts)
         spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
         return f"`{db}`.`{table}`"

@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
+from interop_spark.operators.kernels import forget_zip_finders
+
 # FHIR R4 elements with cardinality 0..* among the paths this engine maps
 # (public R4 structure knowledge).
 REPEATED_SEGMENTS = frozenset(
@@ -121,6 +123,7 @@ class FhirEncoder:
         func = self.f
 
         def _encode(v):
+            forget_zip_finders()
             if v is None:
                 return None
             x = json.loads(v) if partial_json else v

@@ -1,5 +1,6 @@
 """Numpy kernels shared by the Arrow-vectorized scorers (the
-``pandas_udf`` bodies in ``similarity`` and ``pq``).
+``pandas_udf`` bodies in ``similarity`` and ``pq``), and
+``forget_zip_finders``, which every engine Python body calls first.
 
 Each scorer is pinned bit-identical to the interpreted Spark fold it
 replaces, so every kernel here reproduces that fold's IEEE-754
@@ -18,9 +19,36 @@ propagate NULL.
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
+
+
+def forget_zip_finders() -> None:
+    """Drop the ``zipimporter`` finders from ``sys.path_importer_cache``.
+
+    A Python worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``pyspark.worker_util.setup_spark_files``), and on
+    CPython 3.10+ that makes each cached ``zipimporter`` re-read its
+    whole archive directory. A reused worker holds 16 of them
+    (pyspark.zip 12 times, the spark-core jar and py4j twice each, on
+    PySpark 4.1 and CPython 3.11): on a 4-vCPU host an identity
+    ``pandas_udf`` job over 500 embeddings took 240 ms with them and
+    90 ms without. Without the finders the next task's invalidation has
+    nothing to re-read; a later import through one of those paths
+    rebuilds its finder from zipimport's own directory cache, without
+    touching the archive.
+
+    Every engine ``pandas_udf``/``udf``/``mapInPandas``/
+    ``applyInPandasWithState`` body calls this as its first statement,
+    by name (``tests/test_zip_finders.py`` guards that)."""
+    cache = sys.path_importer_cache
+    for path in [
+        p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)
+    ]:
+        del cache[path]
 
 
 def round_spark(a: np.ndarray, digits: int) -> np.ndarray:

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from interop_spark.operators.kernels import forget_zip_finders
+
 COV_ROUND = 9  # shared with the oracle: round before the iteration
 PCA_ITERS = 3
 
@@ -39,6 +41,7 @@ def gram_stats(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     import numpy as np
 
     def _acc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_finders()
         g = None
         s = None
         n = 0

@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from interop_spark.operators.kernels import forget_zip_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -263,6 +265,7 @@ def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
     feature_dim = FEATURE_DIM
 
     def _extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        forget_zip_finders()
         import hashlib as _hl
 
         import pandas as pd
@@ -319,6 +322,7 @@ def image_dims(df: DataFrame) -> DataFrame:
     fine (pruned by the projection Spark pushes into the scan)."""
 
     def _dims(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        forget_zip_finders()
         import pandas as pd
 
         for pdf in batches:
@@ -438,6 +442,7 @@ def audio_stats(df: DataFrame) -> DataFrame:
     scale/batching posture as ``image_dims``."""
 
     def _stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        forget_zip_finders()
         import pandas as pd
 
         for pdf in batches:
@@ -533,6 +538,7 @@ def video_meta(df: DataFrame) -> DataFrame:
     Unrecognized payloads yield NULLs, never task failures."""
 
     def _meta(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        forget_zip_finders()
         import pandas as pd
 
         for pdf in batches:

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from interop_spark.operators.kernels import (
+    forget_zip_finders,
     round_spark,
     stack,
     sumsq_lr,
@@ -104,9 +105,12 @@ def pq_train(
     # (m, cell, pos)-keyed aggregate updates all M codebooks together
     # (shuffle carries map-side combined partials, never raw vectors —
     # kmeans.centroid_update's shape, keyed by subspace as well as
-    # cell). A NULL/wrong-dim vector yields NULL codes, and
-    # posexplode(NULL) emits nothing — identical net contribution to
-    # the r19 fold shape (NULL sv rows exploded to zero (pos, v) rows).
+    # cell). Its at most k·d rows — the size of the codebooks returned
+    # — are collected and each codeword is assembled driver-side in
+    # ``pos`` order: one shuffle per iteration. A NULL/wrong-dim vector
+    # yields NULL codes, and posexplode(NULL) emits nothing — identical
+    # net contribution to the r19 fold shape (NULL sv rows exploded to
+    # zero (pos, v) rows).
     for _ in range(iters):
         enc = df.select(
             as_double(col(vec_col)).alias("_v"),
@@ -123,19 +127,14 @@ def pq_train(
             )
             .groupBy("m", "cell", "pos")
             .agg(F.round(F.avg(col("v").cast("double")), 9).alias("mu"))
-            .groupBy("m", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                    lambda s: s["mu"],
-                ).alias("centroid")
-            )
             .collect()
         )
-        new = {
-            (int(r["m"]), int(r["cell"])): [float(x) for x in r["centroid"]]
-            for r in rows
-        }
+        mus: dict = {}
+        for r in rows:
+            mus.setdefault((int(r["m"]), int(r["cell"])), {})[
+                int(r["pos"])
+            ] = float(r["mu"])
+        new = {key: [mu[p] for p in sorted(mu)] for key, mu in mus.items()}
         # empty cells keep their previous codeword (standard practice).
         # Iterate the ACTUAL codebook length, not k: first-k seeding on a
         # corpus with fewer than k vectors yields a shorter seed list, and
@@ -205,6 +204,7 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
 
     @pandas_udf("array<int>")
     def _codes(s):
+        forget_zip_finders()
         import pandas as pd
 
         vals = list(s)

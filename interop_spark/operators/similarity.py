@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from interop_spark.operators.kernels import (
     dot_lr,
+    forget_zip_finders,
     round_spark,
     stack,
     sumsq_lr,
@@ -292,6 +293,7 @@ def query_cosine_udf(
     out_type = "bigint" if ppb is not None else "double"
 
     def _score(s):
+        forget_zip_finders()
         import pandas as pd
 
         vals = list(s)
@@ -329,6 +331,7 @@ def pair_cosine_udf(round_digits: int):
     from pyspark.sql.functions import pandas_udf
 
     def _score(sa, sb):
+        forget_zip_finders()
         import pandas as pd
 
         la, lb = list(sa), list(sb)
@@ -373,6 +376,7 @@ def lsh_bucket_udf(planes: list[list[float]]):
 
     @pandas_udf("int")
     def _bucket(s):
+        forget_zip_finders()
         import pandas as pd
 
         vals = list(s)
@@ -435,6 +439,7 @@ def nearest_centroid_udf(
     cn = np.sqrt(sumsq_lr(C)) if len(cents) else None
 
     def _cell(s):
+        forget_zip_finders()
         import pandas as pd
 
         vals = list(s)

@@ -250,14 +250,15 @@ def _sql_lit(v, typ: str) -> str | None:
     return None
 
 
-def _panel_df(spark, rows, fields):
+def panel_df(spark, rows, fields):
     """Bounded driver-side result panel as ONE ``F.expr`` parse —
     ``inline(array(named_struct(...), ...))`` — instead of per-element
     py4j ``F.lit`` construction (~6 py4j round-trips per cell made the
     literal build itself the dominant construction cost; the r19
     PQ-codebook lesson). ``fields`` is [(name, spark_sql_type_text)];
     falls back to the F.lit path when any value lacks an exact SQL
-    literal form."""
+    literal form. The panel is one partition, so a sort over it needs
+    no range exchange."""
     texts = []
     for row in rows:
         parts = []
@@ -271,11 +272,11 @@ def _panel_df(spark, rows, fields):
             break
         texts.append("named_struct(" + ", ".join(parts) + ")")
     if texts is not None:
-        return spark.range(1).select(
+        return spark.range(1, numPartitions=1).select(
             F.expr("inline(array(" + ", ".join(texts) + "))")
         )
     return (
-        spark.range(1)
+        spark.range(1, numPartitions=1)
         .select(
             F.explode(
                 F.array(
@@ -376,7 +377,7 @@ def rank_sketch_quantiles(
         )
         er = min((e for _, _, e in qual if e is not None), default=None)
         out_rows.append((label, ev, er, n, t, n_kept))
-    return _panel_df(
+    return panel_df(
         spark,
         out_rows,
         [
@@ -468,7 +469,7 @@ def rank_sketch_group_quantile(
     if not thr_py:  # degenerate empty corpus: schema-matched empty
         return _empty()
     # per-group thresholds re-enter as a broadcast literal frame
-    thr_lit = _panel_df(
+    thr_lit = panel_df(
         spark,
         sorted(thr_py.items(), key=lambda kv: str(kv[0])),
         [("g", g_type), ("t", "int")],
@@ -500,4 +501,4 @@ def rank_sketch_group_quantile(
         out_rows.append((g, ev, er, n_py[g], thr_py[g], n_kept))
     if not out_rows:
         return _empty()
-    return _panel_df(spark, out_rows, empty_fields)
+    return panel_df(spark, out_rows, empty_fields)

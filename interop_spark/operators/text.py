@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from interop_spark.operators.kernels import forget_zip_finders
+
 # Small public stopword lists (frequency lists are public knowledge).
 # Kept tiny on purpose: the language-ID heuristic scores stopword hits.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -124,6 +126,7 @@ def bpe_pieces_udf(merges: list[tuple[str, str]] | None = None):
 
     @pandas_udf("string")
     def _enc(words):  # pd.Series -> pd.Series
+        forget_zip_finders()
         ranks = {pair: i for i, pair in enumerate(table)}
         return words.map(
             lambda w: None if w is None else " ".join(_bpe_merge(list(w), ranks))
@@ -344,12 +347,20 @@ def gopher_quality_flags(text: Column) -> Column:
 
 def word_ngrams(text: Column, n: int) -> Column:
     """Word n-grams joined with single spaces (WITH multiplicity — the
-    repetition signals need counts, unlike the dedup shingles)."""
-    t = tokens(text)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-    )
+    repetition signals need counts, unlike the dedup shingles).
+
+    The token array is bound once, as the lambda variable of a
+    one-element ``transform``: referenced inside the n-gram lambda, an
+    inline ``tokens(text)`` would split the document again for every
+    n-gram (O(words²) per document)."""
+
+    def _grams(t: Column) -> Column:
+        return F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+        )
+
+    return F.element_at(F.transform(F.array(tokens(text)), _grams), 1)
 
 
 def _run_fold(sorted_ngrams: Column) -> Column:

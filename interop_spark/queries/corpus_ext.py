@@ -35,6 +35,8 @@ from pyspark.sql.functions import col
 
 from interop_spark.io import load, load_spread
 from interop_spark.operators import dedup as dd
+from interop_spark.operators.kernels import forget_zip_finders
+from interop_spark.operators.sketch import panel_df
 from interop_spark.operators.text import tokens as tx_tokens
 from interop_spark.operators.theta import (
     THETA_K,
@@ -220,30 +222,11 @@ def q_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("").alias(cols[1]),
             *[F.lit(None).cast("long").alias(c) for c in cols[2:]],
         )
-    # JVM-side literal explode (the pair-panel pattern): one expr parse,
-    # no Python-backed scan
-    return (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(row[0]).alias(cols[0]),
-                            F.lit(row[1]).alias(cols[1]),
-                            *[
-                                F.lit(v).cast("long").alias(c)
-                                for v, c in zip(row[2:], cols[2:])
-                            ],
-                        )
-                        for row in out_rows
-                    ]
-                )
-            ).alias("r")
-        )
-        .select("r.*")
-        .orderBy("source_a", "source_b")
-    )
+    # one expr parse (sketch.panel_df); the panel is one partition, so
+    # the sort needs no range exchange
+    fields = [(c, "string") for c in cols[:2]]
+    fields += [(c, "bigint") for c in cols[2:]]
+    return panel_df(spark, out_rows, fields).orderBy("source_a", "source_b")
 
 
 def _theta_oracle() -> str:
@@ -1017,6 +1000,7 @@ def q_unicode_normalize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @pandas_udf("string")
     def nfc(s: pd.Series) -> pd.Series:
+        forget_zip_finders()
         import unicodedata
 
         return s.map(

@@ -44,6 +44,14 @@ ENGINE_CONF: dict[str, str] = {
     # like the driver heap below, it only takes effect when the JVM
     # starts.
     "spark.sql.codegen.cache.maxEntries": "4096",
+    # With DataFrame debugging on (PySpark's default), every DataFrame
+    # and functions API call captures the Python call stack and makes
+    # extra JVM round trips to record it as the call site shown in
+    # error messages: about 1 ms per call (F.col 1.34 ms against
+    # 0.39 ms off), and query construction makes hundreds of such
+    # calls. PySpark reads the switch once per process, from the first
+    # active session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local[N] puts driver + all executor threads + every localCheckpoint
     # block in ONE JVM; Spark's 1 GiB default heap on a 32-core/128 GiB
     # box OOMs under any real working set (round-4 bench died exactly

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from interop_spark.operators.kernels import forget_zip_finders
+
 EVENT_JSON_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -111,6 +113,7 @@ def sessionize_stream(
     gap = float(gap_seconds)
 
     def _fn(key, pdfs, state):
+        forget_zip_finders()
         import pandas as pd
 
         user_id = key[0]
@@ -212,6 +215,7 @@ def sessionize_stream_event_time(
     gap = float(gap_seconds)
 
     def _fn(key, pdfs, state):
+        forget_zip_finders()
         import pandas as pd
 
         user_id = key[0]

@@ -427,3 +427,16 @@ def test_mmr_rerank_string_ids_and_null_embeddings(spark):
     assert [r["id"] for r in out] == ["a", "b", "c"]
     assert dict(df.dtypes)["doc"] == "string"
     assert all(r["rel_ppb"] is not None for r in out)
+
+
+def test_theta_setops_result_sorts_without_exchange(spark):
+    """The pair panel is one literal partition, so the final sort by
+    (source_a, source_b) plans no range exchange (and runs as one job)."""
+    from interop_spark.queries.corpus_ext import q_theta_sketch_setops
+
+    df = q_theta_sketch_setops(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    rows = df.collect()
+    keys = [(r["source_a"], r["source_b"]) for r in rows]
+    assert len(rows) == 6 and keys == sorted(keys)

@@ -1048,3 +1048,37 @@ def test_omop_note_decodes_base64_payload(spark):
         r.note_title, r.note_text, r.encoding_source_value,
     ) == ("n1", "p7", "2022-03-04", "11506-3", "visit-note", body,
           "text/plain")
+
+
+def test_table_name_resolution_fires_no_spark_job(spark):
+    """``resolve_table_name`` decides whether the first part of a
+    location names a catalog from the session conf, so neither it nor
+    ``drop_table_if_exists`` fires a Spark job (``listCatalogs`` did,
+    on every call); 1-, 2- and 3-part locations keep their names."""
+    from interop_spark.fhir.write import drop_table_if_exists, resolve_table_name
+
+    sc = spark.sparkContext
+    group = "table-name-resolution"
+    sc.setJobGroup(group, group)
+    try:
+        names = [
+            resolve_table_name(spark, loc, "Patient")
+            for loc in (
+                "rtn_db",
+                "rtn_hls.rtn_dev",
+                "rtn_cat.rtn_hls.rtn_dev",
+                "spark_catalog.rtn_db2",
+            )
+        ]
+        drop_table_if_exists(spark, "rtn_cat.rtn_hls.rtn_dev.Patient")
+        drop_table_if_exists(spark, "rtn_db.Patient")
+        drop_table_if_exists(spark, "rtn_plain_table")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert names == [
+        "`rtn_db`.`Patient`",
+        "`rtn_hls_rtn_dev`.`Patient`",
+        "`rtn_cat_rtn_hls_rtn_dev`.`Patient`",
+        "`spark_catalog`.`rtn_db2`.`Patient`",
+    ]
+    assert not sc.statusTracker().getJobIdsForGroup(group)

@@ -1457,3 +1457,107 @@ def test_rank_sketch_group_quantile_per_group_isolation(spark):
     assert out["small"].threshold_level == 0
     assert out["small"].n_kept == 10
     assert out["small"].est_value == 8  # exact p90 of 0..9
+
+
+def test_word_ngrams_split_once_equals_per_ngram_split(spark, sf_dir):
+    """``word_ngrams`` binds the token array once; the n-grams equal the
+    form that re-tokenized the document inside the n-gram lambda, on the
+    documents fixture plus empty, blank, NULL and short texts, and the
+    optimized plan splits each document once."""
+    from interop_spark.io import load
+    from interop_spark.operators.text import tokens, word_ngrams
+
+    def per_ngram_split(text, n):
+        t = tokens(text)
+        return F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+        )
+
+    edge = spark.createDataFrame(
+        [(-1, ""), (-2, "   "), (-3, None), (-4, "one"), (-5, "one two"),
+         (-6, "  a\tb  c "), (-7, "x y z w")],
+        "doc_id long, text string",
+    )
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    d = docs.unionByName(edge)
+    for n in (1, 2, 3, 5):
+        rows = d.select(
+            "doc_id",
+            word_ngrams(F.col("text"), n).alias("got"),
+            per_ngram_split(F.col("text"), n).alias("ref"),
+        ).collect()
+        assert len(rows) == docs.count() + 7
+        for r in rows:
+            assert r.got == r.ref, (n, r.doc_id, r.got, r.ref)
+    plan = (
+        docs.select(word_ngrams(F.col("text"), 3).alias("g"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("split(") == 1, plan
+
+
+def test_pq_train_codebooks_equal_two_level_aggregate(spark, sf_dir):
+    """The Lloyd update collects the (m, cell, pos, mu) rows and builds
+    each codeword driver-side in ``pos`` order; the codebooks equal the
+    two-level aggregate that assembled each codeword with
+    collect_list/array_sort on the cluster."""
+    from interop_spark.io import load
+    from interop_spark.operators.pq import pq_codes_udf, pq_train
+    from interop_spark.operators.similarity import as_double
+
+    e = load(spark, sf_dir, "embeddings")
+    M, K, ITERS, DIM = 8, 8, 2, 64
+    sub = DIM // M
+
+    seeds = (
+        e.select(
+            F.col("vec_id").alias("sid"),
+            as_double(F.col("embedding")).alias("v"),
+        )
+        .orderBy("sid")
+        .limit(K)
+        .collect()
+    )
+    ref = [
+        [[float(x) for x in r["v"][m * sub : (m + 1) * sub]] for r in seeds]
+        for m in range(M)
+    ]
+    for _ in range(ITERS):
+        enc = e.select(
+            as_double(F.col("embedding")).alias("_v"),
+            pq_codes_udf(ref)(F.col("embedding")).alias("_codes"),
+        )
+        rows = (
+            enc.select(F.posexplode("_codes").alias("m", "cell"), "_v")
+            .select(
+                "m",
+                "cell",
+                F.posexplode(
+                    F.expr(f"slice(_v, m * {sub} + 1, {sub})")
+                ).alias("pos", "v"),
+            )
+            .groupBy("m", "cell", "pos")
+            .agg(F.round(F.avg(F.col("v").cast("double")), 9).alias("mu"))
+            .groupBy("m", "cell")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "mu"))),
+                    lambda s: s["mu"],
+                ).alias("centroid")
+            )
+            .collect()
+        )
+        new = {
+            (int(r["m"]), int(r["cell"])): [float(x) for x in r["centroid"]]
+            for r in rows
+        }
+        ref = [
+            [new.get((m, c), ref[m][c]) for c in range(len(ref[m]))]
+            for m in range(M)
+        ]
+
+    got = pq_train(e, m_subspaces=M, k=K, iters=ITERS, dim=DIM)
+    assert got == ref

@@ -1,4 +1,4 @@
-"""Session-config contracts (no SparkSession needed)."""
+"""Session-config contracts (only the last test needs a SparkSession)."""
 import os
 
 from interop_spark.session import ENGINE_CONF, object_store_conf
@@ -29,3 +29,15 @@ def test_object_store_conf_shape():
     assert conf["spark.hadoop.fs.s3a.threads.max"] == "128"
     # mergeable into get_spark(extra_conf=...) without key collisions
     assert not set(conf) & set(ENGINE_CONF)
+
+
+def test_live_session_captures_no_call_sites(spark):
+    # with DataFrame debugging on, every PySpark API call captures the
+    # Python stack and makes extra JVM calls to record its call site
+    assert (
+        ENGINE_CONF["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+    )
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
