@@ -265,18 +265,18 @@ def _scaling_probes(spark, sf_dir: str) -> dict:
 
         fp = d.select("doc_id", "text", tx.fingerprint(col("text")).alias("_fp"))
         reps = fp.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
+        # keep1 exits the keep-list join with the join's output
+        # partitioning (sized by the JOIN, not by the CPU-heavy shingle
+        # work that follows) — rebalance to defaultParallelism before
+        # the checkpoint, as a 100 TB run does after any selective
+        # filter stage.
         keep1 = (
             fp.join(reps, ["_fp", "doc_id"]).select("doc_id", "text")
+            .repartition(spark.sparkContext.defaultParallelism)
             .localCheckpoint()
         )
-        # spread=True: keep1 exits the keep-list join with the join's
-        # output partitioning (32 shuffle partitions sized by the JOIN,
-        # not by the CPU-heavy shingle work that follows) — rebalancing
-        # to defaultParallelism before signature hashing is the r9
-        # verdict item-7 experiment and mirrors what the 100 TB run
-        # does after any selective filter stage.
         pairs = dd.minhash_candidate_pairs(
-            keep1, "doc_id", "text", spread=True
+            keep1, "doc_id", "text"
         ).where(col("jaccard_sim") >= 0.5)
         drop2 = pairs.select(col("doc_b").alias("doc_id")).distinct()
         return keep1.join(drop2, "doc_id", "left_anti")
@@ -353,7 +353,7 @@ def _scaling_probes(spark, sf_dir: str) -> dict:
     probes = {
         "exact_dedup": lambda d: dd.exact_dup_groups(d, "text", "doc_id"),
         "minhash_lsh_neardup": lambda d: dd.minhash_candidate_pairs(
-            d, "doc_id", "text", spread=False  # input pre-repartitioned
+            d, "doc_id", "text"
         ),
         "simhash_neardup_pairs": simhash_pairs,
         "simhash_noguard": simhash_pairs_noguard,
@@ -422,7 +422,7 @@ def _scaling_probes(spark, sf_dir: str) -> dict:
         # bands before the self-join. Done = ratio_10x within ~2x of
         # the uniform minhash probe's.
         "minhash_skew": lambda d: dd.minhash_candidate_pairs(
-            d, "doc_id", "text", spread=False, max_band_docs=64
+            d, "doc_id", "text", max_band_docs=64
         ),
         # round-11 (r10 verdict item 5): ivfpq_search drifted up two
         # rounds on untouched code; the headline query re-TRAINS the PQ

@@ -77,20 +77,26 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``load`` + a scale-adaptive width guarantee for queries whose
-    next stage is CPU-heavy per-row work (md5 shingling, signature
-    hashing, per-row codecs).
+    """``load`` plus the engine's one scan-width rule. Scan width is
+    decided here and nowhere else: no operator repartitions its input.
 
     A production table arrives in many splits and passes through
-    UNTOUCHED — the size check below short-circuits driver-side (plain
-    ``os.stat``, no Spark job, no listing) and no exchange is ever
-    added to the plan. A local single-row-group fixture file arrives
-    as ONE split, which pins the whole downstream hash stage on one
-    core — the optimization guide's "one huge unsplittable file"
-    input-skew case (§2.5); for those inputs only, repartition to the
+    UNTOUCHED: the size check below is a driver-side ``os.stat`` (no
+    Spark job, no listing) and adds no exchange to the plan. A local
+    single-row-group fixture file arrives as ONE split, which pins the
+    whole downstream stage on one core (the "one huge unsplittable
+    file" input-skew case); for those inputs only, repartition to the
     session's default parallelism. The threshold (4 MB of input per
-    core) keeps the rule conservative: anything near a real split
-    size per core stays on its scan layout.
+    core) keeps the rule conservative: anything near a real split size
+    per core stays on its scan layout.
+
+    Queries call it when their next stage is CPU-heavy per-row work
+    over the whole table (md5 shingling, signature hashing, per-row
+    folds) and call plain ``load`` when the per-row pass is cheap or
+    reads a bounded slice, where the round-robin exchange costs more
+    than it buys. A derived frame that needs width (a union of
+    one-split branches) gets an explicit ``repartition`` in the query,
+    before its checkpoint.
     """
     df = load(spark, sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"

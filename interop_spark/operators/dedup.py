@@ -187,7 +187,6 @@ def minhash_candidate_pairs(
     bands: int = 4,
     rows: int = 3,
     shingle_n: int = 3,
-    spread: bool = True,
     max_band_docs: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidates with exact-Jaccard verification.
@@ -204,12 +203,8 @@ def minhash_candidate_pairs(
     shingle and band tables are checkpointed, so the hashing runs ONCE
     instead of once per self-join side plus once per verification side.
 
-    ``spread=True`` repartitions the input to ``defaultParallelism``
-    before the (CPU-heavy) shingle+signature projection. Per-row
-    signature work inherits the INPUT's split count — fine on a
-    many-split 100 TB table, pathological on a single large file where
-    the whole corpus hashes on one core. Values are unaffected; pass
-    ``False`` when the input's partitioning is already wide.
+    The signature work runs at the input's width; ``io.load_spread``
+    owns that choice.
 
     ``max_band_docs`` is the hot-band guard (``drop_hot_keys``): a band
     key shared by more than that many documents — a boilerplate
@@ -230,7 +225,6 @@ def minhash_candidate_pairs(
         bands=bands,
         rows=rows,
         shingle_n=shingle_n,
-        spread=spread,
         max_band_docs=max_band_docs,
     )
     a = shing.select(
@@ -258,7 +252,6 @@ def _minhash_candidates(
     bands: int = 4,
     rows: int = 3,
     shingle_n: int = 3,
-    spread: bool = True,
     max_band_docs: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate generation core of ``minhash_candidate_pairs``: returns
@@ -267,8 +260,6 @@ def _minhash_candidates(
     Jaccard (``edit_verified_pairs``' Levenshtein) can skip the two
     shingle re-joins entirely — the unused shingle frame is lazy and
     never enters their plan."""
-    if spread:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     shing, banded = _shingle_band_tables(
         df, id_col, text_col, k, bands, rows, shingle_n
     )

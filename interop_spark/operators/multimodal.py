@@ -254,30 +254,18 @@ def decode_image(data: bytes, fake: bool = False) -> list[float]:
     return feats + [0.0] * (FEATURE_DIM - len(feats))
 
 
-def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over binary media columns.
+def extract_features(df: DataFrame) -> DataFrame:
+    """mapInPandas feature extraction over binary media columns, with the
+    deterministic stub decode (``decode_image(fake=True)``).
 
     Arrow-batched: each pandas DataFrame chunk is one Arrow batch; the
     loop is vectorized per column where possible and the binary payload is
     dropped from the output (features only travel onward).
     """
 
-    feature_dim = FEATURE_DIM
-
     def _extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         forget_zip_finders()
-        import hashlib as _hl
-
         import pandas as pd
-
-        def _decode(b):
-            if not fake_decode:
-                raise NotImplementedError(
-                    "image decode requires an imaging library not available "
-                    "in this environment; pass fake_decode=True for the stub"
-                )
-            digest = _hl.sha256(b).digest()
-            return [digest[i] / 255.0 for i in range(feature_dim)]
 
         for pdf in batches:
             data = pdf["data"]
@@ -287,12 +275,14 @@ def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
                     "kind": pdf["kind"],
                     "n_bytes": data.map(lambda b: len(b) if b is not None else 0),
                     "sha256": data.map(
-                        lambda b: _hl.sha256(b).hexdigest()
+                        lambda b: hashlib.sha256(b).hexdigest()
                         if b is not None
                         else None
                     ),
                     "features": data.map(
-                        lambda b: _decode(b) if b is not None else None
+                        lambda b: decode_image(b, fake=True)
+                        if b is not None
+                        else None
                     ),
                 }
             )

@@ -55,7 +55,7 @@ def theta_items(df: DataFrame, group: Column, key: Column) -> DataFrame:
 
 
 def theta_sketch(
-    items: DataFrame, k: int = THETA_K, materialize: bool = True
+    items: DataFrame, k: int = THETA_K
 ) -> tuple[DataFrame, DataFrame]:
     """Per-group bottom-k sketch from a (g, k, h) item frame. Returns
     ``(kept, theta)``: ``kept`` holds the <= k smallest-hash rows per
@@ -72,6 +72,10 @@ def theta_sketch(
     the window sort. This is the same two-scan discipline as
     `rank_sketch_build`, reversed: that sketch needs any
     capacity-bounded sample, this one needs the exact k minima.
+
+    Both frames are lazy and construction fires no Spark job; a caller
+    that reads ``kept`` more than once checkpoints it (``fold_events``
+    does, as the next state).
     """
     from pyspark.sql.window import Window
 
@@ -112,24 +116,9 @@ def theta_sketch(
         "rn",
         F.row_number().over(Window.partitionBy("g").orderBy("h", "k")),
     )
-    # kept is <= k rows per group BY CONSTRUCTION — localCheckpoint it
-    # (the bounded-sketch-frame discipline of rank_sketch_build) so the
-    # pair algebra's several references to kept/theta read a tiny
-    # materialized frame instead of re-deriving the histogram +
-    # survivor sort per reference. Callers that consume kept EXACTLY
-    # ONCE (q_theta_sketch_setops collects it for the driver-side pair
-    # algebra) pass materialize=False — their single action IS the
-    # materialization, and the checkpoint job would be pure overhead
-    # (r20 optimization round).
+    # kept is <= k rows per group BY CONSTRUCTION; theta is a tiny
+    # aggregate over it
     kept = ranked.where(col("rn") <= k).select("g", "k", "h", "rn")
-    if materialize:
-        kept = kept.coalesce(
-            items.sparkSession.sparkContext.defaultParallelism
-        ).localCheckpoint()
-    # theta stays LAZY (r19 optimization round): it is a tiny aggregate
-    # over the checkpointed kept frame, so each consumer re-derives it
-    # for less than the cost of the extra checkpoint job the old
-    # .localCheckpoint() scheduled.
     theta = (
         kept.groupBy("g")
         .agg(

@@ -33,40 +33,39 @@ _MODULES = (
 # Invariant: every query whose RESULT a change could affect — judged
 # module-granularly over the query's transitive imports, with any
 # finer-than-module claim stated here — sits inside the first 50;
-# everything past 50 has a green row in a prior CORRECTNESS file and its
-# result-producing code is unchanged since that check. Belt and
+# everything past 50 was green in the correctness gate after its last
+# change (a CORRECTNESS file, or the window at an earlier commit) and
+# its result-producing code is unchanged since that check. Belt and
 # suspenders: `tests/driver_sim.py` runs ALL queries against their
 # oracles locally. The window's history is in git log.
 #
 # Current slots:
 #   * events-stream folds (8): every registered fold over the events
-#     stream runs through `streaming/cdc.py:fold_events`. The other
-#     hunks in their modules (analytics_q, corpus_ext, selection_q,
-#     temporal_q) only delete unregistered code or helpers no
-#     registered row used, so those modules' other rows stay out.
+#     stream runs through `streaming/cdc.py:fold_events`.
+#   * memory-sink streams (7): every registered `availableNow` stream
+#     drains through `streaming/streams.py:drain`, which starts it at
+#     min(session, defaultParallelism) shuffle partitions: the six
+#     temporal_q stream rows and stream_neardup_pairs.
+#   * multimodal_features (1): `extract_features` calls
+#     `decode_image`'s stub instead of an inline copy.
 #   * operator modules changed after the round-20 CORRECTNESS check
-#     (41): the rows whose transitive imports reach dedup.py or
-#     kmeans.py (isEmpty convergence probes; one band table, hot-key
-#     guard and checkpoint rule for the near-duplicate generators), or
-#     pq.py, similarity.py, text.py, multimodal.py and kernels.py (one
-#     Spark-Round kernel, engine shipped to workers by value).
-#   * round-20 rewrite still holding a slot (1): green in CORRECTNESS
-#     r20 and unchanged since; it yields first when a slot is needed.
-#     quantile_sketch_estimate, domain_quantile_sketch and
-#     bsq_hamming_search yielded theirs and are unchanged since r20.
+#     (34): the rows whose code reaches dedup.py (no operator
+#     repartitions; one band table, hot-key guard and checkpoint rule),
+#     theta.py (no checkpoint inside theta_sketch), text.py, pq.py,
+#     similarity.py or kernels.py.
+#
+# Rows that yielded their slot to this layout were inside the window at
+# the parent commit (so the correctness gate checked them there) and this
+# change does not touch their code: kmeans_fit, kmeans_one_step,
+# knn_cosine, ivf_index_search, ivf_multiprobe_topk, ivf_recall_at_k and
+# the round-20 rewrite fhir_notebook_e2e.
 #
 # Finer-than-module claims for rows left outside the window:
-#   * io.py: only `load_stream`'s file-to-directory shim moved, to one
-#     reused directory per source file. Its five events rows
-#     (stream_windowed_counts, stream_dedup_counts,
-#     stream_sessionize_counts, stream_join_pairs,
-#     stream_join_pairs_watermarked) read the same file as before.
-#   * streaming/streams.py: only `stream_neardup_pairs` changed (its
-#     band keys now come from `dedup.band_table`); it holds a slot.
-#   * pipeline.py: only `embedding_neardup` changed (its bucket table is
-#     checkpointed unconditionally); it holds a slot.
-#   * fhir_queries.py: only lost `notebook_e2e_leg_times`, which no
-#     registered row calls.
+#   * io.py: only `load_spread`'s docstring changed.
+#   * pipeline.py, pipeline_ext.py, selection_q.py, corpus_ext.py:
+#     outside the window rows, only comments changed.
+#   * temporal_q.py: only the six stream rows changed.
+#   * fhir_queries.py: only multimodal_features changed.
 # --------------------------------------------------------------------------
 _WINDOW = (
     # --- events-stream folds (streaming/cdc.py:fold_events) ---
@@ -78,22 +77,26 @@ _WINDOW = (
     "stream_daily_anomaly",
     "stream_bitmap_distinct",
     "stream_type_jaccard",
-    # --- pq.py / similarity.py / kmeans.py / kernels.py ---
+    # --- memory-sink streams (streaming/streams.py:drain) ---
+    "stream_windowed_counts",
+    "stream_dedup_counts",
+    "stream_sessionize_counts",
+    "stream_ndjson_counts",
+    "stream_join_pairs",
+    "stream_join_pairs_watermarked",
+    "stream_neardup_pairs",
+    # --- multimodal.py ---
+    "multimodal_features",
+    # --- pq.py / similarity.py / kernels.py ---
     "pq_encode",
     "pq_adc_topk",
     "ivfpq_search",
     "ivfpq_rerank",
     "ivfpq_rerank_sweep",
     "ivfpq_residual_search",
-    "ivf_index_search",
     "ivf_probe_topk",
-    "ivf_multiprobe_topk",
-    "ivf_recall_at_k",
-    "kmeans_fit",
-    "kmeans_one_step",
     "semdedup_keep",
     "corpus_clean",
-    "knn_cosine",
     "embedding_neardup",
     "lsh_bucket_sizes",
     "mmr_rerank",
@@ -118,12 +121,9 @@ _WINDOW = (
     "neardup_clusters_star",
     "dedup_representatives",
     "edit_distance_neardup",
-    "stream_neardup_pairs",
     "simhash_neardup_pairs",
     "dup_span_removal",
     "containment_neardup",
-    # --- round-20 rewrite holding a slot ---
-    "fhir_notebook_e2e",
 )
 
 def _merged(attr: str) -> dict:

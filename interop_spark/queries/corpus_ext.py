@@ -84,8 +84,7 @@ def q_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded broadcast frames. The exact audit is the only
     vocabulary-sized join and exists purely as the yardstick."""
     # load_spread: the shingle+md5 distinct pass is the query's only
-    # corpus-sized CPU stage — guarantee it scan width (no-op on real
-    # multi-split tables; see io.load_spread)
+    # corpus-sized CPU stage
     d = load_spread(spark, sf_dir, "documents").where(
         col("source").isin(*THETA_SOURCES)
     )
@@ -99,16 +98,13 @@ def q_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes) AND the exact audit — localCheckpoint it once, coalesced
     # to the executor parallelism so downstream scans of the
     # vocabulary-bounded frame don't inherit the distinct's full
-    # shuffle-partition fan-out
+    # shuffle-partition fan-out; released once the two collects return
     items = (
         theta_items(sh, col("source"), col("k"))
         .coalesce(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
     )
-    # materialize=False: the ONLY consumer of kept is the collect below
-    # — that action is the materialization, the checkpoint job was pure
-    # overhead (r20)
-    kept, _theta = theta_sketch(items, k=THETA_K, materialize=False)
+    kept, _theta = theta_sketch(items, k=THETA_K)
 
     # ---- driver-side pair algebra over k-bounded state (r19 opt) ----
     # `theta_pair_setops` (operators/theta.py, unchanged, still pinned
@@ -153,17 +149,24 @@ def q_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     # the sketch collect and the audit collect are INDEPENDENT bounded
-    # jobs over the checkpointed items frame — overlap them (guide
-    # §2.6, the fhir/write.py thread-pool precedent) so one job's tail
-    # back-fills the other's ramp-up (r20)
+    # jobs over the checkpointed items frame — overlap them (the
+    # fhir/write.py thread-pool precedent) so one job's tail back-fills
+    # the other's ramp-up
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_k = pool.submit(inheritable_thread_target(kept_sel.collect))
-        f_a = pool.submit(inheritable_thread_target(audit_df.collect))
-        krows, audit = f_k.result(), f_a.result()
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_k = pool.submit(inheritable_thread_target(kept_sel.collect))
+            f_a = pool.submit(inheritable_thread_target(audit_df.collect))
+            krows, audit = f_k.result(), f_a.result()
+    finally:
+        # a checkpointed frame has no release call of its own: unpersist
+        # the checkpointed RDD under its plan. persist()/unpersist()
+        # releases it too, but ran 2 more jobs and 8 more stages per
+        # call (sf0.001, local[3]).
+        items._jdf.queryExecution().analyzed().rdd().unpersist(False)
     kept_by_g: dict = {}
     theta_by_g: dict = {}
     for r in krows:

@@ -295,7 +295,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("int").alias("n_frames"),
         F.lit("txt").alias("format"),
     )
-    out = extract_features(media, fake_decode=True)
+    out = extract_features(media)
     return out.select(
         "media_id", "n_bytes", "sha256", F.size("features").alias("feat_dim")
     )

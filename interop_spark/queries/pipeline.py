@@ -67,8 +67,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens, materializes the score array, then argmaxes it — the
     re-traverse-per-language form cost ~20 array passes per row."""
     # load_spread: the per-row tokenize + 20-language counter fold is
-    # the whole query — guarantee it scan width (no-op on multi-split
-    # tables; io.load_spread)
+    # the whole query
     d = load_spread(spark, sf_dir, "documents")
     scores = d.select(
         "doc_id",
@@ -121,10 +120,7 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates with exact-Jaccard verification:
     shingle → 12-hash signature → 4 bands → band-key equi-join."""
-    # plain load, NOT load_spread: the slice below is bounded (100 docs)
-    # regardless of corpus size, so the signature work never grows — a
-    # spread exchange here is overhead at every scale (measured locally:
-    # interleaved A/B favored the plain scan 3/3)
+    # plain load: the slice below is bounded (100 docs) at every scale
     d = _with_near_dups(load(spark, sf_dir, "documents"), limit=100)
     return dd.minhash_candidate_pairs(
         d, "doc_id", "text", k=MINHASH_K, bands=BANDS, rows=ROWS,
@@ -174,10 +170,8 @@ def q_stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so emitted (new, hist, jaccard) pairs must equal the batch
     construction's verified candidates exactly — stream==batch by
     shared hash/band/verify expressions."""
-    import uuid
-
     from interop_spark.io import load_stream
-    from interop_spark.streaming.streams import stream_neardup_pairs
+    from interop_spark.streaming.streams import drain, stream_neardup_pairs
 
     history = (
         load(spark, sf_dir, "documents")
@@ -198,17 +192,7 @@ def q_stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((col("doc_id") >= INC_HIST_N) & (col("doc_id") < 200))
         .select("doc_id", "text")
     )
-    pairs = stream_neardup_pairs(mut.unionByName(fresh), idx)
-    name = "stream_neardup_" + uuid.uuid4().hex[:8]
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(stream_neardup_pairs(mut.unionByName(fresh), idx))
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,10 +211,7 @@ def q_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy stays O(1) as the corpus grows; the round-1 15-bit bands
     saturated at 32k keys), and the self-join shuffles only
     (band, doc_id, sh) — AQE-splittable, no per-bucket collect_list."""
-    # plain load, NOT load_spread: the slice below is bounded (60 docs)
-    # regardless of corpus size, so the signature work never grows — a
-    # spread exchange here is overhead at every scale (measured locally:
-    # interleaved A/B favored the plain scan)
+    # plain load: the slice below is bounded (60 docs) at every scale
     d = _with_near_dups(load(spark, sf_dir, "documents"), limit=60)
     # shared operator body (operators/dedup.py:simhash_candidate_pairs);
     # max_band_docs=None → exact candidate semantics, the oracle's
@@ -470,11 +451,9 @@ def q_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled an n×C expansion through a groupBy and re-join), then search
     only the query's cell — the scan touches ~1/C of the corpus at
     scale."""
-    # plain load (r20): the assignment is Arrow-vectorized now
-    # (nearest_centroid_udf) — r19's scan spreading helped the
-    # interpreted fold; with numpy doing the per-row work a 32-way
-    # split of the small local table just pays 32 Python round-trips
-    # (on a cluster the table is multi-split and spread was a no-op)
+    # plain load: the assignment is Arrow-vectorized
+    # (nearest_centroid_udf), so a 32-way split of the small local table
+    # just pays 32 Python round-trips
     e = load(spark, sf_dir, "embeddings")
     cent = e.where(col("vec_id") < N_CENTROIDS).select(
         col("vec_id").alias("centroid_id"), col("embedding").alias("centroid")
@@ -897,10 +876,8 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lsh_bucket_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket histogram (md5-derived deterministic
     planes — the bucketing step of approximate NN at scale)."""
-    # plain load + Arrow-vectorized plane projection (r20, guide §4):
-    # numpy replaces the interpreted per-plane dot folds, so r19's scan
-    # spreading (which amortized the fold) is no longer worth its
-    # exchange on the small local table (no-op on multi-split tables)
+    # plain load: the Arrow-vectorized plane projection is cheap per
+    # row, so a spread exchange of the small local table buys nothing
     e = load(spark, sf_dir, "embeddings")
     planes = [sim._hyperplane(i, EMB_DIM) for i in range(6)]
     return (
@@ -1060,11 +1037,9 @@ def q_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a drop-list, with the per-doc gram totals carried through so the
     threshold can be ratio-based, not just any-hit."""
     # load_spread on the CORPUS side only: the tokenize + n-gram
-    # explode over every document is the dominant per-row CPU stage
-    # and a single-split fixture file pins it on one core (no-op on
-    # multi-split tables; io.load_spread). The benchmark slice stays
-    # on the plain scan — it is a bounded side that only feeds the
-    # broadcast build, where an extra exchange buys nothing.
+    # explode over every document is the dominant per-row CPU stage.
+    # The benchmark slice is a bounded side that only feeds the
+    # broadcast build, so it stays on the plain scan.
     d = load_spread(spark, sf_dir, "documents")
     bench = load(spark, sf_dir, "documents").where(col("doc_id") % 50 == 0)
     return dd.ngram_decontaminate(

@@ -317,8 +317,7 @@ def q_gopher_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     as sorted-run folds (zero shuffle; see
     ``operators/text.repetition_signals``)."""
     # load_spread: the per-doc n-gram sort+run folds are CPU-heavy
-    # per-row work over the FULL corpus — single-split fixture input
-    # would pin them on one core (no-op on multi-split tables)
+    # per-row work over the FULL corpus
     d = load_spread(spark, sf_dir, "documents")
     r = tx.repetition_signals(
         col("text"), top_ns=REP_TOP_NS, dup_ns=REP_DUP_NS
@@ -562,12 +561,10 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, train→encode, and the ADC top-k boundary."""
     from interop_spark.operators.pq import ivfpq_search, pq_train
 
-    # plain load (r20): the Lloyd/encode/ADC passes are Arrow-vectorized
-    # now (pq_codes_udf) — r19's scan spreading helped the interpreted
-    # folds, but with numpy doing the per-row work a 32-way split of the
-    # small local table just pays 32 Python round-trips per pass
-    # (interleaved A/B: spread 2.10-2.58 s vs plain ~1.6 s per rep; on a
-    # cluster the table is multi-split and spread was a no-op anyway)
+    # plain load: the Lloyd/encode/ADC passes are Arrow-vectorized
+    # (pq_codes_udf), so a 32-way split of the small local table just
+    # pays 32 Python round-trips per pass (interleaved A/B: spread
+    # 2.10-2.58 s vs plain ~1.6 s per rep)
     e = load(spark, sf_dir, "embeddings")
     cent = e.where(col("vec_id") < N_CENTROIDS).select(
         col("vec_id").alias("centroid_id"), col("embedding").alias("centroid")
@@ -850,8 +847,7 @@ def q_substring_dup_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries."""
     from interop_spark.operators.dedup import substring_dup_runs
 
-    # load_spread: the strided window-hash pass dominates — spread the
-    # scan (no-op on multi-split tables; io.load_spread)
+    # load_spread: the strided window-hash pass dominates
     d = load_spread(spark, sf_dir, "documents")
     return substring_dup_runs(
         d, w=SUBDUP_W, stride=SUBDUP_S, max_hash_docs=SUBDUP_CAP
@@ -1266,9 +1262,7 @@ def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from interop_spark.operators.dedup import winnow_dup_pairs
 
     # load_spread: the k-gram md5 + per-window struct-min selection is
-    # the query's dominant cost and runs over the FULL corpus — per-row
-    # CPU-heavy work that a single-split fixture file pins on one core
-    # (no-op on real multi-split tables; io.load_spread)
+    # the query's dominant cost and runs over the FULL corpus
     d = load_spread(spark, sf_dir, "documents")
     return winnow_dup_pairs(d, k=WINNOW_K, w=WINNOW_W, max_hash_docs=64)
 

@@ -1684,7 +1684,7 @@ def q_edit_distance_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _with_near_dups(load(spark, sf_dir, "documents"), limit=100)
     return edit_verified_pairs(
         d, "doc_id", "text", k=MINHASH_K, bands=BANDS, rows=ROWS,
-        shingle_n=SHINGLE_N, spread=False,
+        shingle_n=SHINGLE_N,
     )
 
 
@@ -1990,7 +1990,7 @@ def q_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _with_near_dups(load(spark, sf_dir, "documents"), limit=100)
     return containment_verified_pairs(
         d, "doc_id", "text", k=MINHASH_K, bands=BANDS, rows=ROWS,
-        shingle_n=SHINGLE_N, spread=False,
+        shingle_n=SHINGLE_N,
     )
 
 
@@ -2911,8 +2911,7 @@ def q_quantile_sketch_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     capacity-bounded survivor frame. Core in `operators/sketch.py`
     (shared with the streaming register-merge twin
     `stream_quantile_sketch`)."""
-    # load_spread: both sketch passes md5-hash every event_id — spread
-    # the scan (no-op on multi-split tables; io.load_spread)
+    # load_spread: both sketch passes md5-hash every event_id
     ev = load_spread(spark, sf_dir, "events")
     sk = rank_sketch_build(ev, col("value"), col("event_id"))
     est = rank_sketch_quantiles(sk)

@@ -67,12 +67,9 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory source and append mode + watermark eviction; availableNow
     + complete is the bounded-backfill configuration of that job, not a
     test-only shape."""
-    import uuid
-
     from interop_spark.io import load_stream
-    from interop_spark.streaming.streams import windowed_event_counts
+    from interop_spark.streaming.streams import drain, windowed_event_counts
 
-    name = "stream_windowed_counts_" + uuid.uuid4().hex[:8]
     src = load_stream(spark, sf_dir, "events")
     agg = windowed_event_counts(src, window="1 hour", watermark="2 hours")
     out = agg.select(
@@ -81,15 +78,7 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "total_value",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out, "complete")
 
 
 def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,27 +98,16 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: dropDuplicates state is a hash per key within the
     horizon, sharded by key across executors — the streaming form of
     the exact-dedup shuffle."""
-    import uuid
-
     from interop_spark.io import load_stream
-    from interop_spark.streaming.streams import streaming_dedupe
+    from interop_spark.streaming.streams import drain, streaming_dedupe
 
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
     src = load_stream(spark, sf_dir, "events")
     replay = load_stream(spark, sf_dir, "events").where(
         col("event_id") % 3 == 0
     )
     dedup = streaming_dedupe(src.unionByName(replay), watermark=None)
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(dedup)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -157,25 +135,17 @@ def q_stream_sessionize_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (~watermark − gap of history), sharded by user_id across
     executors; availableNow is the bounded-backfill configuration of the
     continuously-running job."""
-    import uuid
-
     from interop_spark.io import load_stream
-    from interop_spark.streaming.streams import sessionize_stream_event_time
+    from interop_spark.streaming.streams import (
+        drain,
+        sessionize_stream_event_time,
+    )
 
-    name = "stream_sessionize_" + uuid.uuid4().hex[:8]
     src = load_stream(spark, sf_dir, "events")
     sess = sessionize_stream_event_time(
         src, gap_seconds=SESSION_GAP_S, watermark=f"{SESSION_WM_S} seconds"
     )
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return drain(sess).select(
         "user_id",
         F.unix_micros(col("session_start")).alias("start_us"),
         F.unix_micros(col("session_end")).alias("end_us"),
@@ -200,27 +170,16 @@ def q_stream_ndjson_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     NDJSON micro-batches split by bytes, not files (reader.py
     ``FhirNdjson``), so ingest parallelism survives one giant
     Observation.ndjson."""
-    import uuid
-
     from interop_spark.fhir.gen import write_ndjson_corpus
     from interop_spark.queries.fhir_queries import _SYNTH_LIMIT
-    from interop_spark.streaming.streams import stream_ndjson_resources
+    from interop_spark.streaming.streams import drain, stream_ndjson_resources
 
-    name = "stream_ndjson_" + uuid.uuid4().hex[:8]
     d = write_ndjson_corpus(spark, sf_dir, max_custkey=_SYNTH_LIMIT)
     obs = stream_ndjson_resources(spark, "file://" + d, "Observation")
     out = obs.select(
         "id", "status", col("valueQuantity.value").alias("v")
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).groupBy("status").agg(
+    return drain(out).groupBy("status").agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.min("id").alias("min_id"),
         F.max("id").alias("max_id"),
@@ -249,11 +208,9 @@ def q_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice exists only to bound the oracle's quadratic check, not the
     operator. Gap arithmetic is integer µs (epoch-µs div), never float
     epoch seconds."""
-    import uuid
-
     from interop_spark.io import load_stream
+    from interop_spark.streaming.streams import drain
 
-    name = "stream_join_" + uuid.uuid4().hex[:8]
     p = (
         load_stream(spark, sf_dir, "events")
         .where((col("event_type") == "purchase") & (col("user_id") < 40))
@@ -279,15 +236,7 @@ def q_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(unix_micros(p_ts) - unix_micros(c_ts)) div 1000000"
         ).alias("gap_seconds"),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined)
 
 
 def q_stream_join_pairs_watermarked(
@@ -313,11 +262,9 @@ def q_stream_join_pairs_watermarked(
     purchases — because replaying it here would make the oracle depend
     on file-arrival order. Gap arithmetic is integer µs, never float
     epoch seconds."""
-    import uuid
-
     from interop_spark.io import load_stream
+    from interop_spark.streaming.streams import drain
 
-    name = "stream_join_wm_" + uuid.uuid4().hex[:8]
     p = (
         load_stream(spark, sf_dir, "events")
         .where((col("event_type") == "purchase") & (col("user_id") < 40))
@@ -345,15 +292,7 @@ def q_stream_join_pairs_watermarked(
             "(unix_micros(p_ts) - unix_micros(c_ts)) div 1000000"
         ).alias("gap_seconds"),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined)
 
 
 def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,8 @@ all stock Structured Streaming; no custom sinks required.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,6 +25,40 @@ EVENT_JSON_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
+
+
+def drain(stream: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a streaming frame until its sources are drained and return
+    what it emitted: an ``availableNow`` trigger into a memory sink
+    under a fresh query name, whose table comes back as a batch frame.
+
+    Stream width: a stateful operator (aggregation, dedup, stream-stream
+    join, ``applyInPandasWithState``) runs ``spark.sql.shuffle.partitions``
+    state-store tasks per micro-batch, and AQE never coalesces them. The
+    stream therefore starts with that conf at min(session value,
+    ``defaultParallelism``); the session's own value is restored right
+    after ``start()``. A streaming query runs on a clone of the session
+    taken at start, so it keeps the width it saw. Results do not depend
+    on the width: every input is drained before the sink is read.
+    """
+    spark = stream.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    name = "drain_" + uuid.uuid4().hex[:8]
+    width = min(int(own), spark.sparkContext.defaultParallelism)
+    spark.conf.set(key, str(width))
+    try:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, own)
+    q.awaitTermination()
+    return spark.table(name)
 
 
 def stream_bundles_from_directory(

@@ -440,3 +440,37 @@ def test_theta_setops_result_sorts_without_exchange(spark):
     rows = df.collect()
     keys = [(r["source_a"], r["source_b"]) for r in rows]
     assert len(rows) == 6 and keys == sorted(keys)
+
+
+def test_theta_sketch_construction_fires_no_job(spark):
+    """``theta_sketch`` builds lazy frames: constructing the sketch runs
+    no Spark job (a caller that rereads ``kept`` checkpoints it)."""
+    from interop_spark.operators.theta import theta_items, theta_sketch
+
+    df = spark.range(100).select(
+        (col("id") % 3).cast("string").alias("g"),
+        col("id").cast("string").alias("k"),
+    )
+    items = theta_items(df, col("g"), col("k"))
+    sc = spark.sparkContext
+    group = "theta-sketch-construction"
+    sc.setJobGroup(group, group)
+    try:
+        kept, theta = theta_sketch(items, k=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+    assert kept.count() == 24 and theta.count() == 3
+
+
+def test_theta_setops_releases_its_checkpoint(spark):
+    """The query's items checkpoint only feeds its two construction-time
+    collects; it is released before the query returns, so the session
+    holds no more persisted RDDs than before."""
+    from interop_spark.queries.corpus_ext import q_theta_sketch_setops
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    df = q_theta_sketch_setops(spark, SF_DIR)
+    assert jsc.getPersistentRDDs().size() <= before
+    assert df.count() > 0

@@ -1099,13 +1099,13 @@ def test_minhash_max_band_docs_drops_hot_cluster_only(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    uncapped = minhash_candidate_pairs(df, "doc_id", "text", spread=False)
+    uncapped = minhash_candidate_pairs(df, "doc_id", "text")
     got_all = {(r.doc_a, r.doc_b) for r in uncapped.collect()}
     assert (100, 101) in got_all
     assert sum(1 for a, b in got_all if a < 100 and b < 100) == 45  # 10C2
 
     capped = minhash_candidate_pairs(
-        df, "doc_id", "text", spread=False, max_band_docs=4
+        df, "doc_id", "text", max_band_docs=4
     )
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert (100, 101) in got  # 2-doc bands survive the cap
@@ -1561,3 +1561,20 @@ def test_pq_train_codebooks_equal_two_level_aggregate(spark, sf_dir):
 
     got = pq_train(e, m_subspaces=M, k=K, iters=ITERS, dim=DIM)
     assert got == ref
+
+
+def test_no_operator_repartitions_its_input():
+    """Scan width is decided by ``io.load_spread``, or by a query's
+    explicit repartition before a checkpoint; no operator module calls
+    ``.repartition(``."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "interop_spark" / "operators"
+    hits = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(ops.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "repartition"
+    ]
+    assert not hits, hits

@@ -625,8 +625,7 @@ def test_containment_flags_embedded_subset(spark):
         [(1, long_text), (2, short_text)], ["doc_id", "text"]
     )
     rows = containment_verified_pairs(
-        docs, "doc_id", "text", k=12, bands=4, rows=3, shingle_n=3,
-        spread=False,
+        docs, "doc_id", "text", k=12, bands=4, rows=3, shingle_n=3
     ).collect()
     assert len(rows) == 1
     r = rows[0]

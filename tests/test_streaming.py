@@ -960,3 +960,55 @@ def test_stream_rank_sketch_merge_multiple_batches(spark, sf_dir):
         (r.kind, r.level, r.v, r.cnt) for r in df.collect()
     )
     assert as_ms(sk) == as_ms(one_pass)
+
+
+def test_drain_runs_state_at_default_parallelism(spark, sf_dir):
+    """``drain`` starts a stateful stream at min(session width,
+    defaultParallelism) state partitions and leaves the session's own
+    ``spark.sql.shuffle.partitions`` as it found it (a plain session's
+    200 made every micro-batch run 200 state-store tasks)."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from interop_spark.queries.temporal_q import q_stream_windowed_counts
+
+    class _Widths(StreamingQueryListener):
+        def __init__(self):
+            self.widths = {}
+            self.ended = set()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            self.widths.setdefault(p.id, set()).update(
+                op.numShufflePartitions for op in p.stateOperators
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.ended.add(event.id)
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    listener = _Widths()
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set(key, "200")
+        rows = q_stream_windowed_counts(spark, sf_dir).collect()
+        assert spark.conf.get(key) == "200"
+        deadline = time.time() + 30
+        while not set(listener.widths) & listener.ended:
+            assert time.time() < deadline, "no progress event arrived"
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, old)
+    done = set(listener.widths) & listener.ended
+    widths = set().union(*(listener.widths[i] for i in done))
+    assert widths == {min(200, spark.sparkContext.defaultParallelism)}
+    assert rows
