@@ -96,7 +96,7 @@ def bulk_table_write(
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=min(3, len(targets))) as pool:
-        list(pool.map(inheritable_thread_target(_write), targets))
+        list(pool.map(inheritable_thread_target(spark)(_write), targets))
 
 
 def save_as_table(df: DataFrame, full_name: str, mode: str = "overwrite") -> None:

@@ -1,6 +1,7 @@
 """Numpy kernels shared by the Arrow-vectorized scorers (the
-``pandas_udf`` bodies in ``similarity`` and ``pq``), and
-``forget_zip_finders``, which every engine Python body calls first.
+``pandas_udf`` and ``mapInPandas`` bodies in ``similarity`` and ``pq``,
+and the driver-side IVF probe), and ``forget_zip_finders``, which every
+engine Python body calls first.
 
 Each scorer is pinned bit-identical to the interpreted Spark fold it
 replaces, so every kernel here reproduces that fold's IEEE-754
@@ -103,3 +104,63 @@ def stack(vals: list, rows: list[int], dim: int) -> np.ndarray:
     return np.asarray(
         [np.asarray(vals[i], dtype=np.float64) for i in rows]
     ).reshape(len(rows), dim)
+
+
+def centroid_cosines(
+    X: np.ndarray, C: np.ndarray, cn: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Round-9 cosine of every row of ``X`` against every centroid row of
+    ``C`` (``cn`` holds the centroid norms), shaped ``(len(C), len(X))``,
+    and the row norms of ``X``: the ``cosine_sim_given_norms`` fold's
+    sequence (left-to-right dot and norms, ``max(vn*cn, 1e-12)``
+    denominator, Spark's round-9)."""
+    vn = np.sqrt(sumsq_lr(X))
+    sims = [
+        dot_lr(X, C[c]) / np.maximum(vn * cn[c], 1e-12)
+        for c in range(C.shape[0])
+    ]
+    S = np.stack(sims) if sims else np.empty((0, X.shape[0]))
+    return round_spark(S, 9), vn
+
+
+def assign_nearest(
+    X: np.ndarray, C: np.ndarray, cn: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Position in ``C`` of each row's max-cosine centroid, with the
+    rounded cosines and row norms of ``centroid_cosines``. ``C`` is in
+    centroid-id order; ties go to the LAST (largest-id) centroid and a
+    NaN similarity counts as +inf, as in the ``nearest_centroid`` fold,
+    where Spark orders NaN above every value and ``NaN >= NaN`` holds."""
+    Sr, vn = centroid_cosines(X, C, cn)
+    S2 = np.where(np.isnan(Sr), np.inf, Sr)
+    best = (S2.shape[0] - 1) - np.argmax(S2[::-1], axis=0)
+    return best, Sr, vn
+
+
+def pq_codes(X: np.ndarray, codebooks: list[np.ndarray]) -> np.ndarray:
+    """The ``(len(X), M)`` int32 PQ codes of the rows of ``X``: per
+    subspace, the first codeword with the least round-9 squared L2
+    distance (``sumsq_lr`` of the difference, the ``l2sq`` fold's
+    sequence). A NaN distance never wins; a row whose distances are all
+    NaN takes code 0, the fold's initial code."""
+    sub_dim = codebooks[0].shape[1]
+    codes = np.empty((X.shape[0], len(codebooks)), dtype=np.int32)
+    for m, cb_m in enumerate(codebooks):
+        Xm = X[:, m * sub_dim : (m + 1) * sub_dim]
+        D = round_spark(np.stack([sumsq_lr(Xm - cw) for cw in cb_m]), 9)
+        D[np.isnan(D)] = np.inf
+        codes[:, m] = np.argmin(D, axis=0)
+    return codes
+
+
+def adc_sum(
+    tables: np.ndarray, which: np.ndarray, codes: np.ndarray
+) -> np.ndarray:
+    """Round-9 asymmetric distance of each code row against its ADC
+    table ``tables[which[i]]`` (``tables`` is ``(T, M, k)``): the M
+    looked-up entries summed left to right from 0.0, the ADC fold's
+    sequence."""
+    acc = np.zeros(codes.shape[0])
+    for m in range(codes.shape[1]):
+        acc = acc + tables[which, m, codes[:, m]]
+    return round_spark(acc, 9)

@@ -24,6 +24,10 @@ Spark-first shapes:
   DRIVER-side (M·k·(d/M) = d·k multiplies, microseconds), embeds it as
   a literal, and scores every encoded row with M ``element_at`` lookups
   — a pure projection followed by TakeOrderedAndProject for top-k.
+- **IVF-PQ search** decides the probed cells on the driver and scores
+  the corpus in ONE ``mapInPandas`` pass (assign cell → keep probed
+  rows → encode → ADC) followed by TakeOrderedAndProject: no probe
+  join, no materialized assignment or codes between the steps.
 
 ``pq_encode``/``pq_adc_topk`` are driver-oracle queries
 (``queries/pipeline_ext.py``); pytest additionally pins exactness of the
@@ -37,13 +41,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from interop_spark.operators.kernels import (
+    adc_sum,
+    assign_nearest,
     forget_zip_finders,
-    round_spark,
+    pq_codes,
     stack,
     sumsq_lr,
     valid_rows,
 )
-from interop_spark.operators.similarity import as_double
+from interop_spark.operators.similarity import (
+    as_double,
+    collect_centroids,
+    probe_cells,
+)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -182,25 +192,18 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
     executor cost; numpy does the same arithmetic on whole batches).
 
     Bit-exactness contract (pinned by
-    ``test_pq_codes_udf_bitexact_vs_fold``):
-
-    - the squared-L2 distance is ``kernels.sumsq_lr`` of the
-      difference — the identical IEEE-754 double operation sequence as
-      the ``l2sq`` fold, so the unrounded distances are bit-identical;
-    - round-9 is ``kernels.round_spark`` (Spark's ``Round``);
-    - ``argmin`` takes the FIRST minimum — the fold's strict ``<`` keeps
-      the lowest code id on rounded ties;
-    - NULL/NaN distances never win (fold: NULL/NaN comparisons are
-      false): NaNs are masked to +inf, an all-invalid row yields the
-      fold's init code 0;
-    - a NULL or wrong-dimension vector yields NULL codes (callers mask
-      the same way ``pq_encode`` always has)."""
+    ``test_pq_codes_udf_bitexact_vs_fold``): the codes are
+    ``kernels.pq_codes`` — ``sumsq_lr`` of the difference (the ``l2sq``
+    fold's IEEE-754 sequence), ``round_spark`` round-9, the FIRST
+    minimum (the fold's strict ``<``), NaN distances never winning and
+    an all-NaN row taking the fold's initial code 0. A NULL or
+    wrong-dimension vector yields NULL codes (callers mask the same way
+    ``pq_encode`` always has)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     cbs = [np.asarray(cb_m, dtype=np.float64) for cb_m in codebooks]
-    sub_dim = cbs[0].shape[1]
-    dim = sub_dim * len(cbs)
+    dim = cbs[0].shape[1] * len(cbs)
 
     @pandas_udf("array<int>")
     def _codes(s):
@@ -210,13 +213,7 @@ def pq_codes_udf(codebooks: list[list[list[float]]]):
         vals = list(s)
         out = [None] * len(vals)
         rows = valid_rows(vals, dim)
-        X = stack(vals, rows, dim)
-        codes = np.empty((len(rows), len(cbs)), dtype=np.int32)
-        for m, cb_m in enumerate(cbs):
-            Xm = X[:, m * sub_dim : (m + 1) * sub_dim]
-            D = round_spark(np.stack([sumsq_lr(Xm - cw) for cw in cb_m]), 9)
-            D[np.isnan(D)] = np.inf
-            codes[:, m] = np.argmin(D, axis=0)
+        codes = pq_codes(stack(vals, rows, dim), cbs)
         for row_i, i in enumerate(rows):
             out[i] = codes[row_i]
         return pd.Series(out)
@@ -281,6 +278,24 @@ def pq_encode(
     )
 
 
+def _adc_table(
+    query: list[float], codebooks: list[list[list[float]]]
+) -> list[list[float]]:
+    """The M×k ADC table ``table[m][c] = ||q_m - codebook[m][c]||²``,
+    computed on the driver (d·k multiplies)."""
+    sub_dim = len(codebooks[0][0])
+    return [
+        [
+            sum(
+                (query[m * sub_dim + j] - cw[j]) ** 2
+                for j in range(sub_dim)
+            )
+            for cw in cb_m
+        ]
+        for m, cb_m in enumerate(codebooks)
+    ]
+
+
 def pq_adc_topk(
     encoded: DataFrame,
     query: list[float],
@@ -294,18 +309,7 @@ def pq_adc_topk(
     (d·k multiplies) and embedded as a literal. Returns the k rows with
     smallest approximate squared L2 distance (``adc_dist``) —
     projection + TakeOrderedAndProject, no shuffle."""
-    sub_dim = len(codebooks[0][0])
-    table = [
-        [
-            sum(
-                (query[m * sub_dim + j] - cw[j]) ** 2
-                for j in range(sub_dim)
-            )
-            for cw in cb_m
-        ]
-        for m, cb_m in enumerate(codebooks)
-    ]
-    tbl = _table_literal(table)
+    tbl = _table_literal(_adc_table(query, codebooks))
     dist = F.round(
         F.aggregate(
             F.zip_with(
@@ -325,6 +329,88 @@ def pq_adc_topk(
     )
 
 
+def _ivfpq_scan(
+    df: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    probe: list[int],
+    codebooks: list[list[list[float]]],
+    table_of,
+    id_col: str,
+    vec_col: str,
+    residual: bool = False,
+) -> DataFrame:
+    """The IVF-PQ scoring pass: ONE ``mapInPandas`` over ``(id, vec)``
+    that assigns each vector its cell (``kernels.assign_nearest``, as
+    ``ivf_assign``), keeps the rows in the ``probe`` cells, PQ-encodes
+    them (``kernels.pq_codes``, as ``pq_encode``; of the residual
+    ``x − centroid(cell)`` when ``residual``) and scores them against
+    their cell's ADC table ``table_of(cell)`` (``kernels.adc_sum``, as
+    ``pq_adc_topk``'s round-9 fold). Yields ``(id, cell, adc_dist)``.
+
+    A NULL or wrong-dimension vector has no cell and is dropped, as the
+    probe join dropped its NULL cell. A row whose dimension fits the
+    centroids but not the codebooks scores NULL, as its NULL codes did;
+    a NaN distance stays NaN (an Arrow-backed column, so the pandas→Arrow
+    conversion does not turn it into NULL)."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    karr = np.asarray([k for k, _ in cents], dtype=np.int64)
+    C = np.asarray([v for _, v in cents], dtype=np.float64)
+    dim = C.shape[1] if len(cents) else -1
+    cn = np.sqrt(sumsq_lr(C)) if len(cents) else None
+    cbs = [np.asarray(cb_m, dtype=np.float64) for cb_m in codebooks]
+    codes_fit = dim == cbs[0].shape[1] * len(cbs)
+    # positions (into cents) of the probed cells, ascending, and one
+    # (M, k) ADC table per probed cell
+    probe_pos = np.flatnonzero(np.isin(karr, probe))
+    T = np.asarray(
+        [table_of(int(karr[p])) for p in probe_pos], dtype=np.float64
+    ).reshape(len(probe_pos), len(cbs), len(codebooks[0]))
+    schema = StructType(
+        [
+            df.schema[id_col],
+            StructField("cell", LongType()),
+            StructField("adc_dist", DoubleType()),
+        ]
+    )
+
+    def _scan(batches):
+        forget_zip_finders()
+        import pandas as pd
+        import pyarrow as pa
+
+        for pdf in batches:
+            vals = list(pdf[vec_col])
+            rows = valid_rows(vals, dim) if len(probe_pos) else []
+            if not rows:
+                continue
+            X = stack(vals, rows, dim)
+            best = assign_nearest(X, C, cn)[0]
+            hit = np.isin(best, probe_pos)
+            X, best = X[hit], best[hit]
+            if residual:
+                X = X - C[best]
+            if codes_fit:
+                which = np.searchsorted(probe_pos, best)
+                dist = pa.array(adc_sum(T, which, pq_codes(X, cbs)))
+            else:
+                dist = pa.nulls(len(best), pa.float64())
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col]
+                    .iloc[np.asarray(rows)[hit]]
+                    .reset_index(drop=True),
+                    "cell": karr[best],
+                    "adc_dist": pd.Series(
+                        dist, dtype=pd.ArrowDtype(pa.float64())
+                    ),
+                }
+            )
+
+    return df.select(id_col, vec_col).mapInPandas(_scan, schema)
+
+
 def ivfpq_search(
     df: DataFrame,
     centroids: DataFrame,
@@ -339,36 +425,31 @@ def ivfpq_search(
     coarse IVF cells hold PQ codes, and a query ADC-scores only the
     rows in its ``nprobe`` nearest cells (Jégou et al. 2011 §V).
 
-    Plan shape end-to-end: ``ivf_assign`` (one-row broadcast centroid
-    array, no vector-side Exchange) → ``pq_encode`` projection carrying
-    the cell through → broadcast one-row probe join filtering to the
-    query's cells → literal-table ADC projection →
-    TakeOrderedAndProject. Zero shuffles on the corpus side; on a
-    cluster the encoded (cell, codes) table is the written index and a
-    search touches ~nprobe/C of it via cell-partition pruning."""
-    from interop_spark.operators.similarity import (
-        centroid_array,
-        ivf_assign,
-        l2_norm,
-        query_cells,
-        query_vector_literal,
-    )
-
-    assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
-    encoded = pq_encode(
-        assigned, codebooks, id_col=id_col, vec_col=vec_col, keep=("cell",)
-    )
-    qv = query_vector_literal(query)
-    qrow = centroid_array(centroids).select(
-        query_cells(
-            qv, col("_cents"), l2_norm(as_double(qv)), nprobe
-        ).alias("_qcells")
-    )
-    probed = encoded.join(
-        F.broadcast(qrow), F.array_contains(col("_qcells"), col("cell"))
-    )
-    return pq_adc_topk(
-        probed, query, codebooks, k=k, id_col=id_col, keep=("cell",)
+    The C-row centroid table is collected once (``collect_centroids``);
+    the probed cells (``probe_cells``, the driver twin of
+    ``query_cells``) and the ADC table are decided on the driver. The
+    corpus is then scored in one ``mapInPandas`` pass
+    (``_ivfpq_scan``: assign → keep probed rows → encode → ADC) and
+    TakeOrderedAndProject keeps the top k by (adc_dist, id): zero
+    shuffles and no broadcast on the corpus side. Returns ``(id, cell,
+    adc_dist)``, equal to the assign → encode → probe join → ADC chain
+    it replaced (pinned in ``tests/test_operators.py``). On a cluster
+    the encoded (cell, codes) table is the written index and a search
+    touches ~nprobe/C of it via cell-partition pruning."""
+    cents = collect_centroids(centroids)
+    table = _adc_table(query, codebooks)
+    return (
+        _ivfpq_scan(
+            df,
+            cents,
+            probe_cells(query, cents, nprobe),
+            codebooks,
+            lambda cell: table,
+            id_col,
+            vec_col,
+        )
+        .orderBy(col("adc_dist").asc(), col(id_col).asc())
+        .limit(k)
     )
 
 
@@ -391,86 +472,59 @@ def ivfpq_residual_search(
     the within-cell displacement, and ADC uses a PER-CELL distance
     table built from the query's residual against each probed cell.
 
-    Plan shape mirrors ``ivfpq_search`` (broadcast assignment →
-    zero-shuffle residual projection + encode → broadcast probe join →
-    literal-table ADC → TakeOrderedAndProject) with one addition: the
-    ADC table is a cell-keyed CASE chain over the (bounded, broadcast-
-    able by contract) centroid set, so rows in different probed cells
-    score against their own tables in the same projection."""
-    from interop_spark.operators.similarity import (
-        as_double,
-        centroid_array,
-        ivf_assign,
-        l2_norm,
-        query_cells,
-        query_vector_literal,
-    )
+    The centroid table is read once (``collect_centroids``). Training
+    reads the residuals of the vectors that have a cell: the
+    ``nearest_centroid_udf`` assignment and a literal cell → centroid
+    map, with no join. The probed cells come from ``probe_cells`` and
+    each probed cell's table is built on the driver; the search is
+    ``ivfpq_search``'s single ``mapInPandas`` pass over residuals,
+    then TakeOrderedAndProject. Raises ``ValueError`` on an empty
+    centroid table."""
+    from interop_spark.operators.similarity import nearest_centroid_udf
 
-    assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
-    cent = centroids.select(
-        col("centroid_id").cast("bigint").alias("cell"),
-        col("centroid").alias("_cvec"),
+    cents = collect_centroids(centroids)
+    if not cents:
+        raise ValueError("ivfpq_residual_search needs at least one centroid")
+    cent_vec = F.map_from_arrays(
+        F.expr("array(" + ",".join(f"{c}L" for c, _ in cents) + ")"),
+        _table_literal([v for _, v in cents]),
     )
-    res = assigned.join(F.broadcast(cent), "cell").select(
-        col(id_col),
-        col("cell"),
-        F.zip_with(
-            as_double(col(vec_col)),
-            as_double(col("_cvec")),
-            lambda x, y: x - y,
-        ).alias("_res"),
+    vec = col(vec_col)
+    # a vector gets a cell exactly when it is non-NULL with the
+    # centroids' dimension: filter on that, never on the UDF's output
+    res = (
+        df.where(vec.isNotNull() & (F.size(vec) == len(cents[0][1])))
+        .select(col(id_col), vec, nearest_centroid_udf(cents)(vec).alias("cell"))
+        .select(
+            col(id_col),
+            F.zip_with(
+                as_double(vec),
+                F.element_at(cent_vec, col("cell")),
+                lambda x, y: x - y,
+            ).alias("_res"),
+        )
     )
     cbs = pq_train(
         res, m_subspaces, k_codes, iters, id_col=id_col, vec_col="_res",
         dim=dim,
     )
-    encoded = pq_encode(res, cbs, id_col=id_col, vec_col="_res", keep=("cell",))
-    qv = query_vector_literal(query)
-    qrow = centroid_array(centroids).select(
-        query_cells(
-            qv, col("_cents"), l2_norm(as_double(qv)), nprobe
-        ).alias("_qcells")
-    )
-    probed = encoded.join(
-        F.broadcast(qrow), F.array_contains(col("_qcells"), col("cell"))
-    )
-    # per-cell ADC tables, driver-side (C·d·k multiplies — the same
-    # bounded-centroid contract as the codebook literals)
-    cent_vecs = {
-        int(r[0]): [float(x) for x in r[1]]
-        for r in centroids.select("centroid_id", "centroid").collect()
-    }
-    sub = len(cbs[0][0])
+    cent_vecs = dict(cents)
 
     def _table(cell: int) -> list[list[float]]:
         qres = [query[i] - cent_vecs[cell][i] for i in range(len(query))]
-        return [
-            [
-                sum(
-                    (qres[m * sub + j] - cw[j]) ** 2 for j in range(sub)
-                )
-                for cw in cb_m
-            ]
-            for m, cb_m in enumerate(cbs)
-        ]
+        return _adc_table(qres, cbs)
 
-    tbl = None
-    for cell in sorted(cent_vecs):
-        lit = _table_literal(_table(cell))
-        cond = col("cell") == F.lit(cell)
-        tbl = F.when(cond, lit) if tbl is None else tbl.when(cond, lit)
-    dist = F.round(
-        F.aggregate(
-            F.zip_with(
-                col("codes"), tbl, lambda c, row: F.element_at(row, c + 1)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
-    )
     return (
-        probed.select(col(id_col), col("cell"), dist.alias("adc_dist"))
+        _ivfpq_scan(
+            df,
+            cents,
+            probe_cells(query, cents, nprobe),
+            cbs,
+            _table,
+            id_col,
+            vec_col,
+            residual=True,
+        )
         .orderBy(col("adc_dist").asc(), col(id_col).asc())
         .limit(k)
     )

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from interop_spark.operators.kernels import (
+    assign_nearest,
+    centroid_cosines,
     dot_lr,
     forget_zip_finders,
     round_spark,
@@ -406,20 +408,13 @@ def nearest_centroid_udf(
     ``centroid_array`` builds.
 
     Bit-exactness contract (pinned by
-    ``test_nearest_centroid_udf_bitexact_vs_fold``):
-
-    - dot product and both norms are the ``kernels`` left-to-right
-      accumulators (identical IEEE-754 sequence to ``dot``/``l2_norm``),
-      centroid norms precomputed once exactly as the fold's
-      ``centroid_array`` does;
-    - the similarity is ``kernels.round_spark`` round-9 before
-      comparison;
-    - ties go to the LARGEST centroid id (the fold's ``>=`` over the
-      id-ascending array); NaN similarities map to +inf BEFORE the
-      argmax — Spark's NaN ordering treats NaN as greater than every
-      value and ``NaN >= NaN`` as true, so NaN behaves exactly like
-      +inf with last-wins ties;
-    - a NULL vector (or empty centroid list) yields a NULL cell.
+    ``test_nearest_centroid_udf_bitexact_vs_fold``): the argmax is
+    ``kernels.assign_nearest`` — ``kernels`` left-to-right dot and norms
+    (centroid norms precomputed once, as ``centroid_array`` does),
+    ``round_spark`` round-9 before comparison, ties to the LARGEST
+    centroid id and NaN similarities as +inf, which is Spark's NaN
+    ordering under the fold's ``>=``. A NULL vector (or empty centroid
+    list) yields a NULL cell.
 
     ``with_sim=True`` (semdedup's scoring pass) returns
     ``struct<cell:bigint, ccos9:double, vn:double>`` — the winning
@@ -446,21 +441,7 @@ def nearest_centroid_udf(
         out = [None] * len(vals)
         rows = valid_rows(vals, dim)
         if rows:
-            X = stack(vals, rows, dim)
-            vn = np.sqrt(sumsq_lr(X))
-            Sr = round_spark(
-                np.stack(
-                    [
-                        dot_lr(X, C[c]) / np.maximum(vn * cn[c], 1e-12)
-                        for c in range(C.shape[0])
-                    ]
-                ),
-                9,
-            )
-            S2 = Sr.copy()
-            S2[np.isnan(S2)] = np.inf
-            # ties (and NaN→inf runs) to the LARGEST id: last argmax
-            best = (S2.shape[0] - 1) - np.argmax(S2[::-1], axis=0)
+            best, Sr, vn = assign_nearest(stack(vals, rows, dim), C, cn)
             cells = karr[best]
             if with_sim:
                 # the winner's rounded sim may legitimately be NaN (a
@@ -488,6 +469,52 @@ def nearest_centroid_udf(
             _cell, "struct<cell:bigint,ccos9:double,vn:double>"
         )
     return pandas_udf(_cell, "bigint")
+
+
+def collect_centroids(
+    centroids: DataFrame,
+    centroid_id: str = "centroid_id",
+    centroid_vec: str = "centroid",
+) -> list[tuple[int, list[float]]]:
+    """The BOUNDED centroid table (C rows by contract: the coarse
+    quantizer is always small) as ``[(id, vector), ...]`` sorted by id
+    ascending, the order ``centroid_array`` builds. One collect job."""
+    return sorted(
+        (
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in centroids.select(
+                F.col(centroid_id).cast("bigint"), F.col(centroid_vec)
+            ).collect()
+        ),
+        key=lambda kv: kv[0],
+    )
+
+
+def probe_cells(
+    query: list[float], cents: list[tuple[int, list[float]]], nprobe: int
+) -> list[int]:
+    """The query's ``nprobe`` nearest centroid ids, decided on the
+    driver: the numpy twin of ``query_cells`` over the collected
+    ``cents`` (``collect_centroids``). Same rounded similarity
+    (``kernels.centroid_cosines``) and ranking (sim DESC, id DESC); a
+    NaN similarity ranks as +inf, Spark's NaN ordering. A query whose
+    dimension differs from the centroids' scores NULL against every
+    centroid, as the fold's padded ``zip_with`` does, and so probes the
+    ``nprobe`` largest ids."""
+    import numpy as np
+
+    if nprobe < 0:
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
+    ids = [k for k, _ in cents]
+    if not cents or len(query) != len(cents[0][1]):
+        return sorted(ids, reverse=True)[:nprobe]
+    C = np.asarray([v for _, v in cents], dtype=np.float64)
+    Sr, _ = centroid_cosines(
+        np.asarray([query], dtype=np.float64), C, np.sqrt(sumsq_lr(C))
+    )
+    sims = np.where(np.isnan(Sr[:, 0]), np.inf, Sr[:, 0])
+    ranked = sorted(zip(sims.tolist(), ids), reverse=True)
+    return [k for _, k in ranked[:nprobe]]
 
 
 def centroid_array(
@@ -603,17 +630,9 @@ def ivf_assign(
     side, and the per-row work is numpy over whole Arrow batches.
 
     Construction is not lazy: it fires one bounded
-    ``centroids.collect()`` job (C rows) and freezes that centroid
-    snapshot into the returned plan."""
-    cents = sorted(
-        (
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in centroids.select(
-                F.col(centroid_id).cast("bigint"), F.col(centroid_vec)
-            ).collect()
-        ),
-        key=lambda kv: kv[0],
-    )
+    ``centroids.collect()`` job (C rows, ``collect_centroids``) and
+    freezes that centroid snapshot into the returned plan."""
+    cents = collect_centroids(centroids, centroid_id, centroid_vec)
     cell = nearest_centroid_udf(cents)(F.col(vec_col))
     return df.select(id_col, vec_col, cell.alias("cell"))
 

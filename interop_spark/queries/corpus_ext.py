@@ -157,9 +157,10 @@ def q_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import inheritable_thread_target
 
     try:
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_k = pool.submit(inheritable_thread_target(kept_sel.collect))
-            f_a = pool.submit(inheritable_thread_target(audit_df.collect))
+            f_k = pool.submit(inherit(kept_sel.collect))
+            f_a = pool.submit(inherit(audit_df.collect))
             krows, audit = f_k.result(), f_a.result()
     finally:
         # a checkpointed frame has no release call of its own: unpersist

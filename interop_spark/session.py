@@ -52,6 +52,15 @@ ENGINE_CONF: dict[str, str] = {
     # calls. PySpark reads the switch once per process, from the first
     # active session.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # InferFiltersFromGenerate adds `size(arr) > 0` under every explode
+    # of a computed array; the filter is pushed below the projection
+    # that computes the array, so the whole input (the FHIR bundle
+    # parse and extraction, a pandas UDF's codes in PQ training) is
+    # evaluated twice: once in the Filter, once in the Project. explode
+    # drops empty and NULL arrays by itself, so the rule adds nothing.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
     # local[N] puts driver + all executor threads + every localCheckpoint
     # block in ONE JVM; Spark's 1 GiB default heap on a 32-core/128 GiB
     # box OOMs under any real working set (round-4 bench died exactly

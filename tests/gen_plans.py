@@ -33,8 +33,8 @@ COMMENT = {
  "kmeans_fit": "Per-iteration: broadcast one-row centroid array, per-row argmax assignment (localCheckpoint truncates lineage), then ONE (cell, dim)-keyed exchange carrying map-side-combined partial sums. The executed plan shows the final iteration; earlier iterations are the Scan ExistingRDD checkpoints.",
  "substring_dup_runs": "Strided window hashes are a zero-shuffle explode projection; the hash-frequency guard and the cross-doc candidate join are equi-joins on the md5 window hash (uniform key, no skew); the run merge windows over fine-grained (doc_a, doc_b, diagonal) keys. At 100 TB: shuffle carries (id, pos, 32-char hash) rows, ~len/stride per doc.",
  "winnow_dup_pairs": "Winnowing selection (array_min over (hash,-pos) struct slices) is doc-local -- zero shuffle until the fingerprint equi-join; fingerprint density ~2/(w+1) of k-gram count bounds the join input. Same frequency-capped join shape as substring_dup_runs.",
- "ivfpq_search": "IVF-PQ composed index: one-row broadcast centroid array for cell assignment (no vector-side Exchange), PQ encode as a literal-codebook argmin projection, broadcast one-row probe join filtering to the query's nprobe cells, ADC as literal-table lookups, TakeOrderedAndProject. Zero corpus-side shuffles end-to-end; at 100 TB the (cell, codes) table is the written index and cell pruning bounds each search.",
- "ivfpq_residual_search": "Residual IVF-PQ (Jegou V.B): same zero-shuffle shape as ivfpq_search plus a broadcast cell-centroid join for the residual projection; the ADC table is a cell-keyed CASE chain over per-cell query-residual tables, still one projection.",
+ "ivfpq_search": "IVF-PQ composed index: probe cells and the ADC table decided on the driver from one centroid collect; one MapInPandas scan assigns each vector its cell, keeps the probed rows, PQ-encodes them and sums their ADC lookups, then TakeOrderedAndProject. Zero corpus-side shuffles and no broadcast; at 100 TB the (cell, codes) table is the written index and cell pruning bounds each search.",
+ "ivfpq_residual_search": "Residual IVF-PQ (Jegou V.B): training reads residuals through the Arrow cell assignment and a literal cell-to-centroid map (no join); the search is ivfpq_search's single MapInPandas scan over residuals with one ADC table per probed cell.",
  "enrich_events": "Stream-static enrichment's batch twin: the customer dim BROADCASTS (explicit broadcast()), the event side never shuffles -- per micro-batch re-execution of the static side ships once per executor.",
  "semdedup_keep": "SemDeDup cluster-then-prune: broadcast IVF cell assignment (no vector-side Exchange), broadcast centroid join for the scoring pass, then the within-cell pair join -- quadratic IN THE CELL by design (cluster count must scale with the corpus), keyed by the cell id so AQE can split hot cells.",
  "quality_classifier_filter": "Classifier-based filtering: weights embed as a literal bucket array and the hashed-bag-of-words logit is ONE fold per row -- zero exchanges, scan-bandwidth bound at any scale.",

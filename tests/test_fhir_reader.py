@@ -250,6 +250,49 @@ def test_bulk_table_write(spark, adt_entry, tmp_path):
     assert n == 4
 
 
+def test_bulk_table_write_jobs_carry_session_tags(spark):
+    """The writer pool's threads inherit the session: no "Tags will not
+    be inherited" warning, and every write job carries a tag added with
+    ``spark.addTag`` (read back from Spark's status store)."""
+    import warnings
+
+    from interop_spark.fhir.write import bulk_table_write
+
+    df = spark.createDataFrame(
+        [("u1", 1, 2), ("u2", 3, 4)],
+        "bundleUUID string, Patient int, Condition int",
+    )
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_ids():
+        jobs = sc.statusStore().jobsList(None)
+        return [jobs.apply(i) for i in range(jobs.size())]
+
+    sc.listenerBus().waitUntilEmpty(30_000)
+    before = {j.jobId() for j in job_ids()}
+    spark.addTag("bulk-write-probe")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            bulk_table_write(
+                df, "tag_probe", columns=["Patient", "Condition"]
+            )
+    finally:
+        spark.removeTag("bulk-write-probe")
+    assert not [
+        w for w in caught if "Tags will not be inherited" in str(w.message)
+    ]
+    sc.listenerBus().waitUntilEmpty(30_000)
+    writes = [
+        j for j in job_ids()
+        if j.jobId() not in before and j.name().startswith("saveAsTable")
+    ]
+    assert len(writes) >= 2
+    for j in writes:
+        tags = j.jobTags().toString()
+        assert "-bulk-write-probe" in tags, (j.jobId(), tags)
+
+
 def test_shadow_fields_and_extensions_preserved(adt_entry):
     """FHIR `_field` shadow elements and `extension` arrays must survive
     ingestion (SURVEY.md §7 hard-part (c); data: ADT_A01 Patient)."""

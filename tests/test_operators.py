@@ -1578,3 +1578,303 @@ def test_no_operator_repartitions_its_input():
         if isinstance(node, ast.Attribute) and node.attr == "repartition"
     ]
     assert not hits, hits
+
+
+# ---------------------------------------------------------------------------
+# IVF-PQ search: driver-side probe and the one-pass scan against the Spark
+# chains they replaced (reference twins, kept here only)
+# ---------------------------------------------------------------------------
+
+
+def _ivfpq_search_chain(
+    df, centroids, codebooks, query, k=10, nprobe=1,
+    id_col="vec_id", vec_col="embedding",
+):
+    """REFERENCE TWIN of ``pq.ivfpq_search``: ``ivf_assign`` →
+    ``pq_encode`` carrying the cell → broadcast one-row probe join on
+    Spark's ``query_cells`` → literal-table ADC top-k."""
+    from interop_spark.operators.pq import pq_adc_topk, pq_encode
+    from interop_spark.operators.similarity import (
+        as_double,
+        centroid_array,
+        ivf_assign,
+        l2_norm,
+        query_cells,
+        query_vector_literal,
+    )
+
+    assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
+    encoded = pq_encode(
+        assigned, codebooks, id_col=id_col, vec_col=vec_col, keep=("cell",)
+    )
+    qv = query_vector_literal(query)
+    qrow = centroid_array(centroids).select(
+        query_cells(
+            qv, F.col("_cents"), l2_norm(as_double(qv)), nprobe
+        ).alias("_qcells")
+    )
+    probed = encoded.join(
+        F.broadcast(qrow), F.array_contains(F.col("_qcells"), F.col("cell"))
+    )
+    return pq_adc_topk(
+        probed, query, codebooks, k=k, id_col=id_col, keep=("cell",)
+    )
+
+
+def _ivfpq_residual_chain(
+    df, centroids, query, m_subspaces=4, k_codes=16, iters=1, k=10,
+    nprobe=1, id_col="vec_id", vec_col="embedding", dim=None,
+):
+    """REFERENCE TWIN of ``pq.ivfpq_residual_search``: broadcast-join
+    residuals, ``pq_encode``, broadcast probe join and a cell-keyed CASE
+    chain of per-cell ADC table literals."""
+    from interop_spark.operators.pq import (
+        _adc_table,
+        _table_literal,
+        pq_encode,
+        pq_train,
+    )
+    from interop_spark.operators.similarity import (
+        as_double,
+        centroid_array,
+        ivf_assign,
+        l2_norm,
+        query_cells,
+        query_vector_literal,
+    )
+
+    col = F.col
+    assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
+    cent = centroids.select(
+        col("centroid_id").cast("bigint").alias("cell"),
+        col("centroid").alias("_cvec"),
+    )
+    res = assigned.join(F.broadcast(cent), "cell").select(
+        col(id_col),
+        col("cell"),
+        F.zip_with(
+            as_double(col(vec_col)), as_double(col("_cvec")),
+            lambda x, y: x - y,
+        ).alias("_res"),
+    )
+    cbs = pq_train(
+        res, m_subspaces, k_codes, iters, id_col=id_col, vec_col="_res",
+        dim=dim,
+    )
+    encoded = pq_encode(res, cbs, id_col=id_col, vec_col="_res", keep=("cell",))
+    qv = query_vector_literal(query)
+    qrow = centroid_array(centroids).select(
+        query_cells(
+            qv, col("_cents"), l2_norm(as_double(qv)), nprobe
+        ).alias("_qcells")
+    )
+    probed = encoded.join(
+        F.broadcast(qrow), F.array_contains(col("_qcells"), col("cell"))
+    )
+    cent_vecs = {
+        int(r[0]): [float(x) for x in r[1]]
+        for r in centroids.select("centroid_id", "centroid").collect()
+    }
+    tbl = None
+    for cell in sorted(cent_vecs):
+        qres = [query[i] - cent_vecs[cell][i] for i in range(len(query))]
+        lit = _table_literal(_adc_table(qres, cbs))
+        cond = col("cell") == F.lit(cell)
+        tbl = F.when(cond, lit) if tbl is None else tbl.when(cond, lit)
+    dist = F.round(
+        F.aggregate(
+            F.zip_with(
+                col("codes"), tbl, lambda c, row: F.element_at(row, c + 1)
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        9,
+    )
+    return (
+        probed.select(col(id_col), col("cell"), dist.alias("adc_dist"))
+        .orderBy(col("adc_dist").asc(), col(id_col).asc())
+        .limit(k)
+    )
+
+
+def _rows(df):
+    """Rows as tuples with NaN made comparable (NaN == NaN)."""
+    import math
+
+    return [
+        tuple(
+            "NaN" if isinstance(x, float) and math.isnan(x) else x
+            for x in r
+        )
+        for r in df.collect()
+    ]
+
+
+def _ivf_fixture(spark, sf, C=8):
+    from interop_spark.io import load
+
+    e = load(spark, f"/root/testdata/{sf}", "embeddings")
+    cent = e.where(F.col("vec_id") < C).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    return e, cent
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_probe_cells_equals_query_cells(spark, sf):
+    """The driver-side probe ranks cells exactly as Spark's
+    ``query_cells`` does: a sample of real queries, a zero query (every
+    similarity ties at 0.0), a query tied between two centroids with the
+    same vector, and a NaN-element query, at nprobe 1, 2 and C."""
+    from interop_spark.operators.similarity import (
+        centroid_array,
+        collect_centroids,
+        l2_norm,
+        probe_cells,
+        query_cells,
+    )
+
+    C = 8
+    e, cent = _ivf_fixture(spark, sf, C)
+    # a ninth centroid repeating centroid 3 ties every query on the two
+    dup = cent.unionByName(
+        cent.where(F.col("centroid_id") == 3).select(
+            F.lit(99).cast("long").alias("centroid_id"), "centroid"
+        )
+    )
+    sample = [
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in e.where(F.col("vec_id") % 37 == 5).collect()
+    ]
+    assert len(sample) >= 10
+    dim = len(sample[0][1])
+    queries = sample + [
+        (-1, [0.0] * dim),
+        (-2, [float("nan")] + sample[0][1][1:]),
+        (-3, [float(x) for x in cent.where(F.col("centroid_id") == 3)
+              .first().centroid]),
+    ]
+    qdf = spark.createDataFrame(queries, "qid long, q array<double>")
+    for centroids in (cent, dup):
+        n_all = centroids.count()
+        cents = collect_centroids(centroids)
+        nprobes = (1, 2, n_all)
+        got = {
+            r.qid: [list(r[f"p{n}"]) for n in nprobes]
+            for r in qdf.crossJoin(F.broadcast(centroid_array(centroids)))
+            .select(
+                "qid",
+                *[
+                    query_cells(
+                        F.col("q"), F.col("_cents"), l2_norm(F.col("q")), n
+                    ).alias(f"p{n}")
+                    for n in nprobes
+                ],
+            )
+            .collect()
+        }
+        for qid, q in queries:
+            want = [probe_cells(q, cents, n) for n in nprobes]
+            assert got[qid] == want, (qid, got[qid], want)
+    # the ties resolve to the larger id, the NaN query ranks by id alone
+    cents = collect_centroids(dup)
+    assert probe_cells(queries[-1][1], cents, 2) == [99, 3]
+    assert probe_cells(queries[-2][1], cents, 3) == [99, 7, 6]
+    assert probe_cells(queries[-3][1], cents, 3) == [99, 7, 6]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_ivfpq_search_one_pass_equals_chain(spark, sf):
+    """The one-pass ``ivfpq_search`` returns the assign → encode → probe
+    join → ADC chain's rows, in order, at nprobe 1, 2 and C, and with a
+    k larger than the probed row count."""
+    from interop_spark.operators.pq import ivfpq_search, pq_train
+
+    C = 8
+    e, cent = _ivf_fixture(spark, sf, C)
+    cbs = pq_train(e, m_subspaces=4, k=4, iters=1, dim=64)
+    for qid in (1, 77, 250):
+        q = [float(x) for x in e.where(F.col("vec_id") == qid).first().embedding]
+        for nprobe, k in ((1, 10), (2, 10), (C, 10), (1, 10_000)):
+            got = _rows(ivfpq_search(e, cent, cbs, q, k=k, nprobe=nprobe))
+            want = _rows(
+                _ivfpq_search_chain(e, cent, cbs, q, k=k, nprobe=nprobe)
+            )
+            assert got == want, (qid, nprobe, k)
+            assert len(got) == min(k, len(want))
+        # k past the probed rows: every probed row comes back
+        assert 0 < len(got) < e.count()
+
+
+def test_ivfpq_degenerate_vectors_behave_as_the_chain(spark, sf_dir):
+    """NULL, NaN-element and wrong-dimension corpus vectors, and a
+    NaN-element query, give the chains' rows in both IVF-PQ searches: a
+    NULL or wrong-dimension vector has no cell and is never returned, a
+    NaN-element vector joins the largest-id cell with a finite distance,
+    and a NaN query scores NaN everywhere."""
+    from interop_spark.operators.pq import (
+        ivfpq_residual_search,
+        ivfpq_search,
+        pq_train,
+    )
+
+    C = 4
+    e, cent = _ivf_fixture(spark, "sf0.001", C)
+    e = e.where(F.col("vec_id") < 120).select("vec_id", "embedding")
+    base = [
+        float(x) for x in e.where(F.col("vec_id") == 5).first().embedding
+    ]
+    bad = spark.createDataFrame(
+        [
+            (9001, None),
+            (9002, base[:10]),
+            (9003, [float("nan")] + base[1:]),
+            (9004, base[:20] + [float("nan")] + base[21:]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    corpus = e.unionByName(bad)
+    cbs = pq_train(e, m_subspaces=4, k=4, iters=1, dim=64)
+    q = [float(x) for x in e.where(F.col("vec_id") == 1).first().embedding]
+    q_nan = q[:3] + [float("nan")] + q[4:]
+    for query in (q, q_nan):
+        for nprobe in (1, C):
+            got = _rows(ivfpq_search(corpus, cent, cbs, query, k=500,
+                                     nprobe=nprobe))
+            want = _rows(_ivfpq_search_chain(corpus, cent, cbs, query,
+                                             k=500, nprobe=nprobe))
+            assert got == want, (nprobe, got[:3], want[:3])
+            ids = {r[0] for r in got}
+            assert not ids & {9001, 9002}
+            if nprobe == C:
+                assert {9003, 9004} <= ids
+            got = _rows(ivfpq_residual_search(
+                corpus, cent, query, m_subspaces=4, k_codes=4, iters=1,
+                k=500, nprobe=nprobe, dim=64,
+            ))
+            want = _rows(_ivfpq_residual_chain(
+                corpus, cent, query, m_subspaces=4, k_codes=4, iters=1,
+                k=500, nprobe=nprobe, dim=64,
+            ))
+            assert got == want, ("residual", nprobe, got[:3], want[:3])
+    nan_rows = _rows(ivfpq_search(corpus, cent, cbs, q_nan, k=5, nprobe=C))
+    assert [r[2] for r in nan_rows] == ["NaN"] * 5
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_ivfpq_residual_search_equals_chain(spark, sf):
+    """Residual IVF-PQ over the one-pass scan returns the broadcast-join
+    chain's rows at nprobe 1, 2 and C."""
+    from interop_spark.operators.pq import ivfpq_residual_search
+
+    C = 8
+    e, cent = _ivf_fixture(spark, sf, C)
+    q = [float(x) for x in e.where(F.col("vec_id") == 1).first().embedding]
+    for nprobe in (1, 2, C):
+        kw = dict(m_subspaces=4, k_codes=4, iters=1, k=10, nprobe=nprobe,
+                  dim=64)
+        assert _rows(ivfpq_residual_search(e, cent, q, **kw)) == _rows(
+            _ivfpq_residual_chain(e, cent, q, **kw)
+        ), nprobe

@@ -41,3 +41,11 @@ def test_live_session_captures_no_call_sites(spark):
         spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
         == "false"
     )
+
+
+def test_live_session_excludes_infer_filters_from_generate(spark):
+    # the inferred `size(arr) > 0` filter under an explode of a computed
+    # array makes Spark evaluate the array (a parse, a pandas UDF) twice
+    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    assert ENGINE_CONF["spark.sql.optimizer.excludedRules"] == rule
+    assert spark.conf.get("spark.sql.optimizer.excludedRules") == rule

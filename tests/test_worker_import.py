@@ -6,8 +6,9 @@ directory outside the repo gives its Python workers no way to import
 ``interop_spark/__init__.py`` registers the package with cloudpickle to
 be pickled by value, so every engine helper a UDF or mapInPandas closure
 calls ships inside the closure. This test runs each Arrow/mapInPandas
-path that calls such helpers in exactly that setting — one subprocess,
-fresh cwd, ``PYTHONPATH`` without the repo, ``local[2]`` — and compares
+path that calls such helpers (the IVF-PQ scan among them) in exactly
+that setting — one subprocess, fresh cwd, ``PYTHONPATH`` without the
+repo, ``local[2]`` — and compares
 each result with the module-level function or interpreted fold twin
 computed in the same script. Without the registration every path fails
 on the workers with ``ModuleNotFoundError: No module named
@@ -38,7 +39,9 @@ from interop_spark.operators.multimodal import (
     audio_stats, image_dims, parse_image_header, parse_mp4, parse_wav,
     video_meta,
 )
-from interop_spark.operators.pq import _argmin_code, pq_encode, pq_train, subvector
+from interop_spark.operators.pq import (
+    _argmin_code, ivfpq_search, pq_adc_topk, pq_encode, pq_train, subvector,
+)
 from interop_spark.operators.similarity import (
     _hyperplane, as_double, cosine_sim, cosine_sim_given_norms, l2_norm,
     lsh_bucket, lsh_bucket_udf, nearest_centroid, nearest_centroid_udf,
@@ -144,7 +147,20 @@ check(
     [tuple(r.ref_sim) if r.ref is not None else (None,) * 3 for r in rows],
 )
 
+# every cell probed: the one-pass IVF-PQ scan returns the valid rows'
+# ADC ranking, each with its fold-assigned cell
 q = [0.5, -1.0, 0.25, 2.0]
+cent_df = spark.createDataFrame(cents, "centroid_id long, centroid array<double>")
+cell_of = {r.vec_id: r.cell for r in vdf.select(
+    "vec_id", nearest_centroid(F.col("embedding"), cent_arr).alias("cell")
+).collect()}
+check(
+    "ivfpq_search",
+    [tuple(r) for r in ivfpq_search(vdf, cent_df, cbs, q, k=20, nprobe=3).collect()],
+    [(r.vec_id, cell_of[r.vec_id], r.adc_dist)
+     for r in pq_adc_topk(pq_encode(vdf.where(valid), cbs), q, cbs, k=20).collect()],
+)
+
 qv = as_double(query_vector_literal(q))
 rows = vdf.select(
     F.round(cosine_sim_given_norms(v, qv, l2_norm(v), l2_norm(qv)), 6).alias("r6"),
